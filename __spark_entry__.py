@@ -707,38 +707,70 @@ def _scalarize_sig(df: DataFrame, col: str) -> DataFrame:
     )
 
 
-def sketch_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ProbMinHash3a weighted signatures over documents (S4/S6)."""
+def _per_doc(
+    spark: SparkSession, sf_dir: str, udf, col: str, encode=None
+) -> DataFrame:
+    """The one shape of every per-document query: load ``documents`` ->
+    ``_ranged`` (output globally ordered by doc_id, no trailing orderBy) ->
+    ``doc_id`` plus ``udf(text) AS col`` -> ``encode(df, col)``, which turns
+    the UDF column into driver-hashable scalars."""
     import pyspark.sql.functions as F
 
-    from probminhash_spark.config import DedupConfig
-    from probminhash_spark.functions.sketch_udfs import make_sketch_udf
-
     _load(spark, sf_dir, "documents")
-    cfg = DedupConfig(
-        algo="probminhash3a", weighted=True, num_hashes=64, bands=16, rows=4
-    )
-    sketch = make_sketch_udf(cfg)
     out = _ranged(spark.table("documents")).select(
-        "doc_id", sketch(F.col("text")).alias("sig")
+        "doc_id", udf(F.col("text")).alias(col)
     )
-    return _scalarize_sig(out, "sig")
+    return encode(out, col) if encode else out
 
 
-def sketch_superminhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SuperMinHash signatures over documents (S10)."""
+# ``make_sketch_udf`` signature queries — 64 slots in 16 bands x 4 rows,
+# rows-only (sketch-valued): query name -> DedupConfig overrides
+_SIGNATURE_QUERIES = {
+    # ProbMinHash3a weighted signatures (S4/S6)
+    "sketch_signatures": dict(algo="probminhash3a", weighted=True),
+    # ProbMinHash3aSha (S6, ``probminhash3sha.rs:87-167``): sha512_256-
+    # digested item identity, the reference's stable-across-languages
+    # string-key regime
+    "sketch_signatures_sha": dict(algo="probminhash3a", weighted=True, hasher="sha"),
+    # SuperMinHash (S10)
+    "sketch_superminhash": dict(algo="superminhash"),
+    # SuperMinHash2 integer signatures (S13, ``superminhasher2.rs:203-279``)
+    "sketch_superminhash2": dict(algo="superminhash2"),
+    # ProbMinHash2 weighted signatures (S7/S8, ``probminhash2.rs``)
+    "sketch_probminhash2": dict(algo="probminhash2", weighted=True),
+    # reverse-optimal densification (S26, ``densminhash.rs:390-474``)
+    "sketch_revoptdens": dict(algo="revoptdens"),
+}
+
+
+def _signature_query(name: str) -> Callable[[SparkSession, str], DataFrame]:
+    """The ``_SIGNATURE_QUERIES`` row ``name`` as a driver query."""
+
+    def query(spark: SparkSession, sf_dir: str) -> DataFrame:
+        from probminhash_spark.config import DedupConfig
+        from probminhash_spark.functions.sketch_udfs import make_sketch_udf
+
+        overrides = _SIGNATURE_QUERIES[name]
+        cfg = DedupConfig(num_hashes=64, bands=16, rows=4, **overrides)
+        return _per_doc(spark, sf_dir, make_sketch_udf(cfg), "sig", _scalarize_sig)
+
+    query.__name__ = query.__qualname__ = name
+    return query
+
+
+def _format_hsketch(df: DataFrame, col: str) -> DataFrame:
+    """Scalar-encode an array<double> hsketch for the driver hash: fixed
+    6-decimal rendering (values are sums of uniforms in [0, m) — 1e-6 is far
+    below slot separation)."""
     import pyspark.sql.functions as F
 
-    from probminhash_spark.config import DedupConfig
-    from probminhash_spark.functions.sketch_udfs import make_sketch_udf
-
-    _load(spark, sf_dir, "documents")
-    cfg = DedupConfig(algo="superminhash", num_hashes=64, bands=16, rows=4)
-    sketch = make_sketch_udf(cfg)
-    out = _ranged(spark.table("documents")).select(
-        "doc_id", sketch(F.col("text")).alias("sig")
+    return df.select(
+        "doc_id",
+        F.size(col).cast("bigint").alias(f"{col}_len"),
+        F.concat_ws(
+            "-", F.expr(f"transform({col}, x -> format_number(x, '0.000000'))")
+        ).alias(f"{col}_str"),
     )
-    return _scalarize_sig(out, "sig")
 
 
 def sketch_superminhash_values(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -747,103 +779,12 @@ def sketch_superminhash_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     as array<double> alongside the winner-hash banding signature; j_est
     between two docs = native zip_with equal-slot fraction on these floats.
     Rows-only (sketch-valued)."""
-    import pyspark.sql.functions as F
-
     from probminhash_spark.config import DedupConfig
     from probminhash_spark.functions.sketch_udfs import make_superminhash_values_udf
 
-    _load(spark, sf_dir, "documents")
     cfg = DedupConfig(algo="superminhash", num_hashes=64, bands=16, rows=4)
     hsk = make_superminhash_values_udf(cfg)
-    out = _ranged(spark.table("documents")).select(
-        "doc_id", hsk(F.col("text")).alias("hsketch")
-    )
-    # scalar-encode for the driver hash: fixed 6-decimal rendering (values
-    # are sums of uniforms in [0, m) — 1e-6 is far below slot separation)
-    return out.select(
-        "doc_id",
-        F.size("hsketch").cast("bigint").alias("hsketch_len"),
-        F.concat_ws(
-            "-",
-            F.expr(
-                "transform(hsketch, x -> format_number(x, '0.000000'))"
-            ),
-        ).alias("hsketch_str"),
-    )
-
-
-def sketch_signatures_sha(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ProbMinHash3aSha signatures (S6, ``probminhash3sha.rs:87-167``):
-    sha512_256-digested item identity, the reference's stable-across-languages
-    string-key regime — rows-only (sketch-valued)."""
-    import pyspark.sql.functions as F
-
-    from probminhash_spark.config import DedupConfig
-    from probminhash_spark.functions.sketch_udfs import make_sketch_udf
-
-    _load(spark, sf_dir, "documents")
-    cfg = DedupConfig(
-        algo="probminhash3a", weighted=True, hasher="sha",
-        num_hashes=64, bands=16, rows=4,
-    )
-    sketch = make_sketch_udf(cfg)
-    out = _ranged(spark.table("documents")).select(
-        "doc_id", sketch(F.col("text")).alias("sig")
-    )
-    return _scalarize_sig(out, "sig")
-
-
-def sketch_probminhash2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ProbMinHash2 weighted signatures (S7/S8, ``probminhash2.rs``) —
-    rows-only (sketch-valued)."""
-    import pyspark.sql.functions as F
-
-    from probminhash_spark.config import DedupConfig
-    from probminhash_spark.functions.sketch_udfs import make_sketch_udf
-
-    _load(spark, sf_dir, "documents")
-    cfg = DedupConfig(
-        algo="probminhash2", weighted=True, num_hashes=64, bands=16, rows=4
-    )
-    sketch = make_sketch_udf(cfg)
-    out = _ranged(spark.table("documents")).select(
-        "doc_id", sketch(F.col("text")).alias("sig")
-    )
-    return _scalarize_sig(out, "sig")
-
-
-def sketch_superminhash2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SuperMinHash2 integer signatures over documents (S13,
-    ``superminhasher2.rs:203-279``) — rows-only (sketch-valued)."""
-    import pyspark.sql.functions as F
-
-    from probminhash_spark.config import DedupConfig
-    from probminhash_spark.functions.sketch_udfs import make_sketch_udf
-
-    _load(spark, sf_dir, "documents")
-    cfg = DedupConfig(algo="superminhash2", num_hashes=64, bands=16, rows=4)
-    sketch = make_sketch_udf(cfg)
-    out = _ranged(spark.table("documents")).select(
-        "doc_id", sketch(F.col("text")).alias("sig")
-    )
-    return _scalarize_sig(out, "sig")
-
-
-def sketch_revoptdens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reverse-optimal-densification signatures over documents (S26,
-    ``densminhash.rs:390-474``) — rows-only (sketch-valued)."""
-    import pyspark.sql.functions as F
-
-    from probminhash_spark.config import DedupConfig
-    from probminhash_spark.functions.sketch_udfs import make_sketch_udf
-
-    _load(spark, sf_dir, "documents")
-    cfg = DedupConfig(algo="revoptdens", num_hashes=64, bands=16, rows=4)
-    sketch = make_sketch_udf(cfg)
-    out = _ranged(spark.table("documents")).select(
-        "doc_id", sketch(F.col("text")).alias("sig")
-    )
-    return _scalarize_sig(out, "sig")
+    return _per_doc(spark, sf_dir, hsk, "hsketch", _format_hsketch)
 
 
 def sketch_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -853,10 +794,10 @@ def sketch_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from probminhash_spark.config import DedupConfig
     from probminhash_spark.functions.sketch_udfs import make_cardinality_udf
 
-    _load(spark, sf_dir, "documents")
     card = make_cardinality_udf(DedupConfig())
-    return _ranged(spark.table("documents")).select(
-        "doc_id", F.round(card(F.col("text")), 2).alias("est_distinct_shingles")
+    return _per_doc(
+        spark, sf_dir, card, "est_distinct_shingles",
+        lambda df, col: df.withColumn(col, F.round(col, 2)),
     )
 
 
@@ -865,16 +806,11 @@ def sketch_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     full DuckDB replay of the fingerprint math (_simhash_duck_sql) — poly
     byte hash, double SplitMix64 finalize, sign-packed bit votes — in
     HUGEINT-emulated wrapping u64 arithmetic."""
-    import pyspark.sql.functions as F
-
     from probminhash_spark.config import DedupConfig
     from probminhash_spark.functions.sketch_udfs import make_simhash_udf
 
-    _load(spark, sf_dir, "documents")
     sim = make_simhash_udf(DedupConfig(shingle_mode="token", shingle_size=1))
-    return _ranged(spark.table("documents")).select(
-        "doc_id", sim(F.col("text")).alias("simhash64")
-    )
+    return _per_doc(spark, sf_dir, sim, "simhash64")
 
 
 def ann_cosine_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1087,44 +1023,26 @@ def sketch_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-exact DuckDB replay (_fingerprint_duck_sql) — byte-level k-gram poly
     hashes, SplitMix64 finalize, windowed minima, distinct + unsigned-sorted
     per doc."""
-    import pyspark.sql.functions as F
-
     from probminhash_spark.functions.sketch_udfs import make_fingerprint_udf
 
-    _load(spark, sf_dir, "documents")
     fp = make_fingerprint_udf(window=16, k=8)
-    out = _ranged(spark.table("documents")).select(
-        "doc_id", fp(F.col("text")).alias("fingerprint")
-    )
-    return _scalarize_sig(out, "fingerprint")
+    return _per_doc(spark, sf_dir, fp, "fingerprint", _scalarize_sig)
 
 
 def lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stopword-ratio language identification — rows-only."""
-    import pyspark.sql.functions as F
-
     from probminhash_spark.functions.sketch_udfs import make_lang_id_udf
 
-    _load(spark, sf_dir, "documents")
-    lang = make_lang_id_udf()
-    return _ranged(spark.table("documents")).select(
-        "doc_id", lang(F.col("text")).alias("lang_pred")
-    )
+    return _per_doc(spark, sf_dir, make_lang_id_udf(), "lang_pred")
 
 
 def sketch_ordminhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-sensitive edit-distance signatures (ProbOrdMinHash2 S27/S28)
     over token sequences — rows-only (not SQL-expressible)."""
-    import pyspark.sql.functions as F
-
     from probminhash_spark.functions.sketch_udfs import make_ordminhash_udf
 
-    _load(spark, sf_dir, "documents")
     om = make_ordminhash_udf(m=16, l=2)
-    out = _ranged(spark.table("documents")).select(
-        "doc_id", om(F.col("text")).alias("ord_sig")
-    )
-    return _scalarize_sig(out, "ord_sig")
+    return _per_doc(spark, sf_dir, om, "ord_sig", _scalarize_sig)
 
 
 def sketch_group_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1455,13 +1373,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_quality_summary": text_quality_summary,
         "ann_cosine_topk": ann_cosine_topk,
         "dedup_embedding_cosine": dedup_embedding_cosine,
-        "sketch_signatures": sketch_signatures,
-        "sketch_signatures_sha": sketch_signatures_sha,
-        "sketch_superminhash": sketch_superminhash,
+        "sketch_signatures": _signature_query("sketch_signatures"),
+        "sketch_signatures_sha": _signature_query("sketch_signatures_sha"),
+        "sketch_superminhash": _signature_query("sketch_superminhash"),
         "sketch_superminhash_values": sketch_superminhash_values,
-        "sketch_superminhash2": sketch_superminhash2,
-        "sketch_probminhash2": sketch_probminhash2,
-        "sketch_revoptdens": sketch_revoptdens,
+        "sketch_superminhash2": _signature_query("sketch_superminhash2"),
+        "sketch_probminhash2": _signature_query("sketch_probminhash2"),
+        "sketch_revoptdens": _signature_query("sketch_revoptdens"),
         "sketch_cardinality": sketch_cardinality,
         "sketch_simhash": sketch_simhash,
         "ann_cosine_topk_lsh": ann_cosine_topk_lsh,

@@ -144,7 +144,7 @@ def candidate_pairs(
     bands: DataFrame,
     cfg: DedupConfig,
     id_col: str = "doc_id",
-    pin_buckets: bool = True,
+    on_capped: str = "star",
 ) -> tuple[DataFrame, DataFrame]:
     """Band buckets -> candidate pairs (id_l < id_r) with the explicit skew
     policy (SURVEY.md §2.2): buckets up to ``bucket_cap`` expand pairwise via
@@ -153,29 +153,48 @@ def candidate_pairs(
     recall preserved (dup groups still connect through the anchor), and every
     capped bucket is reported in the audit side-channel.
 
+    ``on_capped`` is the one place the skew policy is decided:
+    - ``"star"`` (the scale default): star-expand capped buckets; the audit
+      frame is returned lazily and nothing here evaluates it.
+    - ``"fail"``: eagerly assert no bucket was capped and raise otherwise.
+      Use this wherever output is compared against an all-pairs oracle —
+      silent star-capping would diverge from brute force on a viral corpus.
+    - ``"record"``: star-expand, for callers that also write the audit frame
+      out (the staged pipeline).
+
     Returns (pairs, capped_buckets).
     """
+    if on_capped not in ("star", "fail", "record"):
+        raise ValueError(f"bad on_capped {on_capped!r}")
     # ONE shuffle: group bucket members into an array, expand pairs natively
     # in a single CASE branch (no self-join; one subtree so the upstream
     # sketch UDF executes exactly once in the candidate plan)
     buckets = bands.groupBy("band_id", "band_key").agg(
         F.array_sort(F.collect_list(id_col)).alias("ids")
     )
-    # pinned (r6): the bucket table typically feeds TWO subtrees — the
-    # capped-bucket audit (evaluated eagerly under on_capped='fail'; written
-    # out by the staged pipeline) and the pair expansion (referenced twice by
-    # the streaming new-id semi-join union) — so without the persist the band
-    # shuffle + collect_list aggregation execute once per consumer.
-    # ``pin_buckets=False`` for single-consumer callers (on_capped='star'
-    # edge paths, e.g. the scaling bench legs) where the cache write would
-    # be pure overhead.  Lifetime: caller's cache_scope(), same contract as
-    # the signature pin in dedup_edges.
     buckets = buckets.filter(F.size("ids") >= 2)
-    if pin_buckets:
+    # pinned when the bucket table has a second consumer — the audit
+    # (evaluated eagerly under "fail", written out under "record") next to
+    # the pair expansion — so the band shuffle + collect_list aggregation
+    # execute once.  Under "star" the pairs are the only consumer and the
+    # cache write would be pure overhead.  Lifetime: caller's cache_scope(),
+    # same contract as the signature pin in dedup_edges.
+    if on_capped != "star":
         buckets = pin(buckets)
     capped = buckets.filter(F.size("ids") > cfg.bucket_cap).select(
         "band_id", "band_key", F.size("ids").alias("bucket_size")
     )
+    if on_capped == "fail":
+        hit = capped.limit(1).collect()
+        if hit:
+            r = hit[0]
+            raise RuntimeError(
+                f"band bucket (band_id={r['band_id']}, band_key={r['band_key']})"
+                f" has bucket_size={r['bucket_size']} members >"
+                f" bucket_cap={cfg.bucket_cap}; star-capped output would"
+                " silently diverge from an all-pairs oracle — raise bucket_cap"
+                " or use on_capped='star'"
+            )
     expand = (
         "CASE WHEN size(ids) <= {cap} THEN "
         "  flatten(transform(ids, (x, i) ->"
@@ -441,14 +460,10 @@ def dedup_edges(
     """Full candidate pipeline: docs -> verified duplicate edges
     (id_l, id_r, j_est, j_exact).
 
-    ``on_capped``: skew policy for band buckets larger than ``cfg.bucket_cap``:
-    - ``"star"`` (default, the scale path): expand the bucket as a star around
-      its min id — bounded O(size) cost; non-anchor pairs in that bucket are
-      dropped from the *edge* output (they still cluster together through the
-      anchor in connected components).
-    - ``"fail"``: eagerly assert no bucket was capped and raise otherwise.
-      Use this wherever output is compared against an all-pairs oracle —
-      silent star-capping would diverge from brute force on a viral corpus.
+    ``on_capped``: skew policy for band buckets larger than ``cfg.bucket_cap``
+    (see :func:`candidate_pairs`).  Under ``"star"`` the non-anchor pairs of
+    a capped bucket are dropped from the *edge* output (they still cluster
+    together through the anchor in connected components).
     """
     if key_cols is not None:
         docs = with_doc_id(docs, key_cols, id_col)
@@ -459,22 +474,7 @@ def dedup_edges(
     # outside a scope the persist lives until clearCache() — caller-managed.
     sigs = pin(with_signature(docs, cfg, content_col).select(id_col, "sig"))
     bands = band_explode(sigs, cfg, id_col)
-    # star mode never evaluates the capped audit -> buckets has ONE consumer
-    pairs, capped = candidate_pairs(
-        bands, cfg, id_col, pin_buckets=(on_capped == "fail")
-    )
-    if on_capped == "fail":
-        hit = capped.limit(1).collect()
-        if hit:
-            r = hit[0]
-            raise RuntimeError(
-                f"band bucket (band_id={r['band_id']}, key={r['band_key']}) has "
-                f"{r['bucket_size']} members > bucket_cap={cfg.bucket_cap}; "
-                "star-capped output would silently diverge from an all-pairs "
-                "oracle — raise bucket_cap or use on_capped='star'"
-            )
-    elif on_capped != "star":  # pragma: no cover
-        raise ValueError(f"bad on_capped {on_capped!r}")
+    pairs, _ = candidate_pairs(bands, cfg, id_col, on_capped=on_capped)
     # weighted configs skip the prefilter: the size-ratio bound only holds
     # for distinct-set Jaccard (see cardinality_prefilter docstring)
     if cfg.cardinality_prefilter and not cfg.weighted:
@@ -518,24 +518,7 @@ def simhash_dup_pairs(
     bands = fp.select(
         F.col(id_col), F.explode(F.expr(block_expr)).alias("bk")
     ).select(id_col, "bk.band_id", "bk.band_key")
-    pairs, capped = candidate_pairs(
-        bands, cfg, id_col, pin_buckets=(on_capped == "fail")
-    )
-    if on_capped == "fail":
-        # oracle-equality guard (same contract as dedup_edges): a fingerprint
-        # block shared by > bucket_cap docs would star-expand and silently
-        # drop true close pairs that a brute-force oracle keeps
-        hit = capped.limit(1).collect()
-        if hit:
-            r = hit[0]
-            raise RuntimeError(
-                f"simhash block bucket (band_id={r['band_id']}, "
-                f"key={r['band_key']}) has {r['bucket_size']} members > "
-                f"bucket_cap={cfg.bucket_cap}; star-capped output would "
-                "diverge from an all-pairs oracle"
-            )
-    elif on_capped != "star":  # pragma: no cover
-        raise ValueError(f"bad on_capped {on_capped!r}")
+    pairs, _ = candidate_pairs(bands, cfg, id_col, on_capped=on_capped)
     s = fp.select(F.col(id_col), F.col("sh"))
     return (
         pairs.join(s.withColumnsRenamed({id_col: "id_l", "sh": "sh_l"}), "id_l")

@@ -28,21 +28,6 @@ from .cache import pin
 from .dedup import candidate_pairs
 
 
-def _capped_guard(capped: DataFrame, on_capped: str, cfg: DedupConfig) -> None:
-    if on_capped == "fail":
-        hit = capped.limit(1).collect()
-        if hit:
-            r = hit[0]
-            raise RuntimeError(
-                f"feature bucket (key={r['band_key']}) has {r['bucket_size']}"
-                f" members > bucket_cap={cfg.bucket_cap}; star-capped output"
-                " would diverge from an all-pairs oracle — raise bucket_cap"
-                " or use on_capped='star'"
-            )
-    elif on_capped != "star":  # pragma: no cover
-        raise ValueError(f"bad on_capped {on_capped!r}")
-
-
 def ngram_jaccard_pairs(
     docs: DataFrame,
     threshold: float,
@@ -85,10 +70,7 @@ def ngram_jaccard_pairs(
     bands = grams.select(
         F.col(id_col), F.lit(0).alias("band_id"), F.xxhash64("g").alias("band_key")
     )
-    pairs, capped = candidate_pairs(
-        bands, cfg, id_col, pin_buckets=(on_capped == "fail")
-    )
-    _capped_guard(capped, on_capped, cfg)
+    pairs, _ = candidate_pairs(bands, cfg, id_col, on_capped=on_capped)
     gl = grams.select(F.col(id_col).alias("id_l"), "g")
     gr = grams.select(F.col(id_col).alias("id_r"), "g")
     inter = (
@@ -146,10 +128,7 @@ def weighted_token_jaccard_pairs(
     bands = toks.select(
         F.col(id_col), F.lit(0).alias("band_id"), F.xxhash64("tok").alias("band_key")
     )
-    pairs, capped = candidate_pairs(
-        bands, cfg, id_col, pin_buckets=(on_capped == "fail")
-    )
-    _capped_guard(capped, on_capped, cfg)
+    pairs, _ = candidate_pairs(bands, cfg, id_col, on_capped=on_capped)
     tl = toks.select(F.col(id_col).alias("id_l"), "tok", F.col("c").alias("c_l"))
     tr = toks.select(F.col(id_col).alias("id_r"), "tok", F.col("c").alias("c_r"))
     inter = (

@@ -189,6 +189,7 @@ def group_band_candidates(
     key_col: str,
     band_rows: int = 4,
     n_bands: int | None = None,
+    on_capped: str = "star",
 ) -> tuple[DataFrame, DataFrame]:
     """LSH banding over group UNION REGISTER vectors -> candidate group
     pairs (the scale path for :func:`group_jaccard`'s many-groups regime).
@@ -204,7 +205,7 @@ def group_band_candidates(
     1-(1-t^band_rows)^n_bands, so e.g. 128 bands already give > 0.999 at
     t=0.5, r=4).  Candidate volume is bounded by the shared bucket-capped
     expansion (``candidate_pairs``) instead of the G^2/2 cartesian of the
-    broadcast path.
+    broadcast path, under that expansion's ``on_capped`` skew policy.
 
     Returns (pairs (key_l, key_r), capped_buckets audit frame).
     """
@@ -221,7 +222,7 @@ def group_band_candidates(
     ).select("gid", "bk.band_id", "bk.band_key")
     from .dedup import candidate_pairs
 
-    pairs, capped = candidate_pairs(bands, cfg, id_col="gid")
+    pairs, capped = candidate_pairs(bands, cfg, id_col="gid", on_capped=on_capped)
     return (
         pairs.select(
             F.col("id_l").alias("key_l"), F.col("id_r").alias("key_r")
@@ -298,19 +299,9 @@ def group_jaccard(
                 "group_jaccard(mode='banded') needs threshold > 0: banding "
                 "can only find pairs above a similarity level, not list all"
             )
-        cand, capped = group_band_candidates(
-            group_sketches, cfg, key_col, band_rows, n_bands
+        cand, _ = group_band_candidates(
+            group_sketches, cfg, key_col, band_rows, n_bands, on_capped
         )
-        if on_capped == "fail":
-            hit = capped.limit(1).collect()
-            if hit:
-                raise RuntimeError(
-                    f"group band bucket has {hit[0]['bucket_size']} members > "
-                    f"bucket_cap={cfg.bucket_cap}; star-capped output would "
-                    "diverge from the all-pairs answer"
-                )
-        elif on_capped != "star":  # pragma: no cover
-            raise ValueError(f"bad on_capped {on_capped!r}")
         # group table is one row per group: AQE broadcasts these joins
         pairs = cand.join(a, "key_l").join(b, "key_r")
     else:  # pragma: no cover

@@ -72,21 +72,9 @@ def substring_dup_pairs(
         F.explode(fp(F.col(content_col))).alias("band_key"),
     ).withColumn("band_id", F.lit(0))
     # reuse the LSH bucket expansion + skew policy (one shuffle, star-cap)
-    cap_cfg = DedupConfig(bucket_cap=bucket_cap)
-    pairs, capped = candidate_pairs(
-        anchors, cap_cfg, id_col, pin_buckets=(on_capped == "fail")
+    pairs, _ = candidate_pairs(
+        anchors, DedupConfig(bucket_cap=bucket_cap), id_col, on_capped=on_capped
     )
-    if on_capped == "fail":
-        hit = capped.limit(1).collect()
-        if hit:
-            r = hit[0]
-            raise RuntimeError(
-                f"fingerprint bucket {r['band_key']} has {r['bucket_size']} "
-                f"members > bucket_cap={bucket_cap}; star-capped output would "
-                "diverge from an all-pairs oracle"
-            )
-    elif on_capped != "star":  # pragma: no cover
-        raise ValueError(f"bad on_capped {on_capped!r}")
     grams = eligible.select(
         F.col(id_col), F.expr(_gram_array(min_len, content_col)).alias("grams")
     )

@@ -120,7 +120,7 @@ def run_pipeline(
             _read(spark, checkpoint_root, "dropped_buckets", fmt).count()
         )
     else:
-        pairs, dropped = candidate_pairs(bands, cfg)
+        pairs, dropped = candidate_pairs(bands, cfg, on_capped="record")
         _write(pairs, checkpoint_root, "candidates", fmt=fmt)
         _write(dropped, checkpoint_root, "dropped_buckets", fmt=fmt)
         pairs = _read(spark, checkpoint_root, "candidates", fmt)

@@ -94,7 +94,17 @@ def ensure_index_meta(eidx: BucketedLsm, cfg: DedupConfig) -> None:
                 "the wrong dirs and re-emit already-discovered pairs as "
                 "duplicate edges"
             )
-        elif meta.get("sketch_identity") not in (None, identity):
+        elif meta.get("sketch_identity") is None:
+            if eidx.exists():
+                raise RuntimeError(
+                    f"edges index {eidx.delta_base} has no sketch_identity in "
+                    "_index_meta.json: its pairs may have been produced under "
+                    "a different sketch/key regime — rebuild the index dir "
+                    "(or, after verifying the config matches, add "
+                    f'"sketch_identity": "{identity}" to the meta file)'
+                )
+            # no index yet: fall through and record the identity
+        elif meta["sketch_identity"] != identity:
             raise ValueError(
                 f"edges index {eidx.delta_base} was written under sketch "
                 f"identity {meta['sketch_identity']} but this run's config "
@@ -307,14 +317,8 @@ class StreamingDeduper:
     def _delete_partition(self, base: str, batch_id: int) -> None:
         delete_batch_partition(self.spark, base, batch_id)
 
-    def _manifest_files(self) -> list[str]:
-        return self._bands.manifest_files()
-
     def _read_manifest(self) -> dict | None:
         return self._bands.read_manifest()
-
-    def _write_manifest(self, through: int, segments: list[str]) -> None:
-        self._bands.write_manifest(through, segments)
 
     def _delta_batch_ids(self) -> list[int]:
         return self._bands.delta_batch_ids()
@@ -327,9 +331,6 @@ class StreamingDeduper:
 
     def _scan_metrics(self, dirs: list[str]) -> tuple[int, int]:
         return self._bands.scan_metrics(dirs)
-
-    def _maybe_compact(self, batch_id: int) -> None:
-        self._bands.maybe_compact(batch_id)
 
     # ---------------------------------------------------------------- meta ---
 
@@ -479,18 +480,28 @@ class StreamingDeduper:
             new_ids = new_bands.select("doc_id").distinct()
             from ..operators.dedup import candidate_pairs
 
+            # one subtree reading `pairs` once: flag each endpoint with a
+            # broadcast left join on the new ids and keep pairs where either
+            # matched (both sides are distinct, so no pair is repeated)
             pairs, _ = candidate_pairs(cand_bands, cfg)
-            pairs = pairs.join(
-                F.broadcast(new_ids.withColumnRenamed("doc_id", "id_l")),
-                "id_l",
-                "left_semi",
-            ).unionByName(
+            pairs = (
                 pairs.join(
-                    F.broadcast(new_ids.withColumnRenamed("doc_id", "id_r")),
-                    "id_r",
-                    "left_semi",
+                    F.broadcast(new_ids.select(
+                        F.col("doc_id").alias("id_l"), F.lit(True).alias("_new_l")
+                    )),
+                    "id_l",
+                    "left",
                 )
-            ).dropDuplicates(["id_l", "id_r"])
+                .join(
+                    F.broadcast(new_ids.select(
+                        F.col("doc_id").alias("id_r"), F.lit(True).alias("_new_r")
+                    )),
+                    "id_r",
+                    "left",
+                )
+                .where(F.col("_new_l") | F.col("_new_r"))
+                .select("id_l", "id_r")
+            )
             # band hit rate per CANDIDATE pair (state bands carry no sigs, so
             # the estimate is the band-collision fraction).  Shared buckets
             # of a pair touching a new doc always contain that new doc, so

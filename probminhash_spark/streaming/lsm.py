@@ -223,13 +223,20 @@ class BucketedLsm:
         return sorted(out)
 
     def exists(self) -> bool:
+        """True iff the store holds a committed manifest or any delta.
+
+        Raises ``RuntimeError`` (from :meth:`read_manifest`) when the newest
+        parseable manifest references segment dirs that do not exist — an
+        inconsistent store is an error, not an absent one."""
         return self.read_manifest() is not None or bool(self.delta_batch_ids())
 
     def read(self, batch_id: int, touched_buckets: list[int]) -> DataFrame | None:
         """Accumulated rows that could join the new batch, reading ONLY the
         bucket directories in ``touched_buckets``: manifest segments +
         un-compacted (batch_id > W, != current) deltas.  Returns None when
-        no state is readable (cols ``self.cols``)."""
+        no state is readable (cols ``self.cols``).  Raises ``RuntimeError``
+        when the manifest references missing segment dirs (see
+        :meth:`read_manifest`)."""
         manifest = self.read_manifest()
         w = manifest["through"] if manifest else None
         touched = {f"bucket={int(b)}" for b in touched_buckets}

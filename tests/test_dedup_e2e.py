@@ -137,16 +137,75 @@ def test_connected_components_long_chain(spark):
     assert vals == {0}
 
 
-def test_on_capped_fail_raises_on_viral_bucket(spark):
-    """Contract mode: a band bucket over bucket_cap must raise loudly instead
-    of silently star-capping (which diverges from an all-pairs oracle)."""
+def _capped_dedup_edges(docs, cfg, on_capped):
+    return dedup_edges(docs, cfg, id_col="doc_id", on_capped=on_capped)
+
+
+def _capped_simhash(docs, cfg, on_capped):
+    from probminhash_spark.operators.dedup import simhash_dup_pairs
+
+    return simhash_dup_pairs(docs, cfg, on_capped=on_capped)
+
+
+def _capped_ngram(docs, cfg, on_capped):
+    from probminhash_spark.operators.exact_pairs import ngram_jaccard_pairs
+
+    return ngram_jaccard_pairs(
+        docs, 0.5, cfg=cfg, on_capped=on_capped, content_col="content"
+    )
+
+
+def _capped_weighted_token(docs, cfg, on_capped):
+    from probminhash_spark.operators.exact_pairs import weighted_token_jaccard_pairs
+
+    return weighted_token_jaccard_pairs(
+        docs, 0.5, "[a-z]+", cfg=cfg, on_capped=on_capped, content_col="content"
+    )
+
+
+def _capped_substring(docs, cfg, on_capped):
+    from probminhash_spark.operators.substring import substring_dup_pairs
+
+    return substring_dup_pairs(
+        docs, min_len=20, k=8, bucket_cap=cfg.bucket_cap, on_capped=on_capped
+    )
+
+
+def _capped_group_jaccard(docs, cfg, on_capped):
+    from probminhash_spark.operators.sketch_ops import group_jaccard
+
+    # 30 groups with identical union registers share every band bucket
+    regs = np.arange(1, cfg.setsketch_m + 1, dtype="<u2").tobytes()
+    sketches = docs.sparkSession.createDataFrame(
+        [(f"g{i:02d}", regs) for i in range(30)], "key string, union_regs binary"
+    )
+    return group_jaccard(
+        sketches, cfg, "key", threshold=0.5, mode="banded", on_capped=on_capped
+    )
+
+
+@pytest.mark.parametrize(
+    "run",
+    [
+        _capped_dedup_edges,
+        _capped_simhash,
+        _capped_ngram,
+        _capped_weighted_token,
+        _capped_substring,
+        _capped_group_jaccard,
+    ],
+    ids=lambda f: f.__name__.removeprefix("_capped_"),
+)
+def test_on_capped_fail_raises_on_viral_bucket(spark, run):
+    """Contract mode, for every operator exposing ``on_capped``: a bucket
+    over bucket_cap must raise loudly instead of silently star-capping
+    (which diverges from an all-pairs oracle); the star default still
+    connects the group through its anchor; any other policy is refused."""
     import pandas as pd
-    import pytest
 
-    from probminhash_spark.config import DedupConfig
-    from probminhash_spark.operators.dedup import dedup_edges
+    from probminhash_spark.operators.cache import cache_scope
 
-    # 30 identical docs -> every band bucket has 30 members > cap of 8
+    # 30 identical docs -> every bucket has 30 members > cap of 8
     docs = spark.createDataFrame(
         pd.DataFrame(
             {
@@ -156,11 +215,14 @@ def test_on_capped_fail_raises_on_viral_bucket(spark):
         )
     )
     cfg = DedupConfig(bucket_cap=8, threshold=0.5, est_low_cut=0.3)
-    with pytest.raises(RuntimeError, match="bucket_cap"):
-        dedup_edges(docs, cfg, id_col="doc_id", on_capped="fail").collect()
-    # default star mode still yields edges (anchor connects the group)
-    edges = dedup_edges(docs, cfg, id_col="doc_id", on_capped="star")
-    assert edges.count() >= 29
+    with cache_scope():
+        with pytest.raises(RuntimeError, match="bucket_cap=8"):
+            run(docs, cfg, "fail").collect()
+    with cache_scope():
+        assert run(docs, cfg, "star").count() >= 29
+    with cache_scope():
+        with pytest.raises(ValueError, match="bad on_capped"):
+            run(docs, cfg, "drop")
 
 
 def test_pair_join_size_gated_not_forced_broadcast(spark, spark_files):

@@ -94,3 +94,51 @@ def test_rows_only_queries_survive_driver_canon(spark):
                 "scalar-encode array columns (see _scalarize_sig)"
             ) from e
         assert len(canon) >= 0, name
+
+
+# Per-document queries: one row per document, globally ordered by doc_id
+# through ``_ranged`` (range-sorted UDF input, no trailing orderBy).
+PER_DOC = [
+    "sketch_signatures",
+    "sketch_signatures_sha",
+    "sketch_superminhash",
+    "sketch_superminhash_values",
+    "sketch_superminhash2",
+    "sketch_probminhash2",
+    "sketch_revoptdens",
+    "sketch_cardinality",
+    "sketch_simhash",
+    "sketch_fingerprints",
+    "lang_id_heuristic",
+    "sketch_ordminhash",
+]
+
+# the ``make_sketch_udf`` queries and the config each must sketch with,
+# written out here so a mixed-up entry config fails
+SIG_CFGS = {
+    "sketch_signatures": dict(algo="probminhash3a", weighted=True),
+    "sketch_signatures_sha": dict(algo="probminhash3a", weighted=True, hasher="sha"),
+    "sketch_superminhash": dict(algo="superminhash"),
+    "sketch_superminhash2": dict(algo="superminhash2"),
+    "sketch_probminhash2": dict(algo="probminhash2", weighted=True),
+    "sketch_revoptdens": dict(algo="revoptdens"),
+}
+
+
+@pytest.mark.parametrize("name", PER_DOC)
+def test_per_document_query_order_and_values(spark, name):
+    from probminhash_spark.config import DedupConfig
+    from probminhash_spark.functions.sketch_udfs import _sketch_batch_np
+
+    got = entry_mod.queries()[name](spark, SF_DIR).toPandas()
+    docs = pd.read_parquet(f"{SF_DIR}/documents.parquet", columns=["doc_id", "text"])
+    ids = got["doc_id"].to_numpy()
+    assert len(ids) == len(docs), f"{name}: not one row per document"
+    assert (np.diff(ids) > 0).all(), f"{name}: doc_id not strictly increasing"
+    if name not in SIG_CFGS:
+        return
+    cfg = DedupConfig(num_hashes=64, bands=16, rows=4, **SIG_CFGS[name])
+    texts = docs.set_index("doc_id").loc[ids, "text"].fillna("").tolist()
+    sig = _sketch_batch_np(texts, cfg).view(np.int64)
+    assert got["sig_len"].tolist() == [cfg.num_hashes] * len(ids)
+    assert got["sig_str"].tolist() == ["-".join(map(str, row)) for row in sig]

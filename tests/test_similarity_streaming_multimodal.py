@@ -1378,6 +1378,8 @@ def test_manifest_with_missing_segments_raises(spark, tmp_path):
     shutil.rmtree(seg)
     with pytest.raises(RuntimeError, match="segment dirs that do not exist"):
         dedup._read_manifest()
+    with pytest.raises(RuntimeError, match="segment dirs that do not exist"):
+        dedup._bands.exists()
 
 
 def test_edges_index_meta_pins_buckets_and_identity(spark, tmp_path):
@@ -1409,4 +1411,13 @@ def test_edges_index_meta_pins_buckets_and_identity(spark, tmp_path):
     eidx.write_delta(rows, 0)
     (tmp_path / "edges_index" / "_index_meta.json").unlink()
     with pytest.raises(RuntimeError, match="predates meta pinning"):
+        ensure_index_meta(eidx, cfg)
+    # a meta file pinning only the layout next to live index rows: the
+    # identity check cannot be skipped (drop the Hadoop checksum sidecar of
+    # the earlier write, or the hand-written file reads as corrupt)
+    (tmp_path / "edges_index" / "._index_meta.json.crc").unlink(missing_ok=True)
+    (tmp_path / "edges_index" / "_index_meta.json").write_text(
+        '{"index_buckets": 16}'
+    )
+    with pytest.raises(RuntimeError, match="no sketch_identity"):
         ensure_index_meta(eidx, cfg)
