@@ -31,8 +31,15 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from probminhash_spark.config import DedupConfig  # noqa: E402
 from probminhash_spark.session import get_spark  # noqa: E402
+from probminhash_spark.streaming.lsm import batch_partitions_exist  # noqa: E402
 
 SCHEMA = "repo string, path string, commit string, lang string, content string"
+
+
+def _count_edges(spark, edges_dir: str) -> int:
+    if not batch_partitions_exist(spark, edges_dir):
+        return 0
+    return spark.read.parquet(edges_dir).count()
 
 
 def main(argv=None) -> int:
@@ -49,7 +56,13 @@ def main(argv=None) -> int:
         "--config", default=None, help="DedupConfig JSON (inline string or file path)"
     )
     ap.add_argument("--master", default=None)
-    ap.add_argument("--state-buckets", type=int, default=64)
+    ap.add_argument(
+        "--state-buckets",
+        type=int,
+        default=64,
+        help="bucket count of the band state and the edges index (both "
+        "engines); pinned in the state dir on the first batch",
+    )
     ap.add_argument("--compact-every", type=int, default=8)
     ap.add_argument(
         "--continuous",
@@ -141,7 +154,6 @@ def main(argv=None) -> int:
         # semantics, and sharing the LSM's file-source checkpoint would make
         # a later --engine switch silently drain ZERO batches while
         # reporting the other engine's edge counts
-        from probminhash_spark.streaming.dedup_stream import batch_partitions_exist
         from probminhash_spark.streaming.state_dedup import attach_stateful_dedup
 
         checkpoint = (
@@ -151,22 +163,18 @@ def main(argv=None) -> int:
         q = attach_stateful_dedup(
             stream, cfg, edges_dir, checkpoint,
             available_now=not args.continuous,
+            index_buckets=args.state_buckets,
             ttl=args.ttl,
         )
         q.awaitTermination()
         if args.continuous:
             return 0
-        edges_n = (
-            spark.read.parquet(edges_dir).count()
-            if batch_partitions_exist(spark, edges_dir)
-            else 0
-        )
         print(
             json.dumps(
                 {
                     "engine": "state-store",
                     "state_dir": args.state.rstrip("/"),
-                    "duplicate_edges_total": edges_n,
+                    "duplicate_edges_total": _count_edges(spark, edges_dir),
                     "wall_clock_sec": round(time.time() - t0, 2),
                 }
             )
@@ -189,18 +197,15 @@ def main(argv=None) -> int:
         return 0
     q = dedup.attach(stream, checkpoint)
     q.awaitTermination()
-    edges_n = 0
-    if dedup._edges_exist():
-        edges_n = spark.read.parquet(f"{dedup.state_dir}/edges").count()
-    manifest = dedup._read_manifest()
+    manifest = dedup.bands.read_manifest()
     print(
         json.dumps(
             {
                 "state_dir": dedup.state_dir,
-                "duplicate_edges_total": edges_n,
+                "duplicate_edges_total": _count_edges(spark, dedup.edges_dir),
                 "compacted_through": manifest["through"] if manifest else None,
                 "segments": manifest["segments"] if manifest else [],
-                "delta_batches": len(dedup._delta_batch_ids()),
+                "delta_batches": len(dedup.bands.delta_batch_ids()),
                 "wall_clock_sec": round(time.time() - t0, 2),
             }
         )

@@ -10,18 +10,18 @@ whose bands join against everything already seen.
 
 from __future__ import annotations
 
-import json
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..config import DedupConfig
-from ..operators.dedup import band_explode, with_doc_id, with_signature
-from .lsm import (  # noqa: F401 — re-exported; state_dedup + tests import here
-    BucketedLsm,
-    batch_partitions_exist,
-    delete_batch_partition,
+from ..operators.cache import cache_scope, pin
+from ..operators.dedup import (
+    band_explode,
+    candidate_pairs,
+    with_doc_id,
+    with_signature,
 )
+from .lsm import BucketedLsm, delete_batch_partition
 
 _STATE_COLS = ["doc_id", "band_id", "band_key", "batch_id"]
 _EDGE_IDX_COLS = ["id_l", "id_r", "batch_id"]
@@ -54,81 +54,61 @@ def edges_index_lsm(
     )
 
 
-def ensure_index_meta(eidx: BucketedLsm, cfg: DedupConfig) -> None:
-    """Pin an edges-index LSM's layout + sketch identity (r6, ADVICE medium).
+def ensure_meta(
+    store: BucketedLsm, meta_path: str, layout_key: str, cfg: DedupConfig
+) -> None:
+    """Pin a streaming store's bucket layout and sketch identity: the meta
+    file at ``meta_path`` holds ``{layout_key: store.buckets,
+    "sketch_identity": cfg.sketch_identity()}``.
 
-    Mirrors ``StreamingDeduper._ensure_state_meta`` for a standalone edges
-    index (the state-store engine's ``<edges_dir>_index``): resuming an
-    existing index with a different ``index_buckets`` silently changes pmod
-    bucket placement — ``prune_prior_edges`` then reads the WRONG bucket
-    dirs and re-emits already-discovered pairs as duplicate edges; resuming
-    under a different sketch identity pairs content under a different key
-    regime against an index built under the old one.  First writer records
-    both; later instances must match or fail loudly."""
+    Resuming a store with a different bucket count silently changes pmod
+    bucket placement — pruned reads then open the WRONG bucket dirs and
+    miss duplicates (band state) or re-emit already-discovered pairs
+    (edges index).  Resuming under a different sketch identity
+    (algo/hasher/shingle regime/num_hashes/bands/rows/key-regime version)
+    produces keys that never match history.  The first writer records
+    both.  A mismatch raises ``ValueError``.  Once ``store`` holds data, a
+    meta file that cannot vouch for it (missing, unreadable, or without an
+    identity) raises ``RuntimeError``; before that, such a file is
+    (re)written with this run's layout and identity."""
     identity = cfg.sketch_identity()
-    fs = eidx._fs()
-    p = eidx._hpath(f"{eidx.delta_base}/_index_meta.json")
-    if fs.exists(p):
-        stream = fs.open(p)
-        try:
-            scanner = eidx.spark.sparkContext._jvm.java.util.Scanner(stream)
-            text = scanner.useDelimiter("\\A").next() if scanner.hasNext() else ""
-            meta = json.loads(text) if text else None
-        except Exception:
-            meta = None
-        finally:
-            stream.close()
-        if meta is None:
-            if eidx.exists():  # torn meta but live index: refuse
-                raise RuntimeError(
-                    f"unreadable {eidx.delta_base}/_index_meta.json next to an "
-                    "existing edges index — cannot determine its bucket "
-                    "layout; restore the file or rebuild the index dir"
-                )
-            # torn meta, no index yet: first batch crashed pre-write; rewrite
-        elif int(meta["index_buckets"]) != int(eidx.buckets):
+    found = store._fs().exists(store._hpath(meta_path))
+    meta = store.read_json(meta_path) if found else None
+    if meta is not None and layout_key in meta:
+        if int(meta[layout_key]) != store.buckets:
             raise ValueError(
-                f"edges index {eidx.delta_base} was written with "
-                f"index_buckets={meta['index_buckets']}; this run is "
-                f"configured with {eidx.buckets} — bucket pruning would read "
-                "the wrong dirs and re-emit already-discovered pairs as "
-                "duplicate edges"
+                f"{meta_path} pins {layout_key}={meta[layout_key]}; this run "
+                f"is configured with {store.buckets} — bucket pruning would "
+                "read the wrong dirs and silently miss duplicates or re-emit "
+                "already-discovered pairs"
             )
-        elif meta.get("sketch_identity") is None:
-            if eidx.exists():
-                raise RuntimeError(
-                    f"edges index {eidx.delta_base} has no sketch_identity in "
-                    "_index_meta.json: its pairs may have been produced under "
-                    "a different sketch/key regime — rebuild the index dir "
-                    "(or, after verifying the config matches, add "
-                    f'"sketch_identity": "{identity}" to the meta file)'
-                )
-            # no index yet: fall through and record the identity
-        elif meta["sketch_identity"] != identity:
-            raise ValueError(
-                f"edges index {eidx.delta_base} was written under sketch "
-                f"identity {meta['sketch_identity']} but this run's config "
-                f"has identity {identity} — resume with the original config "
-                "or rebuild the index dir"
-            )
-        else:
+        pinned = meta.get("sketch_identity")
+        if pinned == identity:
             return
-    elif eidx.exists():
+        if pinned is not None:
+            raise ValueError(
+                f"{meta_path} was written under sketch identity {pinned} but "
+                f"this run's config has identity {identity}: keys would never "
+                "match history and duplicates would be silently missed — "
+                "resume with the original config or rebuild the state dir"
+            )
+    if store.exists():
+        if not found:
+            problem = "is missing: the store predates meta pinning"
+        elif meta is None or layout_key not in meta:
+            problem = "is unreadable"
+        else:
+            problem = "has no sketch_identity"
         raise RuntimeError(
-            f"edges index {eidx.delta_base} predates meta pinning (no "
-            "_index_meta.json): its bucket layout cannot be verified and a "
-            "mismatched index_buckets would silently re-emit duplicate "
-            "edges — rebuild the index dir (or, after verifying the layout "
-            f'matches, write {{"index_buckets": {int(eidx.buckets)}, '
-            f'"sketch_identity": "{identity}"}} to _index_meta.json)'
+            f"{meta_path} {problem}, next to live data under "
+            f"{store.delta_base} — its bucket layout and key regime cannot be "
+            "verified; rebuild the state dir (or, after verifying both match, "
+            f'write {{"{layout_key}": {store.buckets}, "sketch_identity": '
+            f'"{identity}"}} to the meta file)'
         )
-    out = fs.create(p, True)
-    try:
-        out.write(bytearray(json.dumps(
-            {"index_buckets": int(eidx.buckets), "sketch_identity": identity}
-        ).encode()))
-    finally:
-        out.close()
+    store.write_json(
+        meta_path, {layout_key: store.buckets, "sketch_identity": identity}
+    )
 
 
 def prune_prior_edges(
@@ -157,6 +137,33 @@ def prune_prior_edges(
     if prior is None:
         return pairs
     return pairs.join(prior.select("id_l", "id_r"), ["id_l", "id_r"], "left_anti")
+
+
+def emit_edges(
+    pairs: DataFrame, eidx: BucketedLsm, edges_dir: str, batch_id: int
+) -> None:
+    """The edge-emission tail of both streaming engines: drop the pairs
+    earlier batches already emitted (:func:`prune_prior_edges`), write the
+    survivors to ``edges_dir/batch_id=K`` and record them in ``eidx``'s
+    batch-K delta.  Replays rewrite exactly their own partition and delta
+    (delete-first, so a replay that computes zero edges still clears a
+    failed attempt's rows).  ``pairs`` (id_l, id_r, band_hit_rate) is
+    pinned — it feeds the touched-bucket collect, the edge write and the
+    index write — so call this inside the batch's ``cache_scope()``."""
+    new_edges = prune_prior_edges(pin(pairs), eidx, batch_id).withColumn(
+        "batch_id", F.lit(int(batch_id))
+    )
+    delete_batch_partition(eidx.spark, edges_dir, batch_id)
+    (
+        new_edges.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id")
+        .parquet(edges_dir)
+    )
+    eidx.delete_delta(batch_id)
+    idx_rows = new_edges.select(*_EDGE_IDX_COLS)
+    if not idx_rows.isEmpty():
+        eidx.write_delta(idx_rows, batch_id)
 
 
 def windowed_event_counts(
@@ -246,7 +253,11 @@ class StreamingDeduper:
     num_hashes/bands/rows/key-regime version).  Resuming with a different
     identity would produce band keys that never match historical state, so
     every cross-upgrade duplicate would be missed with no error; the meta
-    check turns that into a loud failure (r5 ADVICE medium).
+    check (:func:`ensure_meta`) turns that into a loud failure (r5 ADVICE
+    medium).
+
+    The two stores are the public ``bands`` and ``edges_index``
+    :class:`BucketedLsm` attributes; the edge output is ``edges_dir``.
     """
 
     def __init__(
@@ -258,13 +269,12 @@ class StreamingDeduper:
         compact_every: int = 8,
         max_segments: int = 8,
     ):
-        self.spark = spark
         self.cfg = cfg
         self.state_dir = state_dir.rstrip("/")
         self.state_buckets = int(state_buckets)
         self.compact_every = int(compact_every)
         self.max_segments = int(max_segments)
-        self._bands = BucketedLsm(
+        self.bands = BucketedLsm(
             spark,
             delta_base=f"{self.state_dir}/bands",
             compact_base=f"{self.state_dir}/bands_compact",
@@ -276,13 +286,14 @@ class StreamingDeduper:
             compact_every=self.compact_every,
             max_segments=self.max_segments,
         )
-        self._eidx = edges_index_lsm(
+        self.edges_index = edges_index_lsm(
             spark,
             f"{self.state_dir}/edges_index",
             buckets=self.state_buckets,
             compact_every=self.compact_every,
             max_segments=self.max_segments,
         )
+        self.edges_dir = f"{self.state_dir}/edges"
         # debug observability for the incremental-cost contract (tests):
         # band rows that entered the candidate stage in the last batch, and
         # the state files/bytes each pruned read actually enumerated
@@ -294,280 +305,117 @@ class StreamingDeduper:
         self.last_edges_bytes_scanned: int | None = None
         self._meta_checked = False
 
-    def _bands_path(self) -> str:
-        return self._bands.delta_base
-
-    def _edges_path(self) -> str:
-        return f"{self.state_dir}/edges"
-
-    def _compact_path(self) -> str:
-        return self._bands.compact_base
-
-    # ------------------------------------------------ LSM delegation shims ---
-
-    def _hpath(self, s: str):
-        return self._bands._hpath(s)
-
-    def _fs(self):
-        return self._bands._fs()
-
-    def _glob_dirs(self, pattern: str) -> list[str]:
-        return self._bands.glob_dirs(pattern)
-
-    def _delete_partition(self, base: str, batch_id: int) -> None:
-        delete_batch_partition(self.spark, base, batch_id)
-
-    def _read_manifest(self) -> dict | None:
-        return self._bands.read_manifest()
-
-    def _delta_batch_ids(self) -> list[int]:
-        return self._bands.delta_batch_ids()
-
-    def _state_exists(self) -> bool:
-        return self._bands.exists()
-
-    def _edges_exist(self) -> bool:
-        return batch_partitions_exist(self.spark, self._edges_path())
-
-    def _scan_metrics(self, dirs: list[str]) -> tuple[int, int]:
-        return self._bands.scan_metrics(dirs)
-
-    # ---------------------------------------------------------------- meta ---
-
-    def _ensure_state_meta(self) -> None:
-        """Pin the state dir's layout + identity: ``state_buckets`` (the
-        bucket-pruning layout of everything already written) and the sketch
-        identity fingerprint (band keys only match history under the SAME
-        shingle/algo/band regime).  First writer records both; later
-        instances must match or fail loudly — silently mismatched pruning
-        or keys would drop duplicate edges with no error."""
-        if self._meta_checked:
-            return
-        identity = self.cfg.sketch_identity()
-        fs = self._fs()
-        p = self._hpath(f"{self.state_dir}/_state_meta.json")
-        if fs.exists(p):
-            stream = fs.open(p)
-            try:
-                scanner = self.spark.sparkContext._jvm.java.util.Scanner(stream)
-                text = scanner.useDelimiter("\\A").next() if scanner.hasNext() else ""
-                meta = json.loads(text) if text else None
-            except Exception:
-                meta = None
-            finally:
-                stream.close()
-            if meta is None:
-                if self._state_exists():  # torn meta but live state: refuse
-                    raise RuntimeError(
-                        f"unreadable {self.state_dir}/_state_meta.json next to "
-                        "existing band state — cannot determine the bucket "
-                        "layout; restore the file or rebuild the state dir"
-                    )
-                # torn meta, no state yet: first batch crashed pre-write;
-                # fall through and rewrite
-            elif int(meta["state_buckets"]) != self.state_buckets:
-                raise ValueError(
-                    f"state dir {self.state_dir} was written with "
-                    f"state_buckets={meta['state_buckets']}; this instance "
-                    f"was configured with {self.state_buckets} — bucket "
-                    "pruning would read the wrong dirs and silently miss "
-                    "duplicates"
-                )
-            elif meta.get("sketch_identity") is None and self._state_exists():
-                raise RuntimeError(
-                    f"state dir {self.state_dir} predates identity "
-                    "fingerprinting (no sketch_identity in _state_meta.json): "
-                    "its band keys may have been produced under a different "
-                    "sketch/key regime, and resuming would silently miss "
-                    "every cross-upgrade duplicate — rebuild the state dir "
-                    "(or, after verifying the config matches, add "
-                    f'"sketch_identity": "{identity}" to the meta file)'
-                )
-            elif (
-                meta.get("sketch_identity") is not None
-                and meta["sketch_identity"] != identity
-            ):
-                raise ValueError(
-                    f"state dir {self.state_dir} was written under sketch "
-                    f"identity {meta['sketch_identity']} but this instance's "
-                    f"config has identity {identity} (algo/hasher/shingle "
-                    "regime/num_hashes/bands/rows/key-regime version): band "
-                    "keys would never match historical state and every "
-                    "cross-upgrade duplicate would be silently missed — "
-                    "resume with the original config or rebuild the state dir"
-                )
-            else:
-                self._meta_checked = True
-                return
-        out = fs.create(p, True)
-        try:
-            out.write(bytearray(json.dumps(
-                {
-                    "state_buckets": int(self.state_buckets),
-                    "sketch_identity": identity,
-                }
-            ).encode()))
-        finally:
-            out.close()
-        self._meta_checked = True
-
-    # -------------------------------------------------------- state reads ---
-
-    def _read_old_bands(
-        self, batch_id: int, touched_buckets: list[int]
-    ) -> DataFrame | None:
-        out = self._bands.read(batch_id, touched_buckets)
-        if self.debug_metrics:
-            self.last_state_files_scanned, self.last_state_bytes_scanned = (
-                self._bands.scan_metrics(self._bands.last_scanned_dirs)
-            )
-        return out
-
-    # ------------------------------------------------------------ batches ---
-
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        # one cache scope per micro-batch: any operator-internal pin made
-        # while building this batch's plans is released when the batch
-        # commits — a continuously-running stream never accumulates pins
-        from ..operators.cache import cache_scope
-
+        # one cache scope per micro-batch: every pin made while building and
+        # running this batch's plans is released when the batch commits — a
+        # continuously-running stream never accumulates pins
         with cache_scope():
             self._process_batch_scoped(batch_df, batch_id)
 
     def _process_batch_scoped(self, batch_df: DataFrame, batch_id: int) -> None:
         cfg = self.cfg
-        self._ensure_state_meta()
+        if not self._meta_checked:
+            ensure_meta(
+                self.bands, f"{self.state_dir}/_state_meta.json",
+                "state_buckets", cfg,
+            )
+            self._meta_checked = True
         docs = with_doc_id(batch_df, ["repo", "path", "commit"])
         sigs = with_signature(docs, cfg).select("doc_id", "sig", "content")
-        new_bands = (
+        new_bands = pin(
             band_explode(sigs, cfg)
             .withColumn("batch_id", F.lit(int(batch_id)))
             .withColumn(
                 "bucket", F.pmod(F.col("band_key"), F.lit(self.state_buckets))
             )
-            .persist()
         )
-        pairs_est = None
-        try:
-            touched = sorted(
-                r[0] for r in new_bands.select("bucket").distinct().collect()
-            )
-            old_bands = (
-                self._read_old_bands(batch_id, touched) if touched else None
-            )
-            new_cand = new_bands.select("doc_id", "band_id", "band_key")
-            if old_bands is not None:
-                # INCREMENTAL: only state rows in buckets the new batch
-                # touches were even READ (pruned dirs above); of those, only
-                # rows sharing an exact band key can form a new candidate —
-                # a semi-join on the new band keys, so per-batch cost tracks
-                # the new data volume
-                new_keys = new_bands.select("band_id", "band_key").distinct()
-                touched_old = old_bands.join(
-                    new_keys, ["band_id", "band_key"], "left_semi"
-                ).select("doc_id", "band_id", "band_key")
-                cand_bands = touched_old.unionByName(new_cand)
-            else:
-                if self.debug_metrics:
-                    self.last_state_files_scanned = 0
-                    self.last_state_bytes_scanned = 0
-                cand_bands = new_cand
-            cand_bands = cand_bands.persist()
-            if self.debug_metrics:
-                self.last_candidate_input_rows = cand_bands.count()
-            # candidates must touch a NEW doc (old-old pairs already emitted;
-            # a capped bucket's star expansion can anchor on an old doc)
-            new_ids = new_bands.select("doc_id").distinct()
-            from ..operators.dedup import candidate_pairs
-
-            # one subtree reading `pairs` once: flag each endpoint with a
-            # broadcast left join on the new ids and keep pairs where either
-            # matched (both sides are distinct, so no pair is repeated)
-            pairs, _ = candidate_pairs(cand_bands, cfg)
-            pairs = (
-                pairs.join(
-                    F.broadcast(new_ids.select(
-                        F.col("doc_id").alias("id_l"), F.lit(True).alias("_new_l")
-                    )),
-                    "id_l",
-                    "left",
+        touched = sorted(
+            r[0] for r in new_bands.select("bucket").distinct().collect()
+        )
+        old_bands = self.bands.read(batch_id, touched) if touched else None
+        if self.debug_metrics:
+            self.last_state_files_scanned, self.last_state_bytes_scanned = (
+                self.bands.scan_metrics(
+                    self.bands.last_scanned_dirs if touched else []
                 )
-                .join(
-                    F.broadcast(new_ids.select(
-                        F.col("doc_id").alias("id_r"), F.lit(True).alias("_new_r")
-                    )),
-                    "id_r",
-                    "left",
-                )
-                .where(F.col("_new_l") | F.col("_new_r"))
-                .select("id_l", "id_r")
             )
-            # band hit rate per CANDIDATE pair (state bands carry no sigs, so
-            # the estimate is the band-collision fraction).  Shared buckets
-            # of a pair touching a new doc always contain that new doc, so
-            # counting within cand_bands is exact — and the join volume is
-            # pairs x bands-per-doc, never state x state.
-            # (no dropDuplicates: countDistinct below already collapses
-            # re-ingested duplicate band rows, and each dedup would cost an
-            # extra shuffle)
-            tl = cand_bands.select(
-                F.col("doc_id").alias("id_l"), "band_id", "band_key"
+        new_cand = new_bands.select("doc_id", "band_id", "band_key")
+        if old_bands is not None:
+            # INCREMENTAL: only state rows in buckets the new batch touches
+            # were even READ (pruned dirs above); of those, only rows sharing
+            # an exact band key can form a new candidate — a semi-join on the
+            # new band keys, so per-batch cost tracks the new data volume
+            new_keys = new_bands.select("band_id", "band_key").distinct()
+            touched_old = old_bands.join(
+                new_keys, ["band_id", "band_key"], "left_semi"
+            ).select("doc_id", "band_id", "band_key")
+            cand_bands = touched_old.unionByName(new_cand)
+        else:
+            cand_bands = new_cand
+        cand_bands = pin(cand_bands)
+        if self.debug_metrics:
+            self.last_candidate_input_rows = cand_bands.count()
+        # candidates must touch a NEW doc (old-old pairs already emitted;
+        # a capped bucket's star expansion can anchor on an old doc)
+        new_ids = new_bands.select("doc_id").distinct()
+        # one subtree reading `pairs` once: flag each endpoint with a
+        # broadcast left join on the new ids and keep pairs where either
+        # matched (both sides are distinct, so no pair is repeated)
+        pairs, _ = candidate_pairs(cand_bands, cfg)
+        pairs = (
+            pairs.join(
+                F.broadcast(new_ids.select(
+                    F.col("doc_id").alias("id_l"), F.lit(True).alias("_new_l")
+                )),
+                "id_l",
+                "left",
             )
-            tr = cand_bands.select(
-                F.col("doc_id").alias("id_r"), "band_id", "band_key"
+            .join(
+                F.broadcast(new_ids.select(
+                    F.col("doc_id").alias("id_r"), F.lit(True).alias("_new_r")
+                )),
+                "id_r",
+                "left",
             )
-            pairs_est = (
-                pairs.join(tl, "id_l")
-                .join(tr, ["id_r", "band_id", "band_key"])
-                .groupBy("id_l", "id_r")
-                # countDistinct: a doc re-ingested in a later batch leaves
-                # duplicate band rows in state; counting distinct band ids
-                # keeps the hit rate a true fraction in [1/bands, 1]
-                .agg((F.countDistinct("band_id") / cfg.bands).alias("band_hit_rate"))
-                .where(F.col("band_hit_rate") >= 1.0 / cfg.bands)
-                # persisted: traversed for the index-bucket collect, the edge
-                # write, and the index-delta write
-                .persist()
+            .where(F.col("_new_l") | F.col("_new_r"))
+            .select("id_l", "id_r")
+        )
+        # band hit rate per CANDIDATE pair (state bands carry no sigs, so
+        # the estimate is the band-collision fraction).  Shared buckets of a
+        # pair touching a new doc always contain that new doc, so counting
+        # within cand_bands is exact — and the join volume is pairs x
+        # bands-per-doc, never state x state.
+        # (no dropDuplicates: countDistinct below already collapses
+        # re-ingested duplicate band rows, and each dedup would cost an
+        # extra shuffle)
+        tl = cand_bands.select(
+            F.col("doc_id").alias("id_l"), "band_id", "band_key"
+        )
+        tr = cand_bands.select(
+            F.col("doc_id").alias("id_r"), "band_id", "band_key"
+        )
+        pairs_est = (
+            pairs.join(tl, "id_l")
+            .join(tr, ["id_r", "band_id", "band_key"])
+            .groupBy("id_l", "id_r")
+            # countDistinct: a doc re-ingested in a later batch leaves
+            # duplicate band rows in state; counting distinct band ids keeps
+            # the hit rate a true fraction in [1/bands, 1]
+            .agg((F.countDistinct("band_id") / cfg.bands).alias("band_hit_rate"))
+            .where(F.col("band_hit_rate") >= 1.0 / cfg.bands)
+        )
+        # don't re-emit edges already discovered by an earlier batch (happens
+        # when a doc is re-ingested and counts as "new" again); the guard
+        # reads only the edges-INDEX buckets this batch's pairs hash into
+        emit_edges(pairs_est, self.edges_index, self.edges_dir, batch_id)
+        if self.debug_metrics:  # before compaction reclaims the scanned dirs
+            self.last_edges_files_scanned, self.last_edges_bytes_scanned = (
+                self.edges_index.scan_metrics(self.edges_index.last_scanned_dirs)
             )
-            # don't re-emit edges already discovered by an earlier batch
-            # (happens when a doc is re-ingested and counts as "new" again).
-            # r5: the anti-join reads only the edges-INDEX buckets this
-            # batch's pairs hash into — never the accumulated edges output
-            new_edges = prune_prior_edges(pairs_est, self._eidx, batch_id)
-            if self.debug_metrics:
-                self.last_edges_files_scanned, self.last_edges_bytes_scanned = (
-                    self._eidx.scan_metrics(self._eidx.last_scanned_dirs)
-                )
-            self._delete_partition(self._edges_path(), batch_id)
-            (
-                new_edges.withColumn("batch_id", F.lit(int(batch_id)))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(self._edges_path())
-            )
-            # index delta mirrors exactly the batch's EMITTED edges (replay
-            # deletes first so a zero-edge retry clears the failed attempt)
-            self._eidx.delete_delta(batch_id)
-            idx_rows = new_edges.select(
-                "id_l", "id_r", F.lit(int(batch_id)).alias("batch_id")
-            )
-            if not idx_rows.isEmpty():
-                self._eidx.write_delta(idx_rows, batch_id)
-            self._bands.delete_delta(batch_id)
-            self._bands.write_delta(
-                new_bands.select(*_STATE_COLS, "bucket"), batch_id
-            )
-            self._bands.maybe_compact(batch_id)
-            self._eidx.maybe_compact(batch_id)
-        finally:
-            new_bands.unpersist()
-            if pairs_est is not None:
-                pairs_est.unpersist()
-            try:
-                cand_bands.unpersist()
-            except Exception:
-                pass
+        self.bands.delete_delta(batch_id)
+        self.bands.write_delta(new_bands.select(*_STATE_COLS, "bucket"), batch_id)
+        self.bands.maybe_compact(batch_id)
+        self.edges_index.maybe_compact(batch_id)
 
     def attach(self, stream_df: DataFrame, checkpoint: str, available_now: bool = True):
         """Wire onto a streaming DataFrame of files; returns the query.

@@ -120,6 +120,34 @@ class BucketedLsm:
             return []
         return [str(st.getPath().toUri()) for st in statuses if st.isDirectory()]
 
+    def read_json(self, path: str):
+        """Parsed JSON document at ``path``, or None when the text does not
+        parse as a JSON object (a torn write).  IO errors (open/read)
+        propagate: a transient FS/py4j failure is not evidence of a torn
+        file."""
+        stream = self._fs().open(self._hpath(path))
+        try:
+            scanner = self.spark.sparkContext._jvm.java.util.Scanner(stream)
+            text = scanner.useDelimiter("\\A").next() if scanner.hasNext() else ""
+            # Scanner reports a read error as end-of-input; surface it
+            err = scanner.ioException()
+            if err is not None:
+                raise OSError(f"reading {path}: {err}")
+        finally:
+            stream.close()
+        try:
+            doc = json.loads(text)
+        except ValueError:
+            return None
+        return doc if isinstance(doc, dict) else None
+
+    def write_json(self, path: str, doc: dict) -> None:
+        out = self._fs().create(self._hpath(path), True)
+        try:
+            out.write(bytearray(json.dumps(doc).encode()))
+        finally:
+            out.close()
+
     def scan_metrics(self, dirs: list[str]) -> tuple[int, int]:
         fs = self._fs()
         n_files = n_bytes = 0
@@ -152,8 +180,8 @@ class BucketedLsm:
         dirs from a crash are invisible; a torn newest file falls back to
         the previous committed manifest.
 
-        r6 (ADVICE): only PARSE failures fall back a version.  IO errors
-        (open/read) propagate — treating a transient FS/py4j error as "torn"
+        r6 (ADVICE): only PARSE failures fall back a version (see
+        :meth:`read_json`) — treating a transient FS/py4j error as "torn"
         could select a stale straggler manifest whose files were already
         reclaimed.  And a parseable manifest is only trusted after its
         segment dirs are verified to exist: a GC straggler referencing
@@ -161,22 +189,9 @@ class BucketedLsm:
         and miss duplicates."""
         fs = self._fs()
         for path in reversed(self.manifest_files()):
-            stream = fs.open(self._hpath(path))  # IO errors raise
-            try:
-                scanner = self.spark.sparkContext._jvm.java.util.Scanner(stream)
-                text = scanner.useDelimiter("\\A").next() if scanner.hasNext() else ""
-            finally:
-                stream.close()
-            try:
-                manifest = json.loads(text)
-            except ValueError:  # torn/corrupt newest: fall back one version
-                continue
-            if not (
-                isinstance(manifest, dict)
-                and "through" in manifest
-                and "segments" in manifest
-            ):
-                continue
+            manifest = self.read_json(path)
+            if manifest is None or not {"through", "segments"} <= manifest.keys():
+                continue  # torn/corrupt newest: fall back one version
             missing = [
                 s
                 for s in manifest["segments"]
@@ -196,12 +211,7 @@ class BucketedLsm:
     def write_manifest(self, through: int, segments: list[str]) -> None:
         fs = self._fs()
         name = f"{self.compact_base}/manifest-{int(through):020d}.json"
-        out = fs.create(self._hpath(name), True)
-        try:
-            payload = json.dumps({"through": int(through), "segments": segments})
-            out.write(bytearray(payload.encode()))
-        finally:
-            out.close()
+        self.write_json(name, {"through": int(through), "segments": segments})
         # GC superseded manifests (best-effort; readers always take the
         # highest parseable version, so stragglers are harmless)
         for path in self.manifest_files():

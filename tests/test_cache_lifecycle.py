@@ -98,13 +98,28 @@ def test_batch_job_surface_leaves_no_cached_relations(spark, tmp_path, monkeypat
     assert _n_cached(spark) == 0, "job surface leaked persisted relations"
 
 
-def test_streaming_batch_loop_leaves_no_cached_relations(spark, tmp_path):
-    """Each micro-batch of the LSM engine runs inside its own cache scope —
-    a continuous stream never accumulates pins."""
+@pytest.mark.parametrize("engine", ["lsm", "state-store"])
+def test_streaming_batch_loop_leaves_no_cached_relations(spark, tmp_path, engine):
+    """Each micro-batch of either streaming engine runs inside its own cache
+    scope — a continuous stream never accumulates pins."""
     from probminhash_spark.streaming.dedup_stream import StreamingDeduper
+    from probminhash_spark.streaming.state_dedup import attach_stateful_dedup
 
     spark.catalog.clearCache()
     files = generate_files(n_files=30, n_clusters=3, seed=11)
+    if engine == "state-store":
+        src = tmp_path / "in"
+        src.mkdir()
+        files.to_parquet(src / "w1.parquet")
+        stream = spark.readStream.schema(
+            "repo string, path string, commit string, lang string, content string"
+        ).parquet(str(src))
+        attach_stateful_dedup(
+            stream, DedupConfig(), str(tmp_path / "edges"),
+            str(tmp_path / "ckpt"), index_buckets=16,
+        ).awaitTermination(180)
+        assert _n_cached(spark) == 0, "micro-batch leaked cached relations"
+        return
     dedup = StreamingDeduper(
         spark, DedupConfig(), str(tmp_path / "state"), state_buckets=16
     )

@@ -235,7 +235,7 @@ def test_streaming_replay_clears_stale_partition_when_empty(spark, tmp_path):
     )
     assert got == 0, "stale batch-0 edge survived an empty replay"
     # and a follow-up batch must not crash on the edge state (regression for
-    # _edges_exist returning True on a partition-less _SUCCESS-only dir)
+    # an edges probe returning True on a partition-less _SUCCESS-only dir)
     dedup.process_batch(spark.createDataFrame(files), batch_id=1)
 
 
@@ -336,8 +336,8 @@ def test_streaming_bucket_pruning_reads_fraction_of_state(spark, tmp_path):
     )
     dedup.debug_metrics = True
     dedup.process_batch(spark.createDataFrame(docs("a", 30)), batch_id=0)
-    state_files, state_bytes = dedup._scan_metrics(
-        dedup._glob_dirs(f"{dedup._bands_path()}/batch_id=*/bucket=*")
+    state_files, state_bytes = dedup.bands.scan_metrics(
+        dedup.bands.glob_dirs(f"{dedup.bands.delta_base}/batch_id=*/bucket=*")
     )
     assert state_files > 100  # 30 x 32 = 960 band keys over 1024 buckets
     # a 2-doc batch touches <= 2 x 32 = 64 buckets out of 1024
@@ -359,6 +359,7 @@ def test_streaming_state_probe_works_on_uri_paths(spark, tmp_path):
     from probminhash_spark.config import DedupConfig
     from probminhash_spark.corpus import generate_files
     from probminhash_spark.streaming.dedup_stream import StreamingDeduper
+    from probminhash_spark.streaming.lsm import batch_partitions_exist
 
     files = generate_files(n_files=30, n_clusters=3, seed=13)
     state_uri = "file://" + str(tmp_path / "state")
@@ -367,12 +368,12 @@ def test_streaming_state_probe_works_on_uri_paths(spark, tmp_path):
     # against batch 0's accumulated (URI-addressed) state
     sdf = spark.createDataFrame(files)
     dedup.process_batch(spark.createDataFrame(files.iloc[::2]), batch_id=0)
-    assert dedup._state_exists(), "URI state invisible to the FS probe"
+    assert dedup.bands.exists(), "URI state invisible to the FS probe"
     dedup.process_batch(spark.createDataFrame(files.iloc[1::2]), batch_id=1)
     edges = spark.read.parquet(str(tmp_path / "state" / "edges"))
     cross = edges.where(F.col("batch_id") == 1)
     assert cross.count() > 0, "batch 1 found no candidates vs batch 0 state"
-    assert dedup._edges_exist()
+    assert batch_partitions_exist(spark, dedup.edges_dir)
     # replay of batch 1 under the URI dir stays a no-op (prior-edge anti-join
     # + partition overwrite both reached through the Hadoop FS)
     before = sorted(map(tuple, edges.collect()))
@@ -403,7 +404,7 @@ def test_streaming_compaction_preserves_semantics(spark, tmp_path):
     for b, part in enumerate(thirds):
         dedup.process_batch(spark.createDataFrame(part), batch_id=b)
     # after batch 2, batches 0..1 are folded into segment "0-1"
-    manifest = dedup._read_manifest()
+    manifest = dedup.bands.read_manifest()
     assert manifest is not None and manifest["through"] == 1
     assert manifest["segments"] == ["0-1"]
     comp = spark.read.parquet(str(tmp_path / "state" / "bands_compact" / "seg=0-1"))
@@ -411,8 +412,8 @@ def test_streaming_compaction_preserves_semantics(spark, tmp_path):
     assert raw01.where("batch_id = 0").count() > 0
     assert raw01.where("batch_id = 1").count() > 0
     # the folded deltas are reclaimed
-    assert not dedup._glob_dirs(f"{dedup._bands_path()}/batch_id=0")
-    assert not dedup._glob_dirs(f"{dedup._bands_path()}/batch_id=1")
+    assert not dedup.bands.glob_dirs(f"{dedup.bands.delta_base}/batch_id=0")
+    assert not dedup.bands.glob_dirs(f"{dedup.bands.delta_base}/batch_id=1")
     # re-ingest batch 0's docs as batch 3 under a different path (new doc_id):
     # every one is a duplicate of a COMPACTED state row
     re0 = thirds[0].copy()
@@ -708,12 +709,12 @@ def test_streaming_manifest_torn_write_falls_back(spark, tmp_path):
     thirds = [files.iloc[i::3] for i in range(3)]
     for b, part in enumerate(thirds):
         dedup.process_batch(spark.createDataFrame(part), batch_id=b)
-    good = dedup._read_manifest()
+    good = dedup.bands.read_manifest()
     assert good is not None and good["through"] == 1
     # simulate a crash mid-write of the NEXT manifest version: torn JSON
     torn = tmp_path / "state" / "bands_compact" / "manifest-00000000000000000099.json"
     torn.write_text('{"through": 99, "seg')
-    assert dedup._read_manifest() == good, "torn manifest not skipped"
+    assert dedup.bands.read_manifest() == good, "torn manifest not skipped"
     # a duplicate of compacted state must still be caught after the tear
     re0 = thirds[0].copy()
     re0["path"] = re0["path"] + "_again"
@@ -726,7 +727,7 @@ def test_streaming_manifest_torn_write_falls_back(spark, tmp_path):
     # the next compaction supersedes and GCs the torn file
     dedup.process_batch(spark.createDataFrame(thirds[1].assign(path=thirds[1]["path"] + "_x")), batch_id=4)
     dedup.process_batch(spark.createDataFrame(thirds[2].assign(path=thirds[2]["path"] + "_x")), batch_id=5)
-    m = dedup._read_manifest()
+    m = dedup.bands.read_manifest()
     assert m is not None and m["through"] >= 3
     assert not torn.exists(), "superseded torn manifest not GC'd"
 
@@ -860,23 +861,23 @@ def test_streaming_compaction_sweeps_stale_crash_leftover_deltas(spark, tmp_path
     )
     for b in range(3):
         dedup.process_batch(spark.createDataFrame(thirds[b]), batch_id=b)
-    m = dedup._read_manifest()
+    m = dedup.bands.read_manifest()
     assert m is not None and m["through"] == 1
     # simulate the crash leftover: a delta dir at batch_id=0 (<= W) that the
     # interrupted reclaim loop failed to delete
     live = tmp_path / "state" / "bands" / "batch_id=2"
     stale = tmp_path / "state" / "bands" / "batch_id=0"
     shutil.copytree(live, stale)
-    assert 0 in dedup._delta_batch_ids()
+    assert 0 in dedup.bands.delta_batch_ids()
     # next compaction (after batches 3-4 make a new pending set) sweeps it
     dedup.process_batch(spark.createDataFrame(thirds[3]), batch_id=3)
     dedup.process_batch(
         spark.createDataFrame(thirds[0].assign(path=thirds[0]["path"] + "_y")),
         batch_id=4,
     )
-    m2 = dedup._read_manifest()
+    m2 = dedup.bands.read_manifest()
     assert m2 is not None and m2["through"] == 3
-    assert 0 not in dedup._delta_batch_ids(), "stale delta <= W not swept"
+    assert 0 not in dedup.bands.delta_batch_ids(), "stale delta <= W not swept"
 
 
 def test_attach_stateful_dedup_end_to_end(spark, tmp_path):
@@ -1142,6 +1143,25 @@ def test_streaming_state_meta_pins_sketch_identity(spark, tmp_path):
     with pytest.raises(RuntimeError, match="sketch_identity"):
         d4.process_batch(spark.createDataFrame(files), batch_id=2)
 
+    # meta file lost next to live band state: the layout cannot be verified
+    # -> refuse instead of stamping the dir with this run's config
+    meta.unlink()
+    d5 = StreamingDeduper(spark, cfg, state, state_buckets=16)
+    with pytest.raises(RuntimeError, match="predates meta pinning"):
+        d5.process_batch(spark.createDataFrame(files), batch_id=2)
+
+    # the same identity-less meta with NO band state yet: the first batch
+    # records the identity, so a later process resumes cleanly
+    fresh = tmp_path / "fresh"
+    fresh.mkdir()
+    (fresh / "_state_meta.json").write_text(_json.dumps({"state_buckets": 16}))
+    d6 = StreamingDeduper(spark, cfg, str(fresh), state_buckets=16)
+    d6.process_batch(spark.createDataFrame(files), batch_id=0)
+    pinned = _json.loads((fresh / "_state_meta.json").read_text())
+    assert pinned["sketch_identity"] == cfg.sketch_identity()
+    d7 = StreamingDeduper(spark, cfg, str(fresh), state_buckets=16)
+    d7.process_batch(spark.createDataFrame(files), batch_id=1)
+
 
 def test_attach_stateful_dedup_writes_bucketed_edges_index(spark, tmp_path):
     """The engine-state writer maintains the same pair-hash-bucketed index
@@ -1178,6 +1198,39 @@ def test_attach_stateful_dedup_writes_bucketed_edges_index(spark, tmp_path):
     assert sorted(map(tuple, idx.collect())) == sorted(map(tuple, edges.collect())), (
         "edges index diverged from emitted edges"
     )
+
+
+@pytest.mark.parametrize("engine", ["lsm", "state-store"])
+def test_streaming_job_surface_drains_with_either_engine(
+    spark, tmp_path, monkeypatch, capsys, engine
+):
+    """jobs/dedup_stream.py drains a parquet dir with either engine, prints
+    one JSON summary and pins ``--state-buckets`` in that engine's meta file
+    (the state-store engine's edges index included)."""
+    import json as _json
+
+    import jobs.dedup_stream as job
+    from probminhash_spark.corpus import generate_files
+
+    monkeypatch.setattr(job, "get_spark", lambda **kw: spark)
+    monkeypatch.setattr(spark, "stop", lambda: None)  # shared test session
+    src = tmp_path / "in"
+    src.mkdir()
+    generate_files(n_files=30, n_clusters=3, seed=11).to_parquet(src / "w1.parquet")
+    state = tmp_path / "state"
+    rc = job.main(
+        ["--input", str(src), "--state", str(state), "--engine", engine,
+         "--state-buckets", "16"]
+    )
+    assert rc == 0
+    summary = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert summary["duplicate_edges_total"] > 0
+    if engine == "lsm":
+        meta, key = state / "_state_meta.json", "state_buckets"
+    else:
+        meta = state / "edges_state_store_index" / "_index_meta.json"
+        key = "index_buckets"
+    assert _json.loads(meta.read_text())[key] == 16
 
 
 def test_first_seen_dedup_ttl_window(spark, tmp_path):
@@ -1316,7 +1369,7 @@ def test_streaming_lsm_long_run_soak(spark, tmp_path):
         part = wave(b)
         all_parts.append(part)
         dedup.process_batch(spark.createDataFrame(part), batch_id=b)
-        manifest = dedup._read_manifest()
+        manifest = dedup.bands.read_manifest()
         if manifest is not None:
             assert len(manifest["segments"]) <= dedup.max_segments, (
                 f"batch {b}: segments {manifest['segments']}"
@@ -1324,11 +1377,11 @@ def test_streaming_lsm_long_run_soak(spark, tmp_path):
             assert manifest["through"] >= last_through, "watermark regressed"
             last_through = manifest["through"]
             # deltas at/below the watermark are reclaimed (disk bounded)
-            stale = [k for k in dedup._delta_batch_ids() if k <= manifest["through"]]
+            stale = [k for k in dedup.bands.delta_batch_ids() if k <= manifest["through"]]
             assert not stale, f"batch {b}: unreclaimed deltas {stale}"
-        n_files, _ = dedup._scan_metrics(
-            dedup._glob_dirs(f"{dedup._bands_path()}/batch_id=*/bucket=*")
-            + dedup._glob_dirs(f"{dedup._compact_path()}/seg=*/bucket=*")
+        n_files, _ = dedup.bands.scan_metrics(
+            dedup.bands.glob_dirs(f"{dedup.bands.delta_base}/batch_id=*/bucket=*")
+            + dedup.bands.glob_dirs(f"{dedup.bands.compact_base}/seg=*/bucket=*")
         )
         max_files_seen = max(max_files_seen, n_files)
     # steady-state bound: <= max_segments segments + compact_every pending
@@ -1369,7 +1422,7 @@ def test_manifest_with_missing_segments_raises(spark, tmp_path):
     thirds = [files.iloc[i::3] for i in range(3)]
     for b, part in enumerate(thirds):
         dedup.process_batch(spark.createDataFrame(part), batch_id=b)
-    m = dedup._read_manifest()
+    m = dedup.bands.read_manifest()
     assert m is not None and m["segments"]
     import shutil
 
@@ -1377,9 +1430,9 @@ def test_manifest_with_missing_segments_raises(spark, tmp_path):
     assert seg.exists()
     shutil.rmtree(seg)
     with pytest.raises(RuntimeError, match="segment dirs that do not exist"):
-        dedup._read_manifest()
+        dedup.bands.read_manifest()
     with pytest.raises(RuntimeError, match="segment dirs that do not exist"):
-        dedup._bands.exists()
+        dedup.bands.exists()
 
 
 def test_edges_index_meta_pins_buckets_and_identity(spark, tmp_path):
@@ -1388,10 +1441,10 @@ def test_edges_index_meta_pins_buckets_and_identity(spark, tmp_path):
     layout or key regime raises instead of silently mis-bucketing the
     re-emission guard."""
     from probminhash_spark.config import DedupConfig
-    from probminhash_spark.streaming.dedup_stream import (
-        edges_index_lsm,
-        ensure_index_meta,
-    )
+    from probminhash_spark.streaming.dedup_stream import edges_index_lsm, ensure_meta
+
+    def ensure_index_meta(eidx, cfg):  # the state-store engine's pin
+        ensure_meta(eidx, f"{eidx.delta_base}/_index_meta.json", "index_buckets", cfg)
 
     base = str(tmp_path / "edges_index")
     cfg = DedupConfig()
