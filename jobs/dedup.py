@@ -40,9 +40,7 @@ def main(argv=None) -> int:
             else Path(args.config).read_text()
         )
         # partial configs allowed: unspecified fields keep their defaults
-        import json as _json
-
-        cfg = DedupConfig(**_json.loads(raw))
+        cfg = DedupConfig(**json.loads(raw))
     else:
         cfg = DedupConfig()
     spark = get_spark(app_name="probminhash-dedup", master=args.master)

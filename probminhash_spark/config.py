@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import hashlib
 import json
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 
 
 # Bump when the signature/band-key IDENTITY regime changes (what counts as
@@ -56,25 +56,8 @@ class DedupConfig:
     # verification
     threshold: float = 0.8  # exact-Jaccard dedup threshold
     est_low_cut: float = 0.5  # discard pairs whose estimated J is below this
-    verify_exact: bool = True  # re-shingle + exact Jaccard on survivors
-    # False (default): per-pair verify with the free MASKED equal-content
-    # shortcut — byte-identical pairs (the dominant dup-dense cost) skip
-    # shingling and Arrow transfer entirely via a native sha256 CASE, same
-    # plan shape as plain per-pair.  True: additionally collapse the UDF to
-    # one call per distinct content-CLASS pair — wins only on mega-cluster
-    # corpora where MANY ids share each content AND cross-pair with other
-    # classes (extra narrow shuffles + a persist otherwise).  Both paths are
-    # value-identical (equal bytes => equal Jaccard; pytest-enforced).
-    verify_by_class: bool = False
     # skew policy (SURVEY.md §2.2 candidate generation)
     bucket_cap: int = 2000  # band buckets larger than this are dropped+counted
-    # SetSketch size-ratio candidate prefilter (SURVEY §2.2; J <= min/max).
-    # Off by default: in this engine the cheap native zip_with estimate
-    # (est_low_cut) already gates the expensive content verify, so the
-    # prefilter's SetSketch pass over candidate-touched docs only pays when
-    # candidate sets blow up with size-mismatched pairs (wide-J corpora,
-    # aggressive banding) — enable it there.
-    cardinality_prefilter: bool = False
     setsketch_m: int = 256
 
     def __post_init__(self):
@@ -92,10 +75,6 @@ class DedupConfig:
 
     def to_json(self) -> str:
         return json.dumps(asdict(self), sort_keys=True)
-
-    @staticmethod
-    def from_json(s: str) -> "DedupConfig":
-        return DedupConfig(**json.loads(s))
 
     def fingerprint(self) -> str:
         """Stable hash of the config — manifests key resume-safety on it."""
@@ -123,14 +102,3 @@ class DedupConfig:
         return hashlib.sha256(
             json.dumps(ident, sort_keys=True).encode()
         ).hexdigest()[:16]
-
-
-@dataclass(frozen=True)
-class PipelineConfig:
-    """Execution-level knobs (orthogonal to dedup semantics)."""
-
-    checkpoint_dir: str = ""
-    output_format: str = "parquet"  # 'iceberg' when a catalog jar is present
-    sketch_partitions: int = 0  # 0 = leave to AQE
-    cc_max_iterations: int = 50
-    arrow_batch_rows: int = 2048

@@ -163,11 +163,8 @@ def make_superminhash_values_udf(cfg: DedupConfig):
 
 
 def make_cardinality_udf(cfg: DedupConfig):
-    """content -> estimated distinct-shingle count (SetSketch S16/S18).
-
-    Used for the size-ratio candidate prefilter: J(A,B) <= min(n_a,n_b)/max(..)
-    (SURVEY.md §2.2 'cardinality prefilter').
-    """
+    """content -> estimated distinct-shingle count (SetSketch S16/S18); the
+    ``sketch_cardinality`` entry query."""
     params = SetSketchParams(m=cfg.setsketch_m)
 
     @pandas_udf(DoubleType())

@@ -143,13 +143,6 @@ class Xoshiro256pp:
             pending &= ~ok
         return out
 
-    def clone_lanes(self, idx: np.ndarray) -> "Xoshiro256pp":
-        """Clone a subset of lanes (ProbMinHash3a buffers per-item generators
-        between passes, ``probminhash3.rs:251``)."""
-        c = object.__new__(Xoshiro256pp)
-        c.s = self.s[idx].copy()
-        return c
-
 
 def _umul128(a: np.ndarray, b: np.ndarray | np.uint64):
     """Full 64x64 -> 128-bit multiply returning (hi, lo) via 32-bit limbs."""

@@ -25,7 +25,7 @@ Default parameters b=1.001, m=4096, a=20, q=65534 fit registers in u16
 
 from __future__ import annotations
 
-from dataclasses import asdict, dataclass
+from dataclasses import dataclass
 
 import numpy as np
 
@@ -37,19 +37,12 @@ U64 = np.uint64
 
 @dataclass(frozen=True)
 class SetSketchParams:
-    """``SetSketchParams`` (``setsketcher.rs:60-91``) + JSON lineage (S15)."""
+    """``SetSketchParams`` (``setsketcher.rs:60-91``)."""
 
     b: float = 1.001
     m: int = 4096
     a: float = 20.0
     q: int = 2**16 - 2
-
-    def to_json_dict(self) -> dict:
-        return asdict(self)
-
-    @staticmethod
-    def from_json_dict(d: dict) -> "SetSketchParams":
-        return SetSketchParams(**d)
 
     @property
     def lnb(self) -> float:

@@ -17,11 +17,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from ..config import DedupConfig
-from ..functions.sketch_udfs import (
-    make_cardinality_udf,
-    make_exact_jaccard_udf,
-    make_sketch_udf,
-)
+from ..functions.sketch_udfs import make_exact_jaccard_udf, make_sketch_udf
 from .cache import pin
 
 
@@ -37,16 +33,15 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
     UDF stage runs on ONE core).  A no-op at scale, where scans already
     produce >= parallelism splits.
 
-    The probe is PLAN-SIDE only — no RDD plan conversion per call (round-2
-    verdict minor):
+    The probe is PLAN-SIDE only — no DataFrame-to-RDD conversion per call
+    (round-2 verdict minor):
     - a plan that already contains an explicit Repartition/Rebalance NODE
       (checked against logical-plan class names in the plan JSON, not the
       pretty-printed string, so column names/literals can't false-match) is
       trusted — the caller chose its parallelism;
-    - file-backed scans estimate their split count with Spark's own
-      FilePartition math (maxSplitBytes bin-packing over file sizes +
-      openCostInBytes); files with non-splittable codecs (.gz/.zst/...)
-      count as ONE split each regardless of size;
+    - file-backed plans ask Spark for their split count: the partitions of
+      each file scan's input RDD in the physical plan (FilePartition
+      packing, non-splittable codecs and all — planning only, no job);
     - fileless DRIVER-LOCAL plans (LocalRelation / LogicalRDD — in-memory
       test frames, parallelized pandas) repartition to the cluster
       parallelism: they are driver-local-sized by construction, so the
@@ -56,8 +51,7 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
       unconditional repartition would pay a full shuffle and could COALESCE
       a well-partitioned large input down to the core count (r3 ADVICE).
     """
-    spark = df.sparkSession
-    sc = spark.sparkContext
+    sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     plan_json = df._jdf.queryExecution().analyzed().toJSON()
     if (
@@ -73,38 +67,14 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
         ):
             return df.repartition(target)
         return df
-    if len(files) >= target:
-        return df
-    # few files: mirror FilePartition.maxSplitBytes + packing to estimate how
-    # many scan splits Spark will actually produce (per-file Hadoop status
-    # calls are bounded by len(files) < target)
-    jvm = sc._jvm
-    utils = jvm.org.apache.spark.util.Utils
-    mpb = utils.byteStringAsBytes(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "128MB")
+    conv = sc._jvm.scala.jdk.javaapi.CollectionConverters
+    leaves = conv.asJava(df._jdf.queryExecution().sparkPlan().collectLeaves())
+    splits = sum(
+        leaf.inputRDD().getNumPartitions()
+        for leaf in leaves
+        if leaf.getClass().getSimpleName() == "FileSourceScanExec"
     )
-    open_cost = utils.byteStringAsBytes(
-        spark.conf.get("spark.sql.files.openCostInBytes", "4MB")
-    )
-    hconf = sc._jsc.hadoopConfiguration()
-    est_splits = 0
-    unsplittable = (".gz", ".zst", ".snappy", ".lz4", ".deflate", ".bz2")
-    for f in files:
-        p = jvm.org.apache.hadoop.fs.Path(f)
-        try:
-            size = p.getFileSystem(hconf).getFileStatus(p).getLen()
-        except Exception:
-            return df.repartition(target)  # unstat-able: be conservative
-        if f.lower().endswith(unsplittable):
-            est_splits += 1  # whole-file codec: Spark cannot split it
-        else:
-            padded = size + open_cost
-            bytes_per_core = max(padded // max(target, 1), 1)
-            max_split = min(mpb, max(open_cost, bytes_per_core))
-            est_splits += -(-padded // max(max_split, 1))  # ceil
-        if est_splits >= target:
-            return df
-    return df.repartition(target)
+    return df if splits >= target else df.repartition(target)
 
 
 def with_signature(
@@ -214,71 +184,6 @@ def candidate_pairs(
     return pairs, capped
 
 
-def cardinality_prefilter(
-    pairs: DataFrame,
-    docs: DataFrame,
-    cfg: DedupConfig,
-    id_col: str = "doc_id",
-    content_col: str = "content",
-) -> DataFrame:
-    """Size-ratio candidate prefilter (SURVEY §2.2, SetSketch S16/S18):
-    J(A,B) <= min(|A|,|B|)/max(|A|,|B|) always, so a pair whose estimated
-    distinct-shingle counts are wildly mismatched can never verify at
-    cfg.threshold.  Cardinalities are estimated only for candidate-touched
-    docs (left-semi first — at scale that subset is << the corpus), and the
-    cutoff carries a 6x-relative-std margin so estimator noise can only
-    ADMIT extra pairs, never drop a true one (conservative-superset
-    invariant).
-
-    DISTINCT-SET configs only: the bound J <= min/max holds for set Jaccard
-    but NOT for the weighted (multiset) Jaccard — A={t x100} vs
-    B={t x100, 100 singletons} has J_w = 0.5 yet a distinct-cardinality
-    ratio of ~0.01, so the filter would wrongly drop a true pair.  Weighted
-    configs must not call this (dedup_edges skips it; calling directly
-    raises)."""
-    import math
-
-    from ..kernels.setsketch import SetSketchParams
-
-    if cfg.weighted:
-        raise ValueError(
-            "cardinality_prefilter is unsound for weighted (multiset) Jaccard: "
-            "min/max distinct-cardinality ratio does not bound J_w"
-        )
-
-    card_udf = make_cardinality_udf(cfg)
-    p = SetSketchParams(m=cfg.setsketch_m)
-    rel_std = math.sqrt(((p.b + 1.0) / (p.b - 1.0) * p.lnb - 1.0) / p.m)
-    cutoff = cfg.threshold * max(0.0, 1.0 - 6.0 * rel_std)
-    cand_ids = (
-        pairs.select(F.col("id_l").alias(id_col))
-        .union(pairs.select(F.col("id_r").alias(id_col)))
-        .distinct()
-    )
-    touched = docs.join(cand_ids, id_col, "left_semi")
-    # unconditional repartition: the semi-join's STATIC partition count looks
-    # fine but AQE coalesces the small shuffle to ~1 partition at runtime,
-    # which would serialize the SetSketch UDF; an explicit repartition is
-    # exempt from AQE coalescing
-    sc = docs.sparkSession.sparkContext
-    cards = touched.repartition(sc.defaultParallelism).select(
-        F.col(id_col), card_udf(F.col(content_col)).alias("est_card")
-    )
-    return (
-        pairs.join(
-            cards.withColumnsRenamed({id_col: "id_l", "est_card": "card_l"}), "id_l"
-        )
-        .join(
-            cards.withColumnsRenamed({id_col: "id_r", "est_card": "card_r"}), "id_r"
-        )
-        .where(
-            F.least("card_l", "card_r") / F.greatest("card_l", "card_r")
-            >= F.lit(cutoff)
-        )
-        .select("id_l", "id_r")
-    )
-
-
 def estimate_pair_jaccard(
     pairs: DataFrame,
     sig_df: DataFrame,
@@ -325,27 +230,14 @@ def verify_pairs(
     Weighted configs verify with the WEIGHTED (multiset) Jaccard — the
     quantity their sketches estimate — set configs with distinct-set Jaccard.
 
-    r5 (r4 verdict task #4) — two mechanisms, both value-identical to plain
-    per-pair verify (the UDF is a pure function of the two byte strings and
-    equal sha256 means equal bytes; pytest-enforced):
-
-    - default (``verify_by_class=False``): the MASKED equal-content
-      shortcut — byte-identical pairs feed the UDF empty strings and a
-      native CASE emits the exact 1.0, so the dominant dup-dense cost
-      (re-shingling equal bytes per pair) disappears with zero plan-shape
-      change (measured ≈ plain per-pair at 20k files even on dup-light
-      corpora).
-    - ``verify_by_class=True``: additionally runs the UDF once per distinct
-      (class_l, class_r) and joins the verdict back — pays extra narrow
-      shuffles + a survivor persist, so it wins only on mega-cluster
-      corpora where many ids share each content AND cross-pair with other
-      classes.
+    Byte-identical pairs take the MASKED equal-content shortcut: they feed
+    the UDF empty strings and a native CASE emits the exact 1.0, so the
+    dominant dup-dense cost (re-shingling equal bytes per pair) disappears
+    with zero plan-shape change.  Value-identical to plain per-pair verify:
+    the UDF is a pure function of the two byte strings and equal sha256
+    means equal bytes.
     """
     surv = pairs_with_est.filter(F.col("j_est") >= cfg.est_low_cut)
-    if not cfg.verify_exact:
-        return surv.filter(F.col("j_est") >= cfg.threshold).withColumn(
-            "j_exact", F.col("j_est")
-        )
     c = docs.select(F.col(id_col), F.col(content_col))
     if cfg.weighted:
         from ..functions.sketch_udfs import make_weighted_jaccard_udf
@@ -360,91 +252,37 @@ def verify_pairs(
     # nondeterministic only forbids that duplication: one ArrowEvalPython,
     # filter evaluated on the already-computed column, identical values.
     exact_j = exact_j.asNondeterministic()
-    if not cfg.verify_by_class:
-        # per-pair verify with the MASKED equal-content shortcut: identical
-        # bytes always verify to exactly 1.0 (both UDFs: equal sets/multisets
-        # -> 1.0, and the empty/empty convention is 1.0 too), so byte-equal
-        # pairs — the dominant verify cost on dup-dense corpora, where every
-        # exact-copy pair used to re-shingle the same content — feed the UDF
-        # EMPTY strings (masked before Arrow serialization: no transfer, ~0
-        # shingle work) and a native CASE emits the 1.0.  Same plan shape as
-        # plain per-pair (two AQE size-gated joins + one sha2 per side), no
-        # extra shuffle.  Pair joins: broadcast when survivors are small,
-        # shuffled hash join on id otherwise (see estimate_pair_jaccard).
-        # coalesce before sha2 (r6, ADVICE): sha2(NULL) is NULL, so a
-        # NULL/NULL pair would skip the equal-content shortcut (and in the
-        # class path below, drop out of the _csha equi-joins entirely).
-        # Both verify UDFs fillna('') and score empty/empty as 1.0, so
-        # classing NULL with '' is value-identical on every path.
-        cs = c.withColumn(
-            "_csha", F.sha2(F.coalesce(F.col(content_col), F.lit("")), 256)
-        )
-        eq = F.col("_csha_l") == F.col("_csha_r")
-        return (
-            surv
-            .join(cs.withColumnsRenamed(
-                {id_col: "id_l", content_col: "content_l", "_csha": "_csha_l"}
-            ), "id_l")
-            .join(cs.withColumnsRenamed(
-                {id_col: "id_r", content_col: "content_r", "_csha": "_csha_r"}
-            ), "id_r")
-            .withColumn(
-                "j_exact",
-                F.when(eq, F.lit(1.0)).otherwise(
-                    exact_j(
-                        F.when(eq, F.lit("")).otherwise(F.col("content_l")),
-                        F.when(eq, F.lit("")).otherwise(F.col("content_r")),
-                    )
-                ),
-            )
-            .drop("content_l", "content_r", "_csha_l", "_csha_r")
-            .filter(F.col("j_exact") >= cfg.threshold)
-        )
-    # ---- class verify: one UDF call per distinct content-class pair -------
-    # surv feeds THREE subtrees below (both endpoint unions + the pair join);
-    # unpersisted it would re-execute the whole sketch->candidate->estimate
-    # upstream each time (measured 3x wall at 20k files)
-    surv = pin(surv)
-    ids = (
-        surv.select(F.col("id_l").alias(id_col))
-        .union(surv.select(F.col("id_r").alias(id_col)))
-        .distinct()
+    # identical bytes always verify to exactly 1.0 (both UDFs: equal
+    # sets/multisets -> 1.0, and the empty/empty convention is 1.0 too); the
+    # masking happens before Arrow serialization, so equal pairs ship nothing.
+    # Pair joins: broadcast when survivors are small, shuffled hash join on
+    # id otherwise (see estimate_pair_jaccard).
+    # coalesce before sha2 (r6, ADVICE): sha2(NULL) is NULL, so a NULL/NULL
+    # pair would skip the equal-content shortcut.  Both verify UDFs
+    # fillna('') and score empty/empty as 1.0, so hashing NULL as '' is
+    # value-identical.
+    cs = c.withColumn(
+        "_csha", F.sha2(F.coalesce(F.col(content_col), F.lit("")), 256)
     )
-    # classes restricted to candidate-TOUCHED docs (left-semi first: at
-    # scale that subset is << the corpus, so the sha pass + rep groupBy
-    # never see untouched content).  Persist: feeds the two id->class map
-    # joins AND the representative extraction.  Lifetime: caller's
-    # cache_scope (see operators.cache).
-    classes = pin(
-        c.join(ids, id_col, "left_semi").withColumn(
-            # coalesce: NULL content must land in the ''-class, not a NULL
-            # sha that never equi-joins (value-identity with the per-pair
-            # path, which feeds NULL to the fillna('') UDF — r6, ADVICE)
-            "_csha", F.sha2(F.coalesce(F.col(content_col), F.lit("")), 256)
-        )
-    )
-    id2c = classes.select(F.col(id_col), F.col("_csha"))
-    # any member represents its class (equal sha256 => equal bytes, so
-    # F.first's nondeterminism cannot change the value)
-    reps = classes.groupBy("_csha").agg(F.first(content_col).alias(content_col))
-    withc = (
-        surv
-        .join(id2c.withColumnsRenamed({id_col: "id_l", "_csha": "_csha_l"}), "id_l")
-        .join(id2c.withColumnsRenamed({id_col: "id_r", "_csha": "_csha_r"}), "id_r")
-        # canonical (unordered) class pair: Jaccard is symmetric
-        .withColumn("_ca", F.least("_csha_l", "_csha_r"))
-        .withColumn("_cb", F.greatest("_csha_l", "_csha_r"))
-    )
-    verdict = (
-        withc.select("_ca", "_cb").distinct()
-        .join(reps.withColumnsRenamed({"_csha": "_ca", content_col: "_content_a"}), "_ca")
-        .join(reps.withColumnsRenamed({"_csha": "_cb", content_col: "_content_b"}), "_cb")
-        .withColumn("j_exact", exact_j(F.col("_content_a"), F.col("_content_b")))
-        .select("_ca", "_cb", "j_exact")
-    )
+    eq = F.col("_csha_l") == F.col("_csha_r")
     return (
-        withc.join(verdict, ["_ca", "_cb"])
-        .select(*surv.columns, "j_exact")
+        surv
+        .join(cs.withColumnsRenamed(
+            {id_col: "id_l", content_col: "content_l", "_csha": "_csha_l"}
+        ), "id_l")
+        .join(cs.withColumnsRenamed(
+            {id_col: "id_r", content_col: "content_r", "_csha": "_csha_r"}
+        ), "id_r")
+        .withColumn(
+            "j_exact",
+            F.when(eq, F.lit(1.0)).otherwise(
+                exact_j(
+                    F.when(eq, F.lit("")).otherwise(F.col("content_l")),
+                    F.when(eq, F.lit("")).otherwise(F.col("content_r")),
+                )
+            ),
+        )
+        .drop("content_l", "content_r", "_csha_l", "_csha_r")
         .filter(F.col("j_exact") >= cfg.threshold)
     )
 
@@ -475,12 +313,6 @@ def dedup_edges(
     sigs = pin(with_signature(docs, cfg, content_col).select(id_col, "sig"))
     bands = band_explode(sigs, cfg, id_col)
     pairs, _ = candidate_pairs(bands, cfg, id_col, on_capped=on_capped)
-    # weighted configs skip the prefilter: the size-ratio bound only holds
-    # for distinct-set Jaccard (see cardinality_prefilter docstring)
-    if cfg.cardinality_prefilter and not cfg.weighted:
-        pairs = cardinality_prefilter(
-            pairs, docs.select(id_col, content_col), cfg, id_col, content_col
-        )
     est = estimate_pair_jaccard(pairs, sigs, cfg, id_col)
     return verify_pairs(est, docs.select(id_col, content_col), cfg, id_col, content_col)
 
@@ -543,19 +375,3 @@ def keep_representatives(
     clustered = assign_clusters(docs, edges, id_col=id_col)
     return clustered.where(F.col("cluster_id") == F.col(id_col)).drop("cluster_id")
 
-
-def exact_duplicates(
-    docs: DataFrame,
-    key_cols: list[str],
-    content_col: str = "content",
-) -> DataFrame:
-    """Exact dedup by content hash: groups with >1 member, fully native
-    (sha2 + groupBy; zero UDFs)."""
-    h = docs.select(
-        *key_cols, F.sha2(F.col(content_col), 256).alias("content_sha256")
-    )
-    return (
-        h.groupBy("content_sha256")
-        .agg(F.count("*").alias("n_copies"))
-        .filter(F.col("n_copies") > 1)
-    )

@@ -22,7 +22,6 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 MEDIA_SCHEMA = (
@@ -228,37 +227,3 @@ def extract_byte_stats(media: DataFrame, n_chunks: int = 8) -> DataFrame:
 
     return media.mapInPandas(run, schema=BYTE_STATS_SCHEMA)
 
-
-def sample_frames(
-    media: DataFrame,
-    every_nth: int = 10,
-) -> DataFrame:
-    """Video frame sampling stub: emits (doc_id, frame_idx) plan rows for each
-    video; the decode itself is the stubbed step.  Demonstrates the explode
-    pattern (one row per frame) that keeps frame work distributable."""
-    return (
-        media.where(F.col("modality") == "video")
-        .select(
-            "doc_id",
-            F.explode(
-                F.sequence(
-                    F.lit(0),
-                    F.greatest(F.coalesce(F.col("meta.n_frames"), F.lit(1)) - 1, F.lit(0)),
-                    F.lit(every_nth),
-                )
-            ).alias("frame_idx"),
-        )
-    )
-
-
-def media_stats(media: DataFrame) -> DataFrame:
-    """Native per-modality profile (no UDF): counts, payload byte stats."""
-    return (
-        media.groupBy("modality")
-        .agg(
-            F.count("*").alias("n_items"),
-            F.sum(F.length("payload")).alias("total_bytes"),
-            F.avg(F.length("payload")).alias("avg_bytes"),
-        )
-        .orderBy("modality")
-    )

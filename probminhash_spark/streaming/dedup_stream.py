@@ -166,32 +166,6 @@ def emit_edges(
         eidx.write_delta(idx_rows, batch_id)
 
 
-def windowed_event_counts(
-    events: DataFrame,
-    window: str = "5 minutes",
-    watermark: str = "10 minutes",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Streaming tumbling-window aggregation with a watermark for late data
-    (the streaming form of __spark_entry__.q_events_tumbling)."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window).alias("w"), F.col("event_type"))
-        .agg(
-            F.count("*").alias("n_events"),
-            F.approx_count_distinct("user_id").alias("n_users_approx"),
-            F.sum("value").alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "n_users_approx",
-            "sum_value",
-        )
-    )
-
-
 class StreamingDeduper:
     """foreachBatch incremental dedup against an accumulating parquet state.
 

@@ -8,7 +8,7 @@ import pytest
 
 from probminhash_spark.config import DedupConfig
 from probminhash_spark.operators.components import assign_clusters, connected_components
-from probminhash_spark.operators.dedup import dedup_edges, exact_duplicates, with_doc_id
+from probminhash_spark.operators.dedup import dedup_edges, with_doc_id
 
 CFG = DedupConfig(
     shingle_mode="char",
@@ -71,13 +71,6 @@ def test_cluster_assignment_matches_oracle(spark, tiny_corpus, spark_files):
         return {frozenset(g) for g in groups.values()}
 
     assert partition(got) == partition(oracle)
-
-
-def test_exact_duplicates_native(spark, spark_files):
-    dups = exact_duplicates(spark_files, ["repo", "path", "commit"]).collect()
-    # fixture plants an exact copy in every cluster (member 1)
-    assert len(dups) >= 1
-    assert all(r["n_copies"] >= 2 for r in dups)
 
 
 def test_sha256_invariant_through_signature_stage(spark, spark_files):
@@ -355,8 +348,9 @@ def test_substring_dup_pairs_planted(spark):
 
 def test_ensure_parallelism_is_plan_side(spark, tmp_path):
     """The parallelism guard must not convert the plan to an RDD (no .rdd):
-    single small files fan out, caller-chosen repartitions are trusted,
-    fileless plans repartition unconditionally."""
+    single small files fan out, scans with enough splits are left alone,
+    caller-chosen repartitions are trusted, driver-local fileless plans
+    fan out and other fileless plans are left alone."""
     import inspect
 
     import pandas as pd
@@ -372,6 +366,17 @@ def test_ensure_parallelism_is_plan_side(spark, tmp_path):
     fanned = ensure_parallelism(scan)
     assert "Repartition" in fanned._jdf.queryExecution().analyzed().toString()
 
+    # a directory of defaultParallelism files scans as that many splits:
+    # already fanned out, returned unchanged
+    many = tmp_path / "many"
+    many.mkdir()
+    for i in range(spark.sparkContext.defaultParallelism):
+        pd.DataFrame({"a": range(50), "text": ["x"] * 50}).to_parquet(
+            str(many / f"part{i}.parquet")
+        )
+    wide = spark.read.parquet(str(many))
+    assert ensure_parallelism(wide) is wide
+
     forced = spark.read.parquet(p).repartition(16)
     assert ensure_parallelism(forced) is forced  # caller's choice respected
 
@@ -386,60 +391,20 @@ def test_ensure_parallelism_is_plan_side(spark, tmp_path):
     assert ensure_parallelism(rng) is rng
 
 
-def test_cardinality_prefilter_drops_mismatched_keeps_similar(spark):
-    """The size-ratio prefilter must drop pairs whose estimated cardinality
-    ratio cannot reach threshold, and must NEVER drop a true near-dup
-    (conservative margin)."""
+def test_weighted_verify_keeps_hot_token_pair(spark):
+    """Weighted configs verify with the multiset Jaccard: a pair sharing one
+    hot repeated token (J_w = 2/3) must survive although its distinct-set
+    Jaccard is only 1/101."""
     import pandas as pd
 
-    from probminhash_spark.operators.dedup import cardinality_prefilter
-
-    rng = np.random.default_rng(3)
-    base = " ".join(f"tok{int(t)}" for t in rng.integers(0, 5000, 400))
-    near = base + " extra token tail"
-    huge = " ".join(f"w{int(t)}" for t in rng.integers(0, 10**6, 20000))
-    docs = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [1, 2, 3], "content": [base, near, huge]})
-    )
-    pairs = spark.createDataFrame(
-        pd.DataFrame({"id_l": [1, 1], "id_r": [2, 3]})
-    )
-    cfg = DedupConfig(threshold=0.8)
-    kept = {
-        (r["id_l"], r["id_r"])
-        for r in cardinality_prefilter(pairs, docs, cfg).collect()
-    }
-    assert (1, 2) in kept  # near-identical sizes survive
-    assert (1, 3) not in kept  # 400-token vs 20k-token can never reach J=0.8
-
-
-def test_cardinality_prefilter_refuses_weighted_configs(spark):
-    """min/max distinct-cardinality does NOT bound weighted Jaccard (a pair
-    with one hot repeated token can have J_w=0.5 at card ratio 0.01), so the
-    prefilter must refuse weighted configs and dedup_edges must skip it."""
-    import dataclasses
-
-    import pandas as pd
-    import pytest
-
-    from probminhash_spark.operators.dedup import cardinality_prefilter
-
-    docs = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [1, 2], "content": ["a b", "a c"]})
-    )
-    pairs = spark.createDataFrame(pd.DataFrame({"id_l": [1], "id_r": [2]}))
-    wcfg = DedupConfig(weighted=True, algo="probminhash3a", cardinality_prefilter=True)
-    with pytest.raises(ValueError, match="unsound for weighted"):
-        cardinality_prefilter(pairs, docs, wcfg)
-    # the e2e path silently skips it for weighted configs: the weighted
-    # regime from the oracle suite must keep its J_w=0.5-style pairs
     hot = "t " * 200  # J_w = 200/300 = 2/3, distinct-card ratio 1/101
     tail = " ".join(f"s{i}" for i in range(100))
     wdocs = spark.createDataFrame(
         pd.DataFrame({"doc_id": [1, 2], "content": [hot.strip(), (hot + tail).strip()]})
     )
-    cfg = dataclasses.replace(
-        wcfg,
+    cfg = DedupConfig(
+        weighted=True,
+        algo="probminhash3a",
         shingle_mode="token",
         shingle_size=1,
         threshold=0.4,
@@ -450,24 +415,7 @@ def test_cardinality_prefilter_refuses_weighted_configs(spark):
     )
     edges = dedup_edges(wdocs, cfg).collect()
     got = {(r["id_l"], r["id_r"]) for r in edges}
-    assert (1, 2) in got, "weighted J_w=0.5 pair must survive (prefilter skipped)"
-
-
-def test_recall_with_cardinality_prefilter_enabled(spark, tiny_corpus, spark_files):
-    """With the SetSketch size-ratio prefilter enabled, recall must hold
-    (the 6-sigma margin keeps the filter a conservative superset)."""
-    import dataclasses
-
-    cfg = dataclasses.replace(CFG, cardinality_prefilter=True)
-    edges = dedup_edges(spark_files, cfg).collect()
-    found = {(min(e["id_l"], e["id_r"]), max(e["id_l"], e["id_r"])) for e in edges}
-    pos = _pos_map(tiny_corpus, spark_files)
-    truth = {
-        (min(pos[a], pos[b]), max(pos[a], pos[b]))
-        for a, b in zip(tiny_corpus.truth_pairs.id_l, tiny_corpus.truth_pairs.id_r)
-    }
-    recall = len(found & truth) / len(truth)
-    assert recall >= 0.99 and found <= truth
+    assert (1, 2) in got, "weighted J_w=2/3 pair must survive verification"
 
 
 def test_exact_pairs_operators_cap_guard_and_star(spark):
@@ -601,41 +549,11 @@ def test_weighted_jaccard_udf_matches_bruteforce(spark):
         assert abs(g - brute(a, b)) < 1e-12, (a[:20], b[:20], g, brute(a, b))
 
 
-def test_class_verify_matches_pair_verify(spark, tiny_corpus, spark_files):
-    """r5 (r4 verdict task #4): verifying once per byte-identical content
-    class must be VALUE-identical to per-pair verification — same edge set,
-    same j_est/j_exact — on a corpus containing both exact copies (shared
-    classes) and near-dups (singleton classes).  Also covers weighted
-    verification (the other UDF branch)."""
-    import dataclasses
-
-    def edge_map(cfg):
-        rows = dedup_edges(spark_files, cfg).collect()
-        return {
-            (r["id_l"], r["id_r"]): (round(r["j_est"], 9), round(r["j_exact"], 9))
-            for r in rows
-        }
-
-    by_class = edge_map(dataclasses.replace(CFG, verify_by_class=True))
-    by_pair = edge_map(dataclasses.replace(CFG, verify_by_class=False))
-    assert by_class == by_pair
-    assert by_class, "fixture produced no edges — vacuous equality"
-
-    wcfg = dataclasses.replace(
-        CFG, algo="probminhash3a", weighted=True, verify_by_class=True
-    )
-    wc = edge_map(wcfg)
-    wp = edge_map(dataclasses.replace(wcfg, verify_by_class=False))
-    assert wc == wp
-    assert wc
-
-
-def test_null_content_class_verify_matches_pair_verify(spark):
-    """r6 (ADVICE): NULL-content rows must survive class verification —
-    sha2(NULL) is NULL and never equi-joins, so without coalesce('') the
-    class path dropped pairs the per-pair path kept (both UDFs fillna('')
-    and score empty/empty as 1.0).  Two NULL docs and an ''-doc must be
-    byte-identical dups of each other on BOTH verify paths."""
+def test_null_content_pair_verify(spark):
+    """r6 (ADVICE): NULL content must take the equal-content shortcut —
+    sha2(NULL) is NULL, so without coalesce('') a NULL/NULL pair would miss
+    it (both verify UDFs fillna('') and score empty/empty as 1.0).  Two NULL
+    docs and an ''-doc must be byte-identical dups of each other."""
     import dataclasses
 
     rows = [
@@ -647,17 +565,10 @@ def test_null_content_class_verify_matches_pair_verify(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id long, content string")
     cfg = dataclasses.replace(CFG, threshold=0.5, est_low_cut=0.0)
-
-    def edges(by_class):
-        c = dataclasses.replace(cfg, verify_by_class=by_class)
-        return {
-            (r["id_l"], r["id_r"]): round(r["j_exact"], 9)
-            for r in dedup_edges(docs, c).collect()
-        }
-
-    per_pair = edges(False)
-    per_class = edges(True)
-    assert per_pair == per_class
-    # the NULL/NULL and NULL/'' pairs verify at exactly 1.0 on both paths
+    per_pair = {
+        (r["id_l"], r["id_r"]): round(r["j_exact"], 9)
+        for r in dedup_edges(docs, cfg).collect()
+    }
+    # the NULL/NULL and NULL/'' pairs verify at exactly 1.0
     assert per_pair.get((1, 2)) == 1.0
     assert {(1, 3), (2, 3)} <= set(per_pair)

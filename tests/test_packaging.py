@@ -73,3 +73,21 @@ def test_parse_ttl_ms_units_and_errors():
     for bad in ("fortnight", "3 fortnights", "-1 seconds", 0, "0 seconds"):
         with pytest.raises(ValueError):
             _parse_ttl_ms(bad)
+
+
+def test_dedup_job_rejects_removed_config_knob(monkeypatch):
+    """A --config naming a field DedupConfig no longer has must fail while
+    the config is parsed, naming the field, before any Spark session."""
+    import pytest
+
+    import jobs.dedup as job
+
+    def no_spark(*a, **k):
+        raise AssertionError("get_spark called before config validation")
+
+    monkeypatch.setattr(job, "get_spark", no_spark)
+    with pytest.raises(TypeError, match="verify_by_class"):
+        job.main(
+            ["--input", "synthetic:4", "--output", "/x",
+             "--config", '{"verify_by_class": true}']
+        )

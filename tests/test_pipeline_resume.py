@@ -58,6 +58,12 @@ def test_config_change_invalidates_checkpoints(spark, tiny_corpus, tmp_path):
     assert res["resumed_stages"] == []
 
 
+def test_default_sketch_identity_is_pinned():
+    """Persisted streaming state resumes only under the same sketch
+    identity; trimming verify-side config fields must not move it."""
+    assert DedupConfig().sketch_identity() == "8a4615a3d618bba4"
+
+
 def test_mega_bucket_star_cap_and_cluster_recall(spark, tmp_path):
     """F5 skew: a flood of identical files (every band bucket > cap) plus a
     viral license header.  The star cap must bound pair expansion to O(size)

@@ -92,11 +92,7 @@ def test_streaming_incremental_dedup(spark, tmp_path):
 
 
 def test_multimodal_feature_extraction_plumbing(spark):
-    from probminhash_spark.operators.multimodal import (
-        extract_features,
-        media_stats,
-        sample_frames,
-    )
+    from probminhash_spark.operators.multimodal import extract_features
 
     rows = [
         (1, "image", b"\x01\x02\x03\x04" * 100, (10, 10, None, None, "fake")),
@@ -116,10 +112,6 @@ def test_multimodal_feature_extraction_plumbing(spark):
     # deterministic fake decode: identical payloads -> identical features
     assert by_id[1]["features"] == by_id[2]["features"]
     assert by_id[5]["features"] == [0.0] * 16
-    frames = sample_frames(media, every_nth=10)
-    assert frames.count() == 10  # frames 0,10,...,90
-    stats = {r["modality"]: r["n_items"] for r in media_stats(media).collect()}
-    assert stats == {"image": 3, "audio": 1, "video": 1}
 
 
 def test_real_decoder_stub_raises(spark):
@@ -577,68 +569,6 @@ def test_real_bmp_and_wav_decode(spark):
     assert np.allclose(feats[2], _audio_features(dec, 16), atol=1e-5)
     assert feats[3].shape == (16,) and feats[4].shape == (16,)  # fallbacks
     assert feats[5].shape == (16,)  # wave.Error payload degraded to fallback
-
-
-def test_windowed_counts_watermark_drops_late_data(spark, tmp_path):
-    """Streaming tumbling windows with a 10-min watermark: a row arriving
-    after the watermark passed its window must be dropped, not re-open the
-    finalized window (append mode, state carried across availableNow runs
-    through the checkpoint)."""
-    import datetime as dt
-
-    import pandas as pd
-
-    from probminhash_spark.streaming.dedup_stream import windowed_event_counts
-
-    base = dt.datetime(2025, 1, 1, 0, 0, 0)
-
-    def wave(rows, name):
-        pdf = pd.DataFrame(
-            {
-                "ts": [base + dt.timedelta(minutes=m) for m, _ in rows],
-                "event_type": [t for _, t in rows],
-                "user_id": list(range(len(rows))),
-                "value": [1.0] * len(rows),
-            }
-        )
-        pdf["ts"] = pdf["ts"].astype("datetime64[us]")  # parquet TIMESTAMP(MICROS)
-        pdf.to_parquet(src / name)
-
-    src = tmp_path / "ev"
-    src.mkdir()
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ck")
-    schema = "ts timestamp, event_type string, user_id long, value double"
-
-    def run():
-        q = (
-            windowed_event_counts(
-                spark.readStream.schema(schema).parquet(str(src))
-            )
-            .writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    # wave 1: 3 events in window [00:00, 00:05) + one at 01:00 that pushes
-    # the watermark to 00:50, finalizing the first window
-    wave([(0, "click"), (1, "click"), (4, "click"), (60, "view")], "w1.parquet")
-    run()
-    got1 = spark.read.parquet(out).toPandas()
-    first = got1[got1.window_start == base]
-    assert len(first) == 1 and int(first.n_events.iloc[0]) == 3
-    # wave 2: a LATE click at 00:02 (window already finalized, watermark
-    # 00:50) must be dropped; 02:00 advances the watermark past 01:00
-    wave([(2, "click"), (120, "view")], "w2.parquet")
-    run()
-    got2 = spark.read.parquet(out).toPandas()
-    first2 = got2[got2.window_start == base]
-    assert len(first2) == 1 and int(first2.n_events.iloc[0]) == 3  # unchanged
-    one_oclock = got2[got2.window_start == base + dt.timedelta(minutes=60)]
-    assert len(one_oclock) == 1 and int(one_oclock.n_events.iloc[0]) == 1
 
 
 def test_stateful_band_candidates_find_cross_batch_dups(spark, tmp_path):
