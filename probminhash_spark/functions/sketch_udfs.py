@@ -14,11 +14,12 @@ import pandas as pd
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
+    ByteType,
     DoubleType,
+    IntegerType,
     LongType,
+    ShortType,
     StringType,
-    StructField,
-    StructType,
 )
 
 from ..config import DedupConfig
@@ -103,24 +104,18 @@ def _sketch_batch_np(texts, cfg: DedupConfig) -> np.ndarray:
 # shrinks proportionally
 _SIG_TYPES = {
     64: (LongType(), np.int64),
-    32: (None, np.int32),  # IntegerType imported lazily below
-    16: (None, np.int16),
-    8: (None, np.int8),
+    32: (IntegerType(), np.int32),
+    16: (ShortType(), np.int16),
+    8: (ByteType(), np.int8),
 }
-
-
-def _sig_spark_type(bits: int):
-    from pyspark.sql.types import ByteType, IntegerType, ShortType
-
-    return {64: LongType(), 32: IntegerType(), 16: ShortType(), 8: ByteType()}[bits]
 
 
 def make_sketch_udf(cfg: DedupConfig):
     """content -> array<long|int|smallint|tinyint> signature of length
     cfg.num_hashes (element width per cfg.sig_bits)."""
-    view_dtype = _SIG_TYPES[cfg.sig_bits][1]
+    spark_type, view_dtype = _SIG_TYPES[cfg.sig_bits]
 
-    @pandas_udf(ArrayType(_sig_spark_type(cfg.sig_bits)))
+    @pandas_udf(ArrayType(spark_type))
     def sketch(content: pd.Series) -> pd.Series:
         texts = content.fillna("").tolist()
         if not texts:
@@ -198,80 +193,57 @@ def make_setsketch_udf(cfg: DedupConfig):
     return registers
 
 
-def make_exact_jaccard_udf(cfg: DedupConfig):
-    """(content_a, content_b) -> exact shingle-set Jaccard, fully vectorized.
+def _pair_jaccard_np(texts_a, texts_b, cfg: DedupConfig) -> np.ndarray:
+    """Per-pair exact multiset Jaccard sum_t min(c_a, c_b) / sum_t max(c_a, c_b)
+    over the two sides' shingle multisets — the quantity the ProbMinHash
+    family estimates (J_p, ``probminhash3.rs`` docs; equals J_w for integer
+    multiplicities).  Set configs pass unit counts, which makes it the
+    distinct-set Jaccard |A & B| / |A | B|.  Empty/empty scores 1.0.
 
-    Verify-stage oracle: for a batch of N candidate pairs, shingles both sides
-    in two bulk passes and counts per-pair intersections with one lexsort —
-    no per-pair Python loops.
+    One lexsort over both sides' (pair, hash, side) rows finds the common
+    shingles (a run spanning both sides) — no per-pair Python loops.
     """
+    n = len(texts_a)
+    da, ha, ca = _shingle_multiset(texts_a, cfg)
+    db, hb, cb = _shingle_multiset(texts_b, cfg)
+    pair = np.concatenate([da, db])
+    hsh = np.concatenate([ha, hb])
+    side = np.concatenate(
+        [np.zeros(da.shape[0], np.int8), np.ones(db.shape[0], np.int8)]
+    )
+    cnt = (
+        np.concatenate([ca, cb]).astype(np.float64)
+        if cfg.weighted
+        else np.ones(pair.shape[0])
+    )
+    total = np.bincount(pair, weights=cnt, minlength=n)  # N_a + N_b
+    order = np.lexsort((side, hsh, pair))
+    p, h, s, c = pair[order], hsh[order], side[order], cnt[order]
+    match = (p[1:] == p[:-1]) & (h[1:] == h[:-1]) & (s[:-1] == 0) & (s[1:] == 1)
+    summin = np.bincount(
+        p[1:][match], weights=np.minimum(c[1:], c[:-1])[match], minlength=n
+    )
+    denom = total - summin  # sum max = N_a + N_b - sum min
+    with np.errstate(invalid="ignore", divide="ignore"):
+        return np.where(denom > 0, summin / denom, 1.0)
+
+
+def make_pair_jaccard_udf(cfg: DedupConfig):
+    """(content_a, content_b) -> exact shingle Jaccard of each pair
+    (:func:`_pair_jaccard_np`): multiset for weighted configs, distinct-set
+    for the others.  The verify-stage oracle."""
 
     @pandas_udf(DoubleType())
-    def exact_j(content_a: pd.Series, content_b: pd.Series) -> pd.Series:
-        n = len(content_a)
-        if n == 0:
+    def pair_j(content_a: pd.Series, content_b: pd.Series) -> pd.Series:
+        if len(content_a) == 0:
             return pd.Series([], dtype=np.float64)
-        da, ha, _ = _shingle_multiset(content_a.fillna("").tolist(), cfg)
-        db, hb, _ = _shingle_multiset(content_b.fillna("").tolist(), cfg)
-        size_a = np.bincount(da, minlength=n).astype(np.float64)
-        size_b = np.bincount(db, minlength=n).astype(np.float64)
-        # count per-pair common distinct shingles: concat both sides with a
-        # side tag, sort by (pair, hash); a run spanning both sides = common
-        pair = np.concatenate([da, db])
-        hsh = np.concatenate([ha, hb])
-        side = np.concatenate(
-            [np.zeros(da.shape[0], np.int8), np.ones(db.shape[0], np.int8)]
+        return pd.Series(
+            _pair_jaccard_np(
+                content_a.fillna("").tolist(), content_b.fillna("").tolist(), cfg
+            )
         )
-        order = np.lexsort((side, hsh, pair))
-        p, h, s = pair[order], hsh[order], side[order]
-        both = np.zeros(n, dtype=np.float64)
-        if p.size > 1:
-            match = (p[1:] == p[:-1]) & (h[1:] == h[:-1]) & (s[:-1] == 0) & (s[1:] == 1)
-            np.add.at(both, p[1:][match], 1.0)
-        union = size_a + size_b - both
-        with np.errstate(invalid="ignore", divide="ignore"):
-            j = np.where(union > 0, both / union, 1.0)
-        return pd.Series(j)
 
-    return exact_j
-
-
-def make_weighted_jaccard_udf(cfg: DedupConfig):
-    """(content_a, content_b) -> exact WEIGHTED (multiset) Jaccard
-    J_w = sum_t min(c_a, c_b) / sum_t max(c_a, c_b) — the quantity the
-    ProbMinHash family estimates (J_p, ``probminhash3.rs`` docs; equals J_w
-    for integer multiplicities).  Vectorized like make_exact_jaccard_udf:
-    one lexsort over both sides' (pair, hash, side) finds common runs."""
-
-    @pandas_udf(DoubleType())
-    def weighted_j(content_a: pd.Series, content_b: pd.Series) -> pd.Series:
-        n = len(content_a)
-        if n == 0:
-            return pd.Series([], dtype=np.float64)
-        da, ha, ca = _shingle_multiset(content_a.fillna("").tolist(), cfg)
-        db, hb, cb = _shingle_multiset(content_b.fillna("").tolist(), cfg)
-        tot_a = np.zeros(n, dtype=np.float64)
-        tot_b = np.zeros(n, dtype=np.float64)
-        np.add.at(tot_a, da, ca.astype(np.float64))
-        np.add.at(tot_b, db, cb.astype(np.float64))
-        pair = np.concatenate([da, db])
-        hsh = np.concatenate([ha, hb])
-        side = np.concatenate(
-            [np.zeros(da.shape[0], np.int8), np.ones(db.shape[0], np.int8)]
-        )
-        cnt = np.concatenate([ca, cb]).astype(np.float64)
-        order = np.lexsort((side, hsh, pair))
-        p, h, s, c = pair[order], hsh[order], side[order], cnt[order]
-        summin = np.zeros(n, dtype=np.float64)
-        if p.size > 1:
-            match = (p[1:] == p[:-1]) & (h[1:] == h[:-1]) & (s[:-1] == 0) & (s[1:] == 1)
-            np.add.at(summin, p[1:][match], np.minimum(c[1:], c[:-1])[match])
-        denom = tot_a + tot_b - summin  # sum max = Na + Nb - sum min
-        with np.errstate(invalid="ignore", divide="ignore"):
-            j = np.where(denom > 0, summin / denom, 1.0)
-        return pd.Series(j)
-
-    return weighted_j
+    return pair_j
 
 
 def make_simhash_udf(cfg: DedupConfig):
@@ -354,7 +326,6 @@ def make_lang_id_udf():
     Vectorized: one tokenization pass per batch; per-language membership via
     sorted-array searchsorted (no per-row Python)."""
     from ..kernels.shingles import token_hashes
-    from ..kernels.hashes import mix64
 
     lang_tables = {}
     for lang, words in _STOPWORDS.items():
@@ -416,9 +387,7 @@ def make_fingerprint_udf(window: int = 16, k: int = 8):
             sdocs = np.nonzero(short)[0]
             docs_w = np.concatenate([docs_w, sdocs])
             mins_w = np.concatenate([mins_w, whole[sdocs]])
-        from ..kernels.shingles import dedupe_counts as _dc
-
-        dd, mm, _ = _dc(docs_w, mins_w)
+        dd, mm, _ = dedupe_counts(docs_w, mins_w)
         bounds = np.searchsorted(dd, np.arange(n + 1))
         vals = mm.view(np.int64)
         out = [vals[bounds[i] : bounds[i + 1]] for i in range(n)]

@@ -29,7 +29,7 @@ from __future__ import annotations
 import numpy as np
 
 from .hashes import hash_u64
-from .rng import Xoshiro256pp, splitmix64_mix, _umul128
+from .rng import Xoshiro256pp, splitmix64_mix
 
 U64 = np.uint64
 _LARGE = float(np.uint32(0xFFFFFFFF))
@@ -181,8 +181,3 @@ def revoptdens_minhash_batch(
             passes += 1
             empty_left = (vals[need_docs] >= _LARGE).sum()
     return vals, winner
-
-
-def minhash_jaccard(sig_a: np.ndarray, sig_b: np.ndarray) -> float:
-    """Equal-slot fraction (``jaccard.rs:9-19``; any PartialEq slot type)."""
-    return float(np.mean(sig_a == sig_b))

@@ -8,16 +8,13 @@ import numpy as np
 
 
 def sketch_jaccard(sig_a: np.ndarray, sig_b: np.ndarray) -> float:
-    """Equal-slot fraction Ĵ = #equal / m (``jaccard.rs:9-19``, ``:27-41``)."""
+    """Equal-slot fraction Ĵ = #equal / m (``jaccard.rs:9-19``, ``:27-41``) —
+    the one estimator for every sketch family: minhash slots, SuperMinHash
+    values (``superminhasher.rs:278-302``) and SetSketch registers."""
     sig_a = np.asarray(sig_a)
     sig_b = np.asarray(sig_b)
     assert sig_a.shape == sig_b.shape, "unequal sketch lengths"
     return float(np.mean(sig_a == sig_b))
-
-
-def sketch_jaccard_rows(sigs_a: np.ndarray, sigs_b: np.ndarray) -> np.ndarray:
-    """Row-wise Ĵ for stacked signature pairs (verify stage, vectorized)."""
-    return (np.asarray(sigs_a) == np.asarray(sigs_b)).mean(axis=1)
 
 
 def exact_jaccard(set_a, set_b) -> float:

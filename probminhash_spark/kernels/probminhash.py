@@ -35,12 +35,6 @@ from .rng import ExpRestricted01, Xoshiro256pp
 U64 = np.uint64
 
 
-def _xoshiro_from_state(state: np.ndarray) -> Xoshiro256pp:
-    rng = object.__new__(Xoshiro256pp)
-    rng.s = state
-    return rng
-
-
 def _argmin_reduce(flat_keys, values, payload, size):
     """Per-key (min value, payload of min) over candidate arrays."""
     order = np.lexsort((values, flat_keys))
@@ -130,7 +124,7 @@ def probminhash3a_batch(
 
     i = 1
     while a_doc.size and i <= max_rounds:
-        rng = _xoshiro_from_state(a_state)
+        rng = Xoshiro256pp.from_state(a_state)
         e = exp01.sample(rng)
         k = rng.next_below(m).astype(np.int64)
         h = a_winv * (i - 1) + a_winv * e
@@ -190,7 +184,7 @@ def probminhash3a_sha_single(byte_keys, weights, m):
     doc = np.zeros(a_item.shape[0], dtype=np.int64)
     i = 1
     while a_item.size:
-        rng = _xoshiro_from_state(a_state)
+        rng = Xoshiro256pp.from_state(a_state)
         e = exp01.sample(rng)
         k = rng.next_below(m).astype(np.int64)
         h = a_winv * (i - 1) + a_winv * e

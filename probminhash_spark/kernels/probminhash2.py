@@ -28,12 +28,6 @@ from .rng import Xoshiro256pp, exp1
 U64 = np.uint64
 
 
-def _xoshiro_from_state(state):
-    rng = object.__new__(Xoshiro256pp)
-    rng.s = state
-    return rng
-
-
 def probminhash2_batch(
     doc_idx: np.ndarray,
     item_hash: np.ndarray,
@@ -67,7 +61,7 @@ def probminhash2_batch(
         items = item_hash[lo:hi]
         winv = 1.0 / weights[lo:hi]
         nl = docs.shape[0]
-        rng = _xoshiro_from_state(Xoshiro256pp(seeds[lo:hi]).s)
+        rng = Xoshiro256pp(seeds[lo:hi])
         v = np.tile(np.arange(m, dtype=np.int32), (nl, 1))
         prow = np.arange(nl)
         h = winv * exp1(rng)

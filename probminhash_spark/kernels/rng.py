@@ -73,6 +73,14 @@ class Xoshiro256pp:
         seeds = np.atleast_1d(np.asarray(seeds, dtype=U64))
         self.s = splitmix64_stream(seeds, 4)  # (n, 4)
 
+    @classmethod
+    def from_state(cls, state: np.ndarray) -> "Xoshiro256pp":
+        """Resume lanes from an (n, 4) state array (shared, not copied) —
+        e.g. the surviving rows of an earlier generator's ``s``."""
+        rng = object.__new__(cls)
+        rng.s = state
+        return rng
+
     @property
     def n(self) -> int:
         return self.s.shape[0]

@@ -58,12 +58,6 @@ class SetSketchParams:
         return (max(b_inf, 0.0), jsup)
 
 
-def _xoshiro_from_state(state):
-    rng = object.__new__(Xoshiro256pp)
-    rng.s = state
-    return rng
-
-
 def setsketch_batch(
     doc_idx: np.ndarray,
     item_hash: np.ndarray,
@@ -106,7 +100,7 @@ def setsketch_batch(
         hi = min(lo + lanes_per_chunk, n)
         docs_m = doc_idx[lo:hi] * m
         nl = docs_m.shape[0]
-        rng = _xoshiro_from_state(Xoshiro256pp(seeds[lo:hi]).s)
+        rng = Xoshiro256pp(seeds[lo:hi])
         v = np.tile(np.arange(m, dtype=np.int32), (nl, 1))  # FY value array
         rows = np.arange(nl)
         x = np.zeros(nl, dtype=np.float64)
@@ -140,11 +134,6 @@ def setsketch_cardinality(regs: np.ndarray, params: SetSketchParams | None = Non
 def setsketch_merge(regs_a: np.ndarray, regs_b: np.ndarray) -> np.ndarray:
     """Union sketch = element-wise max (``setsketcher.rs:428-446``)."""
     return np.maximum(regs_a, regs_b)
-
-
-def setsketch_jaccard(regs_a: np.ndarray, regs_b: np.ndarray) -> float:
-    """Equal-register fraction estimator (``jaccard.rs:27-41``)."""
-    return float(np.mean(regs_a == regs_b))
 
 
 def setsketch_jaccard_mle_b1(

@@ -34,12 +34,6 @@ U64 = np.uint64
 _LARGE = float(np.uint32(0xFFFFFFFF))  # init value, superminhasher.rs:125
 
 
-def _xoshiro_from_state(state: np.ndarray) -> Xoshiro256pp:
-    rng = object.__new__(Xoshiro256pp)
-    rng.s = state
-    return rng
-
-
 def superminhash_batch(
     doc_idx: np.ndarray,
     item_hash: np.ndarray,
@@ -68,11 +62,10 @@ def superminhash_batch(
         hi = min(lo + lanes_per_chunk, n)
         docs = doc_idx[lo:hi]
         items = item_hash[lo:hi]
-        state = Xoshiro256pp(seeds[lo:hi]).s
         nl = docs.shape[0]
         p = np.tile(np.arange(m, dtype=np.int32), (nl, 1))
         prow = np.arange(nl)  # live lane -> row in p
-        rng = _xoshiro_from_state(state)
+        rng = Xoshiro256pp(seeds[lo:hi])
         for j in range(m):
             live = doc_upper[docs] >= j
             if not live.all():
@@ -133,7 +126,7 @@ def superminhash2_batch(
         hi = min(lo + lanes_per_chunk, n)
         docs = doc_idx[lo:hi]
         items = item_hash[lo:hi]
-        rng = _xoshiro_from_state(Xoshiro256pp(seeds[lo:hi]).s)
+        rng = Xoshiro256pp(seeds[lo:hi])
         nl = docs.shape[0]
         v = np.tile(np.arange(m, dtype=np.int32), (nl, 1))
         prow = np.arange(nl)
@@ -175,9 +168,3 @@ def superminhash_single(items, m, hasher="fnv1a64"):
         np.zeros(items.shape[0], dtype=np.int64), items, 1, m, hasher
     )
     return vals[0], win[0]
-
-
-def superminhash_jaccard(sk_a: np.ndarray, sk_b: np.ndarray) -> float:
-    """Equal-slot fraction estimator (``superminhasher.rs:278-302``)."""
-    assert sk_a.shape == sk_b.shape
-    return float(np.mean(sk_a == sk_b))

@@ -17,7 +17,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from ..config import DedupConfig
-from ..functions.sketch_udfs import make_exact_jaccard_udf, make_sketch_udf
+from ..functions.sketch_udfs import make_pair_jaccard_udf, make_sketch_udf
 from .cache import pin
 
 
@@ -227,8 +227,9 @@ def verify_pairs(
 
     Joins content back only for pairs above ``est_low_cut`` (the cheap filter
     runs first, so the expensive re-shingle UDF sees a tiny fraction).
-    Weighted configs verify with the WEIGHTED (multiset) Jaccard — the
-    quantity their sketches estimate — set configs with distinct-set Jaccard.
+    One pair UDF (``make_pair_jaccard_udf``) scores the multiset Jaccard the
+    sketches estimate: weighted configs use shingle counts, set configs unit
+    counts (distinct-set Jaccard).
 
     Byte-identical pairs take the MASKED equal-content shortcut: they feed
     the UDF empty strings and a native CASE emits the exact 1.0, so the
@@ -239,27 +240,21 @@ def verify_pairs(
     """
     surv = pairs_with_est.filter(F.col("j_est") >= cfg.est_low_cut)
     c = docs.select(F.col(id_col), F.col(content_col))
-    if cfg.weighted:
-        from ..functions.sketch_udfs import make_weighted_jaccard_udf
-
-        exact_j = make_weighted_jaccard_udf(cfg)
-    else:
-        exact_j = make_exact_jaccard_udf(cfg)
     # r6 perf (guide §4.4): the j_exact column feeds both the projection and
     # the >= threshold filter; the optimizer pushes the filter below the
     # projection and DUPLICATES the UDF (two ArrowEvalPython nodes — every
     # surviving pair re-shingles twice).  The function is pure, so marking it
     # nondeterministic only forbids that duplication: one ArrowEvalPython,
     # filter evaluated on the already-computed column, identical values.
-    exact_j = exact_j.asNondeterministic()
-    # identical bytes always verify to exactly 1.0 (both UDFs: equal
-    # sets/multisets -> 1.0, and the empty/empty convention is 1.0 too); the
-    # masking happens before Arrow serialization, so equal pairs ship nothing.
+    exact_j = make_pair_jaccard_udf(cfg).asNondeterministic()
+    # identical bytes always verify to exactly 1.0 (equal multisets -> 1.0,
+    # and the empty/empty convention is 1.0 too); the masking happens before
+    # Arrow serialization, so equal pairs ship nothing.
     # Pair joins: broadcast when survivors are small, shuffled hash join on
     # id otherwise (see estimate_pair_jaccard).
     # coalesce before sha2 (r6, ADVICE): sha2(NULL) is NULL, so a NULL/NULL
-    # pair would skip the equal-content shortcut.  Both verify UDFs
-    # fillna('') and score empty/empty as 1.0, so hashing NULL as '' is
+    # pair would skip the equal-content shortcut.  The verify UDF applies
+    # fillna('') and scores empty/empty as 1.0, so hashing NULL as '' is
     # value-identical.
     cs = c.withColumn(
         "_csha", F.sha2(F.coalesce(F.col(content_col), F.lit("")), 256)

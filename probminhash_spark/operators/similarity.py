@@ -18,11 +18,13 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
 
+from ..config import DedupConfig
 from ..kernels.rng import Xoshiro256pp
+from .dedup import candidate_pairs
 
 U64 = np.uint64
 
@@ -43,6 +45,41 @@ def with_unit_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     )
 
 
+def _rerank_topk(
+    vectors: DataFrame,
+    queries: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    cand: DataFrame | None = None,
+) -> DataFrame:
+    """Exact-cosine top-k per query over the candidate (query_id,
+    neighbor_id) pairs ``cand``, or over every other vector when ``cand`` is
+    None.  Queries are broadcast (small side by construction); ties break
+    on the smaller neighbor id."""
+    v = with_unit_norm(vectors, vec_col).select(
+        F.col(id_col).alias("neighbor_id"), "e", "nrm"
+    )
+    q = F.broadcast(
+        with_unit_norm(queries, vec_col).select(
+            F.col(id_col).alias("query_id"), F.col("e").alias("qe"), F.col("nrm").alias("qn")
+        )
+    )
+    if cand is None:
+        pairs = q.join(v, F.col("query_id") != F.col("neighbor_id"))
+    else:
+        pairs = cand.join(q, "query_id").join(v, "neighbor_id")
+    scored = pairs.withColumn(
+        "cosine", _norm_dot_cols("qe", "e") / (F.col("qn") * F.col("nrm"))
+    ).select("query_id", "neighbor_id", "cosine")
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rk", F.row_number().over(w))
+        .where(F.col("rk") <= k)
+        .orderBy("query_id", "rk")
+    )
+
+
 def cosine_topk_bruteforce(
     vectors: DataFrame,
     queries: DataFrame,
@@ -51,29 +88,8 @@ def cosine_topk_bruteforce(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k neighbors per query (query rows are excluded as their own
-    neighbor).  Queries are broadcast (small side by construction)."""
-    v = with_unit_norm(vectors, vec_col).select(
-        F.col(id_col).alias("neighbor_id"), "e", "nrm"
-    )
-    q = with_unit_norm(queries, vec_col).select(
-        F.col(id_col).alias("query_id"), F.col("e").alias("qe"), F.col("nrm").alias("qn")
-    )
-    scored = (
-        F.broadcast(q)
-        .join(v, F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", _norm_dot_cols("qe", "e") / (F.col("qn") * F.col("nrm")))
-        .select("query_id", "neighbor_id", "cosine")
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .orderBy("query_id", "rk")
-    )
+    neighbor)."""
+    return _rerank_topk(vectors, queries, k, id_col, vec_col)
 
 
 def make_hyperplane_udf(dim: int, n_bits: int = 64, seed: int = 0xC0FFEE):
@@ -164,26 +180,7 @@ def cosine_topk_lsh(
         .select("query_id", "neighbor_id")
         .dropDuplicates()
     )
-    v = with_unit_norm(vectors, vec_col).select(
-        F.col(id_col).alias("neighbor_id"), "e", "nrm"
-    )
-    q = with_unit_norm(queries, vec_col).select(
-        F.col(id_col).alias("query_id"), F.col("e").alias("qe"), F.col("nrm").alias("qn")
-    )
-    scored = (
-        cand.join(F.broadcast(q), "query_id")
-        .join(v, "neighbor_id")
-        .withColumn("cosine", _norm_dot_cols("qe", "e") / (F.col("qn") * F.col("nrm")))
-        .select("query_id", "neighbor_id", "cosine")
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .orderBy("query_id", "rk")
-    )
+    return _rerank_topk(vectors, queries, k, id_col, vec_col, cand)
 
 
 def _train_ivf_centroids(
@@ -270,26 +267,7 @@ def cosine_topk_ivf(
         .select("query_id", "neighbor_id")
         .dropDuplicates()
     )
-    v = with_unit_norm(vectors, vec_col).select(
-        F.col(id_col).alias("neighbor_id"), "e", "nrm"
-    )
-    q = with_unit_norm(queries, vec_col).select(
-        F.col(id_col).alias("query_id"), F.col("e").alias("qe"), F.col("nrm").alias("qn")
-    )
-    scored = (
-        cand.join(F.broadcast(q), "query_id")
-        .join(v, "neighbor_id")
-        .withColumn("cosine", _norm_dot_cols("qe", "e") / (F.col("qn") * F.col("nrm")))
-        .select("query_id", "neighbor_id", "cosine")
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .orderBy("query_id", "rk")
-    )
+    return _rerank_topk(vectors, queries, k, id_col, vec_col, cand)
 
 
 def embedding_neardup_pairs(
@@ -302,7 +280,11 @@ def embedding_neardup_pairs(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """All pairs with cosine >= threshold via hyperplane-LSH blocking +
-    exact verification (the embedding analogue of the minhash dedup path)."""
+    exact verification (the embedding analogue of the minhash dedup path).
+
+    A band bucket over ``DedupConfig().bucket_cap`` members raises
+    ``RuntimeError`` (``candidate_pairs(on_capped="fail")``): the output is
+    compared with a brute-force oracle, so capping must never be silent."""
     n_bands = n_bits // band_bits
     sig_udf = make_hyperplane_udf(dim, n_bits)
     sig = vectors.withColumn("hsig", sig_udf(F.col(vec_col)))
@@ -310,23 +292,7 @@ def embedding_neardup_pairs(
     bands = sig.select(
         F.col(id_col), F.explode(F.expr(band_expr)).alias("bk")
     ).select(id_col, "bk.band_id", "bk.band_key")
-    buckets = bands.groupBy("band_id", "band_key").agg(
-        F.array_sort(F.collect_list(id_col)).alias("ids")
-    )
-    pairs = (
-        buckets.where(F.size("ids").between(2, 1000))
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (x, i) ->"
-                    " transform(slice(ids, i + 2, size(ids) - i - 1),"
-                    " y -> struct(x AS id_l, y AS id_r))))"
-                )
-            ).alias("p")
-        )
-        .select("p.id_l", "p.id_r")
-        .dropDuplicates()
-    )
+    pairs, _ = candidate_pairs(bands, DedupConfig(), id_col, on_capped="fail")
     v = with_unit_norm(vectors, vec_col).select(F.col(id_col), "e", "nrm")
     # no broadcast hint: AQE size-gates the pair join at runtime (broadcast
     # when small, shuffled hash join when the candidate set is large)

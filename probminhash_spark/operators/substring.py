@@ -19,7 +19,7 @@ not a Spark-shaped object; the equivalent distributed plan is:
    ``size(array_intersect(grams_l, grams_r)) > 0`` on char-based L-gram
    arrays (whole-stage codegen, char semantics identical to the DuckDB
    oracle).  At 10^12 scale swap the array verifier for the byte-hash kernel
-   (``make_exact_jaccard_udf`` with shingle_size=L) to avoid materializing
+   (``make_pair_jaccard_udf`` with shingle_size=L) to avoid materializing
    gram strings; byte-length >= char-length keeps the anchor guarantee.
 
 Fingerprint anchoring is byte-based (the winnowing kernel), verification is

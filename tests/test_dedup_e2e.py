@@ -516,14 +516,14 @@ def test_keep_representatives(spark, tiny_corpus, spark_files):
 
 
 def test_weighted_jaccard_udf_matches_bruteforce(spark):
-    """make_weighted_jaccard_udf == multiset min/max Jaccard computed the
-    slow way on token counters."""
+    """make_pair_jaccard_udf on a weighted config == multiset min/max
+    Jaccard computed the slow way on token counters."""
     import collections
     import re
 
     import pandas as pd
 
-    from probminhash_spark.functions.sketch_udfs import make_weighted_jaccard_udf
+    from probminhash_spark.functions.sketch_udfs import make_pair_jaccard_udf
 
     rng = np.random.default_rng(12)
     vocab = [f"w{i}" for i in range(50)]
@@ -534,7 +534,9 @@ def test_weighted_jaccard_udf_matches_bruteforce(spark):
     pairs = [(text(80), text(80)) for _ in range(20)] + [("", ""), ("a a a", "a b")]
     pdf = pd.DataFrame({"a": [p[0] for p in pairs], "b": [p[1] for p in pairs]})
     df = spark.createDataFrame(pdf)
-    wj = make_weighted_jaccard_udf(DedupConfig(shingle_mode="token", shingle_size=1))
+    wj = make_pair_jaccard_udf(
+        DedupConfig(shingle_mode="token", shingle_size=1, weighted=True)
+    )
     got = [r["j"] for r in df.select(wj("a", "b").alias("j")).collect()]
 
     def brute(a, b):
@@ -552,7 +554,7 @@ def test_weighted_jaccard_udf_matches_bruteforce(spark):
 def test_null_content_pair_verify(spark):
     """r6 (ADVICE): NULL content must take the equal-content shortcut —
     sha2(NULL) is NULL, so without coalesce('') a NULL/NULL pair would miss
-    it (both verify UDFs fillna('') and score empty/empty as 1.0).  Two NULL
+    it (the verify UDF applies fillna('') and scores empty/empty as 1.0).  Two NULL
     docs and an ''-doc must be byte-identical dups of each other."""
     import dataclasses
 

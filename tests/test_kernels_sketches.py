@@ -6,14 +6,13 @@ uses (SURVEY.md §5.1): canonical range fixtures with known exact Jaccard,
 import numpy as np
 import pytest
 
-from probminhash_spark.kernels.densminhash import minhash_jaccard, optdens_minhash_batch
+from probminhash_spark.kernels.densminhash import optdens_minhash_batch
 from probminhash_spark.kernels.jaccard import exact_weighted_jaccard, sigma, sketch_jaccard
 from probminhash_spark.kernels.probminhash import probminhash3a_batch, probminhash3a_single
 from probminhash_spark.kernels.setsketch import (
     SetSketchParams,
     setsketch_batch,
     setsketch_cardinality,
-    setsketch_jaccard,
     setsketch_jaccard_mle_b1,
     setsketch_merge,
 )
@@ -123,7 +122,7 @@ def test_optdens_range_fixture_3sigma():
     doc_idx = np.concatenate([np.zeros(VA.size, np.int64), np.ones(VB.size, np.int64)])
     items = np.concatenate([VA, VB])
     vals, win = optdens_minhash_batch(doc_idx, items, 2, m, hasher="fnv1a64")
-    jhat = minhash_jaccard(win[0], win[1])
+    jhat = sketch_jaccard(win[0], win[1])
     # densification adds variance at m > n; allow 4 sigma
     assert abs(jhat - J_AB) < 4 * sigma(J_AB, m)
 
@@ -142,7 +141,7 @@ def test_setsketch_jaccard_and_bounds():
     doc_idx = np.concatenate([np.zeros(VA.size, np.int64), np.ones(VB.size, np.int64)])
     items = np.concatenate([VA, VB])
     regs = setsketch_batch(doc_idx, items, 2, p, hasher="fnv1a64")
-    jhat = setsketch_jaccard(regs[0], regs[1])
+    jhat = sketch_jaccard(regs[0], regs[1])
     lo, hi = p.jaccard_bounds(jhat)
     assert lo <= hi
     assert abs(jhat - J_AB) < 4 * sigma(J_AB, p.m)
@@ -194,10 +193,7 @@ def test_setsketch_mle_golden_section_low_j():
     """S21 (setsketcher.rs:571-672) mirrored on the reference's own low-J
     regime (test_mle_1, setsketcher.rs:967-1019): va=0..1000, vb=995..2000,
     m=6000, J_exact = 5/2000 = 0.0025."""
-    from probminhash_spark.kernels.setsketch import (
-        setsketch_jaccard,
-        setsketch_jaccard_mle,
-    )
+    from probminhash_spark.kernels.setsketch import setsketch_jaccard_mle
 
     p = SetSketchParams(m=6000)
     va = np.arange(0, 1000, dtype=np.int64).astype(U64)
@@ -205,7 +201,7 @@ def test_setsketch_mle_golden_section_low_j():
     jexact = 5 / 2000
     ra = setsketch_batch(np.zeros(va.size, np.int64), va, 1, p, hasher="fnv1a64")
     rb = setsketch_batch(np.zeros(vb.size, np.int64), vb, 1, p, hasher="fnv1a64")
-    jac = setsketch_jaccard(ra[0], rb[0])
+    jac = sketch_jaccard(ra[0], rb[0])
     s = sigma(jexact, p.m)
     assert 0.0 <= jac < jexact + 3 * s  # the reference's own acceptance
     jmle = setsketch_jaccard_mle(ra[0], rb[0], p)

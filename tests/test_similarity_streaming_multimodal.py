@@ -62,6 +62,20 @@ def test_embedding_neardup_pairs_exact_verification(spark):
         assert True  # precision enforced by exact cosine >= threshold
 
 
+def test_embedding_neardup_pairs_fails_on_capped_bucket(spark):
+    """An over-cap band bucket must raise (the operator's output is checked
+    against a brute-force oracle), never silently drop its pairs."""
+    from probminhash_spark.operators.cache import cache_scope
+    from probminhash_spark.operators.similarity import embedding_neardup_pairs
+
+    v = np.random.default_rng(6).normal(size=64).astype(np.float32)
+    df = spark.createDataFrame(
+        pd.DataFrame({"vec_id": range(2001), "embedding": [v] * 2001})
+    )
+    with cache_scope(), pytest.raises(RuntimeError, match="bucket_cap"):
+        embedding_neardup_pairs(df, threshold=0.99, dim=64).collect()
+
+
 def test_streaming_incremental_dedup(spark, tmp_path):
     from probminhash_spark.config import DedupConfig
     from probminhash_spark.corpus import generate_files
