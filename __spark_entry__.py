@@ -490,7 +490,7 @@ def dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def dedup_clusters_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full pipeline end-to-end: LSH edges (sketch -> band -> verify) feed
-    large-star/small-star connected components.  Oracle = the same
+    connected components (``operators/components.py``).  Oracle = the same
     recursive-CTE closure as dedup_clusters: the LSH edge set coincides with
     the brute-force edge set on this corpus (see dedup_minhash_lsh's
     oracle-equivalence assumptions, asserted via on_capped='fail')."""

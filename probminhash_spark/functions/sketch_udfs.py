@@ -273,9 +273,9 @@ def make_simhash_udf(cfg: DedupConfig):
     return simhash
 
 
-def make_ordminhash_udf(m: int = 32, l: int = 2, seed: int = 0x5EED):
-    """content -> order-sensitive edit-distance signature (ProbOrdMinHash2,
-    S27/S28) over the document's token-hash sequence.
+def _ordminhash_np(texts, m: int, l: int, seed: int) -> np.ndarray:
+    """(ndocs, m) i64 ProbOrdMinHash2 signatures over each text's token-hash
+    sequence (S27/S28): the body of :func:`make_ordminhash_udf`.
 
     Uses the cross-doc vectorized kernel (``probordminhash2_batch``): the
     l-minima store is sequential WITHIN a doc (``probordminhash2.rs:85-115``)
@@ -287,23 +287,28 @@ def make_ordminhash_udf(m: int = 32, l: int = 2, seed: int = 0x5EED):
     from ..kernels.probordminhash2 import probordminhash2_batch
     from ..kernels.shingles import token_hashes
 
+    n = len(texts)
+    d, th = token_hashes(texts)
+    counts = np.bincount(d, minlength=n)
+    short = np.nonzero(counts < l)[0]
+    if short.size:
+        pad_docs = np.repeat(short, l - counts[short])
+        d = np.concatenate([d, pad_docs])
+        th = np.concatenate([th, np.zeros(pad_docs.size, dtype=U64)])
+        order = np.argsort(d, kind="stable")
+        d, th = d[order], th[order]
+    return probordminhash2_batch(d, th, n, m, l, seed).view(np.int64)
+
+
+def make_ordminhash_udf(m: int = 32, l: int = 2, seed: int = 0x5EED):
+    """content -> order-sensitive edit-distance signature (:func:`_ordminhash_np`)."""
+
     @pandas_udf(ArrayType(LongType()))
     def ordminhash(content: pd.Series) -> pd.Series:
         texts = content.fillna("").tolist()
-        n = len(texts)
-        if n == 0:
+        if not texts:
             return pd.Series([], dtype=object)
-        d, th = token_hashes(texts)
-        counts = np.bincount(d, minlength=n)
-        short = np.nonzero(counts < l)[0]
-        if short.size:
-            pad_docs = np.repeat(short, l - counts[short])
-            d = np.concatenate([d, pad_docs])
-            th = np.concatenate([th, np.zeros(pad_docs.size, dtype=U64)])
-            order = np.argsort(d, kind="stable")
-            d, th = d[order], th[order]
-        sig = probordminhash2_batch(d, th, n, m, l, seed).view(np.int64)
-        return pd.Series(list(sig))
+        return pd.Series(list(_ordminhash_np(texts, m, l, seed)))
 
     return ordminhash
 

@@ -1,23 +1,49 @@
 """Connected components over a DataFrame edge list.
 
-Spark has no fixpoint operator (SURVEY.md §4.2), so this is a driver loop of
-pure DataFrame transforms with ``localCheckpoint`` per iteration to cut
-lineage.  Two algorithms:
+Spark has no fixpoint operator (SURVEY.md §4.2).  :func:`connected_components`
+fetches at most ``_DRIVER_EDGES + 1`` edges and dispatches on the count:
 
-- ``two_phase`` (default): alternating large-star / small-star
-  (Kiveris et al., "Connected Components in MapReduce and Beyond", SOCC'14) —
-  O(log n) rounds even on adversarial chain graphs, each round two
-  shuffle-bound groupBy/join stages.  This is the 10^12-scale path.
-- ``label_prop``: classic min-label propagation — simpler, O(diameter) rounds;
-  kept as a cross-check oracle.
+- up to the gate, :func:`_min_labels` labels them on the driver (numpy
+  min-label hooking plus pointer jumping; no Spark rounds, no checkpoints);
+- above it, :func:`_star_components` runs alternating large-star /
+  small-star rounds (Kiveris et al., "Connected Components in MapReduce and
+  Beyond", SOCC'14): O(log n) rounds even on adversarial chain graphs, each
+  two shuffle-bound groupBy/join stages plus a ``localCheckpoint``.
+
+Both give every node of a non-self-loop edge the min id of its component.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from .cache import pin_local_checkpoint, release_local_checkpoint
+from .cache import pin, pin_local_checkpoint, release_local_checkpoint
+
+# edge-count gate of the driver path: 16 MB of int64 id pairs on the driver
+_DRIVER_EDGES = 1_000_000
+
+
+def _min_labels(src: np.ndarray, dst: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(ids, component) over the edges ``src[i] - dst[i]``: every node of a
+    non-self-loop edge, sorted, with the min id of its component."""
+    keep = src != dst
+    ids, inv = np.unique(np.concatenate([src[keep], dst[keep]]), return_inverse=True)
+    # both directions of every edge over compact indices; ids are sorted, so
+    # the min index of a component is its min id
+    u, v = inv, np.roll(inv, inv.size // 2)
+    lab = np.arange(ids.size)
+    while True:
+        old = lab.copy()
+        # lab[u] is a root (lab[i] <= i, jumped to a fixpoint): hook it onto
+        # the smaller label across the edge
+        np.minimum.at(lab, lab[u], lab[v])
+        while not np.array_equal(jumped := lab[lab], lab):
+            lab = jumped
+        if np.array_equal(lab, old):
+            return ids, ids[lab]
 
 
 def _canon(edges: DataFrame) -> DataFrame:
@@ -61,21 +87,35 @@ def connected_components(
     src: str = "id_l",
     dst: str = "id_r",
     max_iterations: int = 50,
-    algorithm: str = "two_phase",
 ) -> DataFrame:
     """edge list -> (id, component) with component = min node id of the group.
 
     Nodes with no edges are absent; callers left-join and coalesce to self
     (see :func:`assign_clusters`).
     """
-    e = _canon(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")))
+    # pinned: the size probe and the star path's first checkpoint share one
+    # execution of a lazy edge plan; neither result reads it afterwards
+    e = pin(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")))
+    try:
+        pdf = e.limit(_DRIVER_EDGES + 1).toPandas()
+        if len(pdf) > _DRIVER_EDGES:
+            return _star_components(e, max_iterations)
+        ids, comp = _min_labels(pdf["src"].to_numpy(np.int64), pdf["dst"].to_numpy(np.int64))
+        return e.sparkSession.createDataFrame(
+            pd.DataFrame({"id": ids, "component": comp}), "id long, component long"
+        )
+    finally:
+        e.unpersist()
+
+
+def _star_components(e: DataFrame, max_iterations: int) -> DataFrame:
+    """The scale path over a (src, dst) edge frame: large-star/small-star
+    rounds to a fixpoint of (node -> root) stars."""
     # checkpoints route through the cache module: the FINAL round's blocks
     # must outlive this call (the returned plan reads them), so they release
     # at the consumer's cache_scope exit; each SUPERSEDED round is released
     # eagerly below — an iterative loop holds two frontiers, not max_iter
-    e = pin_local_checkpoint(e)
-    if algorithm == "label_prop":
-        return _label_prop(e, max_iterations)
+    e = pin_local_checkpoint(_canon(e))
     prev_sig = None
     for _ in range(max_iterations):
         new_e = pin_local_checkpoint(_small_star(_large_star(e)))
@@ -99,41 +139,6 @@ def connected_components(
         "component", F.col("id")
     )
     return comp.union(roots).groupBy("id").agg(F.min("component").alias("component"))
-
-
-def _label_prop(e: DataFrame, max_iterations: int) -> DataFrame:
-    nodes = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    labels = pin_local_checkpoint(nodes.withColumn("component", F.col("id")))
-    both = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    both = pin_local_checkpoint(both)
-    for _ in range(max_iterations):
-        neigh = (
-            both.join(labels, both["dst"] == labels["id"])
-            .groupBy("src")
-            .agg(F.min("component").alias("nmin"))
-        )
-        new_labels = pin_local_checkpoint(
-            labels.join(neigh, labels["id"] == neigh["src"], "left")
-            .select(
-                "id", F.least(F.col("component"), F.coalesce("nmin", "component")).alias("component")
-            )
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .where(F.col("n.component") != F.col("o.component"))
-            .count()
-        )
-        # `changed` was the last reader of the previous labels round
-        release_local_checkpoint(labels)
-        labels = new_labels
-        if changed == 0:
-            return labels
-    raise RuntimeError(f"label propagation did not converge in {max_iterations} rounds")
 
 
 def assign_clusters(

@@ -7,8 +7,10 @@ import pyspark.sql.functions as F
 import pytest
 
 from probminhash_spark.config import DedupConfig
+from probminhash_spark.operators import components
 from probminhash_spark.operators.components import assign_clusters, connected_components
 from probminhash_spark.operators.dedup import dedup_edges, with_doc_id
+from test_components_kernel import union_find
 
 CFG = DedupConfig(
     shingle_mode="char",
@@ -86,48 +88,108 @@ def test_sha256_invariant_through_signature_stage(spark, spark_files):
     assert bad == 0
 
 
-def test_connected_components_random_graphs(spark):
+# gate values that force each side of connected_components' dispatch
+PATHS = {"driver": 10**6, "star": 0}
+
+
+def _components_by_path(edges, monkeypatch, **kw):
+    """path -> the (id, component) frame connected_components returns with
+    its gate forced to that path."""
+    out = {}
+    for path, gate in PATHS.items():
+        monkeypatch.setattr(components, "_DRIVER_EDGES", gate)
+        out[path] = connected_components(edges, **kw)
+    return out
+
+
+def test_connected_components_random_graphs(spark, monkeypatch):
+    """Both sides of the gate against a union-find oracle, schema included."""
     rng = np.random.default_rng(3)
-    for trial, algo in [(0, "two_phase"), (1, "two_phase"), (2, "label_prop")]:
+    for trial in range(3):
         n, m = 60, 45
-        src = rng.integers(0, n, m)
-        dst = rng.integers(0, n, m)
-        edges = spark.createDataFrame(
-            [(int(a), int(b)) for a, b in zip(src, dst) if a != b], "id_l long, id_r long"
-        )
-        got = {
-            r["id"]: r["component"]
-            for r in connected_components(edges, algorithm=algo).collect()
-        }
-        # union-find oracle
-        parent = list(range(n))
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in zip(src, dst):
-            ra, rb = find(int(a)), find(int(b))
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        touched = set(src.tolist()) | set(dst.tolist())
-        oracle = {i: find(i) for i in sorted(touched) if True}
-        # drop self-loop-only nodes absent from `got`
-        oracle = {k: v for k, v in oracle.items() if k in got}
-        assert got == oracle
+        pairs = [
+            (int(a), int(b))
+            for a, b in zip(rng.integers(0, n, m), rng.integers(0, n, m))
+            if a != b
+        ]
+        edges = spark.createDataFrame(pairs, "id_l long, id_r long")
+        frames = _components_by_path(edges, monkeypatch)
+        assert frames["driver"].schema == frames["star"].schema
+        for path, comp in frames.items():
+            got = {r["id"]: r["component"] for r in comp.collect()}
+            assert got == union_find(pairs), (trial, path)
 
 
-def test_connected_components_long_chain(spark):
-    """Adversarial chain: two-phase must converge in O(log n) rounds."""
+def test_connected_components_long_chain(spark, monkeypatch):
+    """Adversarial chain: the star path must converge in O(log n) rounds."""
     n = 512
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "id_l long, id_r long"
     )
-    comp = connected_components(edges, max_iterations=20)
-    vals = {r["component"] for r in comp.collect()}
-    assert vals == {0}
+    for path, comp in _components_by_path(edges, monkeypatch, max_iterations=20).items():
+        got = {r["id"]: r["component"] for r in comp.collect()}
+        assert got == dict.fromkeys(range(n), 0), path
+
+
+def test_connected_components_degenerate_graphs(spark, monkeypatch):
+    """No edges, self-loops only, and duplicate/reversed edges: both paths
+    agree with the oracle, and assign_clusters keeps untouched docs as their
+    own cluster."""
+    graphs = {
+        "empty": [],
+        "self_loops": [(3, 3), (5, 5), (5, 5)],
+        "dup_reversed": [(4, 2), (2, 4), (4, 2), (7, 7), (9, 8), (8, 9), (2, 4)],
+    }
+    docs = spark.range(12).withColumnRenamed("id", "doc_id")
+    for name, pairs in graphs.items():
+        edges = spark.createDataFrame(pairs, "id_l long, id_r long")
+        oracle = union_find([(a, b) for a, b in pairs if a != b])
+        for path, gate in PATHS.items():
+            monkeypatch.setattr(components, "_DRIVER_EDGES", gate)
+            got = {r["id"]: r["component"] for r in connected_components(edges).collect()}
+            assert got == oracle, (name, path)
+            clusters = {
+                r["doc_id"]: r["cluster_id"] for r in assign_clusters(docs, edges).collect()
+            }
+            assert clusters == {d: oracle.get(d, d) for d in range(12)}, (name, path)
+
+
+def test_connected_components_gate_boundary(spark, monkeypatch):
+    """_DRIVER_EDGES edges label on the driver; one more takes the star path."""
+    monkeypatch.setattr(components, "_DRIVER_EDGES", 8)
+    calls = []
+    star = components._star_components
+    monkeypatch.setattr(
+        components,
+        "_star_components",
+        lambda e, max_iterations: calls.append(1) or star(e, max_iterations),
+    )
+    for m, want_star in [(8, False), (9, True)]:
+        calls.clear()
+        pairs = [(i, i + 1) for i in range(m)]
+        comp = connected_components(spark.createDataFrame(pairs, "id_l long, id_r long"))
+        assert bool(calls) == want_star, m
+        assert {r["component"] for r in comp.collect()} == {0}
+
+
+def test_connected_components_over_gate_runs_edge_plan_once(spark, monkeypatch):
+    """The size probe and the star path share one execution of a lazy edge
+    plan: a counting UDF upstream of the edges sees every row exactly once."""
+    monkeypatch.setattr(components, "_DRIVER_EDGES", 8)
+    seen = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def tap(x):
+        seen.add(1)
+        return x
+
+    pairs = [(i, i + 1) for i in range(20)]
+    edges = spark.createDataFrame(pairs, "id_l long, id_r long").select(
+        tap("id_l").alias("id_l"), "id_r"
+    )
+    comp = connected_components(edges).collect()
+    assert {r["component"] for r in comp} == {0}
+    assert seen.value == len(pairs)
 
 
 def _capped_dedup_edges(docs, cfg, on_capped):

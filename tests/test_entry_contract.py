@@ -2,6 +2,7 @@
 Spark and its oracle_sql() on DuckDB over the same parquet tables; compare
 row count, schema width, and order-insensitive values."""
 
+import decimal
 import os
 
 import duckdb
@@ -125,20 +126,63 @@ SIG_CFGS = {
 }
 
 
+def _spark_round2(x: float) -> float:
+    """Spark's ``round(x, 2)`` on a double: HALF_UP on its shortest decimal form."""
+    q = decimal.Decimal(repr(x)).quantize(decimal.Decimal("0.01"), decimal.ROUND_HALF_UP)
+    return float(q)
+
+
+def _kernel_columns(name: str, texts: list) -> dict:
+    """Output column -> the values the query must hold, computed by its numpy
+    kernel on the same texts and encoded as the query encodes them."""
+    from probminhash_spark.config import DedupConfig
+    from probminhash_spark.functions.sketch_udfs import (
+        _ordminhash_np,
+        _shingle_multiset,
+        _sketch_batch_np,
+    )
+    from probminhash_spark.kernels.setsketch import (
+        SetSketchParams,
+        setsketch_batch,
+        setsketch_cardinality,
+    )
+    from probminhash_spark.kernels.shingles import shingle_batch
+    from probminhash_spark.kernels.superminhash import superminhash_batch
+
+    def joined(prefix, rows, fmt=str):
+        return {
+            f"{prefix}_len": [len(r) for r in rows],
+            f"{prefix}_str": ["-".join(map(fmt, r)) for r in rows],
+        }
+
+    n = len(texts)
+    if name in SIG_CFGS:
+        cfg = DedupConfig(num_hashes=64, bands=16, rows=4, **SIG_CFGS[name])
+        return joined("sig", _sketch_batch_np(texts, cfg).view(np.int64))
+    if name == "sketch_superminhash_values":
+        cfg = DedupConfig(algo="superminhash", num_hashes=64, bands=16, rows=4)
+        d, h = shingle_batch(texts, cfg.shingle_mode, cfg.shingle_size)
+        vals, _ = superminhash_batch(d, h, n, cfg.num_hashes, cfg.hasher)
+        return joined("hsketch", vals, "{:.6f}".format)
+    if name == "sketch_cardinality":
+        cfg = DedupConfig()
+        params = SetSketchParams(m=cfg.setsketch_m)
+        d, h, _ = _shingle_multiset(texts, cfg)
+        card, _ = setsketch_cardinality(setsketch_batch(d, h, n, params, cfg.hasher), params)
+        return {"est_distinct_shingles": [_spark_round2(c) for c in card]}
+    if name == "sketch_ordminhash":
+        # make_ordminhash_udf(m=16, l=2) at its default seed
+        return joined("ord_sig", _ordminhash_np(texts, 16, 2, 0x5EED))
+    return {}
+
+
 @pytest.mark.parametrize("name", PER_DOC)
 def test_per_document_query_order_and_values(spark, name):
-    from probminhash_spark.config import DedupConfig
-    from probminhash_spark.functions.sketch_udfs import _sketch_batch_np
-
     got = entry_mod.queries()[name](spark, SF_DIR).toPandas()
     docs = pd.read_parquet(f"{SF_DIR}/documents.parquet", columns=["doc_id", "text"])
     ids = got["doc_id"].to_numpy()
     assert len(ids) == len(docs), f"{name}: not one row per document"
     assert (np.diff(ids) > 0).all(), f"{name}: doc_id not strictly increasing"
-    if name not in SIG_CFGS:
-        return
-    cfg = DedupConfig(num_hashes=64, bands=16, rows=4, **SIG_CFGS[name])
     texts = docs.set_index("doc_id").loc[ids, "text"].fillna("").tolist()
-    sig = _sketch_batch_np(texts, cfg).view(np.int64)
-    assert got["sig_len"].tolist() == [cfg.num_hashes] * len(ids)
-    assert got["sig_str"].tolist() == ["-".join(map(str, row)) for row in sig]
+    for col, want in _kernel_columns(name, texts).items():
+        assert got[col].tolist() == want, f"{name}: {col} differs from its numpy kernel"
