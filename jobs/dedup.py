@@ -5,8 +5,9 @@ Run: spark-submit --py-files probminhash_spark.zip jobs/dedup.py \
         [--config run.json] [--master local[8]]
 
 Reads the source-file table (repo, path, commit, lang, content), runs
-sketch -> band -> candidates -> verify -> cluster, writes stage tables under
---output, prints one JSON summary line.
+sketch -> band -> candidates -> verify -> cluster, writes stage tables and
+manifests under --output (any Hadoop URI: hdfs://, s3a://, file://; a rerun
+resumes from the first incomplete stage), prints one JSON summary line.
 """
 
 from __future__ import annotations

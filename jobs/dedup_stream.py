@@ -8,8 +8,9 @@ Run: spark-submit --py-files probminhash_spark.zip jobs/dedup_stream.py \
 Watches ``--input`` for arriving parquet files of the source-file table
 (repo, path, commit, lang, content) and runs the incremental near-dup
 pipeline (`StreamingDeduper`): each micro-batch is sketched, banded and
-joined against the accumulated LSM band state under ``--state``; verified
-duplicate edges land in ``<state>/edges/batch_id=K``.
+joined against the accumulated LSM band state under ``--state``; candidate
+duplicate pairs with their ``band_hit_rate`` (no exact verify runs) land in
+``<state>/edges/batch_id=K``.
 
 Default trigger is ``availableNow`` (drain what's there, then exit —
 cron-friendly, exactly the 100 TB backfill/ingest pattern); pass
@@ -29,15 +30,17 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from probminhash_spark import hfs  # noqa: E402
 from probminhash_spark.config import DedupConfig  # noqa: E402
 from probminhash_spark.session import get_spark  # noqa: E402
-from probminhash_spark.streaming.lsm import batch_partitions_exist  # noqa: E402
 
 SCHEMA = "repo string, path string, commit string, lang string, content string"
 
 
 def _count_edges(spark, edges_dir: str) -> int:
-    if not batch_partitions_exist(spark, edges_dir):
+    # an all-empty write leaves only _SUCCESS behind, and reading that would
+    # fail schema inference
+    if not hfs.glob_dirs(spark, f"{edges_dir}/batch_id=*"):
         return 0
     return spark.read.parquet(edges_dir).count()
 
@@ -121,22 +124,17 @@ def main(argv=None) -> int:
     spark = get_spark(app_name="probminhash-dedup-stream", master=args.master)
     spark.sparkContext.setLogLevel("ERROR")
 
-    # r6 (ADVICE): an explicitly supplied --checkpoint that holds a PRE-r5
+    # An explicitly supplied --checkpoint that holds a legacy
     # (un-suffixed) checkpoint would be silently orphaned by the engine
     # suffix — the job would start a fresh file-source checkpoint and
     # re-drain the entire input as new batches against the existing state.
     # Detect the legacy layout (offsets/ at the un-suffixed path, nothing at
     # the suffixed one) and fail with migration instructions instead.
     if user_ckpt:
-        jvm = spark.sparkContext._jvm
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()
-
-        def _exists(p: str) -> bool:
-            hp = jvm.org.apache.hadoop.fs.Path(p)
-            return hp.getFileSystem(hconf).exists(hp)
-
         legacy = f"{args.checkpoint.rstrip('/')}/offsets"
-        if _exists(legacy) and not _exists(f"{user_ckpt}/offsets"):
+        if hfs.exists(spark, legacy) and not hfs.exists(
+            spark, f"{user_ckpt}/offsets"
+        ):
             raise SystemExit(
                 f"--checkpoint {args.checkpoint} holds a legacy (pre-engine-"
                 f"suffix) streaming checkpoint, but this run would use "

@@ -1,17 +1,23 @@
 """Staged, checkpointed, resumable dedup pipeline (SURVEY.md §3.2).
 
-Stages (each a parquet table + ``_manifest.json`` under the checkpoint root):
+Stages (each a parquet table ``<root>/<stage>/data`` + ``_manifest.json``
+under the checkpoint root, which may be any Hadoop URI):
 
 1. ``signatures``  — doc keys + content_sha256 + signature
 2. ``bands``       — exploded (doc_id, band_id, band_key)
 3. ``candidates``  — distinct (id_l, id_r) after the bucket-cap skew policy
+   (capped buckets go to ``dropped_buckets/data``)
 4. ``edges``       — verified pairs with j_est / j_exact
 5. ``clusters``    — (doc_id, cluster_id)
 
-Resume: stages whose manifest matches the current config fingerprint are
-loaded, not recomputed (safe: every stage is a pure function of its inputs,
-SURVEY.md §1.2).  The per-row invariant ``content_sha256`` is carried into the
-signatures table and re-checked on resume-read.
+Resume (manifests after ``SetSketchParams`` dump/reload,
+``setsketcher.rs:141-193``): a stage loads while every earlier stage loaded
+and its manifest is complete under the config fingerprint.  The first stage
+that cannot load deletes its own and every later manifest, then it and all
+later stages recompute, so a crash mid-rebuild never resumes a later stage
+over stale input.  Safe because every stage is a pure function of (input
+table, config), SURVEY.md §1.2.  ``content_sha256`` is carried into the
+signatures table and re-checked on every run.
 
 Shuffle frontiers (the four to budget at 100 TB): signatures repartition,
 band groupBy/self-join, verify join, each clustering round.  Everything else
@@ -20,9 +26,12 @@ is narrow + Arrow-vectorized.
 
 from __future__ import annotations
 
+import time
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from .. import hfs
 from ..config import DedupConfig
 from ..operators.components import assign_clusters
 from ..operators.dedup import (
@@ -33,18 +42,21 @@ from ..operators.dedup import (
     with_doc_id,
     with_signature,
 )
-from .manifest import stage_complete, stage_dir, write_manifest
 
 KEY_COLS = ["repo", "path", "commit"]
+STAGES = ("signatures", "bands", "candidates", "edges", "clusters")
+MANIFEST = "_manifest.json"
 
 
-def _write(df: DataFrame, root: str, stage: str):
-    """Stage-table writer: one parquet directory per stage."""
-    df.write.mode("overwrite").parquet(str(stage_dir(root, stage) / "data"))
+def _path(root: str, table: str, leaf: str) -> str:
+    """``<root>/<table>/<leaf>``: a table's ``data`` dir or its manifest."""
+    return f"{root.rstrip('/')}/{table}/{leaf}"
 
 
-def _read(spark: SparkSession, root: str, stage: str) -> DataFrame:
-    return spark.read.parquet(str(stage_dir(root, stage) / "data"))
+def read_manifest(spark: SparkSession, root: str, stage: str) -> dict | None:
+    """The stage's manifest, or None when it is missing or torn."""
+    path = _path(root, stage, MANIFEST)
+    return hfs.read_json(spark, path) if hfs.exists(spark, path) else None
 
 
 def run_pipeline(
@@ -55,100 +67,81 @@ def run_pipeline(
 ) -> dict:
     """Run (or resume) the full pipeline; returns a counters summary dict."""
     fp = cfg.fingerprint()
-    counters: dict = {"config_fingerprint": fp, "resumed_stages": []}
+    root = checkpoint_root
+    resumed: list[str] = []
+    counters: dict = {"config_fingerprint": fp, "resumed_stages": resumed}
 
-    # ---- stage 1: signatures -------------------------------------------
-    if stage_complete(checkpoint_root, "signatures", fp):
-        sigs = _read(spark, checkpoint_root, "signatures")
-        counters["resumed_stages"].append("signatures")
-        counters["files"] = sigs.count()
-    else:
+    def read(table: str) -> DataFrame:
+        return spark.read.parquet(_path(root, table, "data"))
+
+    def step(stage: str, counter: str, build, extra: dict | None = None):
+        """Load ``stage`` if every earlier stage resumed and its manifest
+        matches the fingerprint.  Otherwise delete its manifest and every
+        later one, write the tables ``build()`` returns (``{name: frame}``,
+        the stage's own first), count them and write the manifest.  The
+        stage's row count lands in ``counters[counter]``, a side table's
+        under its own name.  Returns the stage table as checkpointed."""
+        i = STAGES.index(stage)
+        chained = len(resumed) == i  # every earlier stage resumed
+        m = read_manifest(spark, root, stage) if chained else None
+        if m and m.get("status") == "complete" and m.get("fingerprint") == fp:
+            resumed.append(stage)
+            out, rows = read(stage), m["counters"]
+        else:
+            if chained:
+                for later in STAGES[i:]:
+                    hfs.delete(spark, _path(root, later, MANIFEST))
+            tables = build()
+            for name, df in tables.items():
+                df.write.mode("overwrite").parquet(_path(root, name, "data"))
+            out = read(stage)
+            rows = {"rows": out.count()}
+            rows.update((name, read(name).count()) for name in list(tables)[1:])
+            manifest = {
+                "stage": stage,
+                "status": "complete",
+                "fingerprint": fp,
+                "counters": rows,
+                "completed_at_unix": time.time(),
+                **(extra or {}),
+            }
+            hfs.write_json(spark, _path(root, stage, MANIFEST), manifest)
+        counters[counter] = rows["rows"]
+        counters.update((k, v) for k, v in rows.items() if k != "rows")
+        return out
+
+    # the builders call operators through this module's globals at call
+    # time, so wrappers installed on those names take effect
+    def build_signatures():
         staged = with_doc_id(files.select(*KEY_COLS, "lang", "content"), KEY_COLS)
         staged = staged.withColumn("content_sha256", F.sha2("content", 256))
-        staged = with_signature(staged, cfg)
-        _write(staged, checkpoint_root, "signatures")
-        sigs = _read(spark, checkpoint_root, "signatures")
-        counters["files"] = sigs.count()
-        write_manifest(
-            checkpoint_root,
-            "signatures",
-            fp,
-            {"rows": counters["files"]},
-            {"config": cfg.to_json()},
-        )
+        return {"signatures": with_signature(staged, cfg)}
+
+    sigs = step("signatures", "files", build_signatures, {"config": cfg.to_json()})
     # per-row integrity: sha256(content) must equal the checkpointed value
     bad = sigs.where(F.sha2("content", 256) != F.col("content_sha256")).count()
     if bad:
         raise RuntimeError(f"sha256 invariant violated for {bad} rows")
     counters["sha256_checked"] = counters["files"]
 
-    # ---- stage 2: bands --------------------------------------------------
-    if stage_complete(checkpoint_root, "bands", fp):
-        bands = _read(spark, checkpoint_root, "bands")
-        counters["resumed_stages"].append("bands")
-        counters["band_rows"] = bands.count()
-    else:
-        bands = band_explode(sigs, cfg)
-        _write(bands, checkpoint_root, "bands")
-        bands = _read(spark, checkpoint_root, "bands")
-        counters["band_rows"] = bands.count()
-        write_manifest(checkpoint_root, "bands", fp, {"rows": counters["band_rows"]})
+    bands = step("bands", "band_rows", lambda: {"bands": band_explode(sigs, cfg)})
 
-    # ---- stage 3: candidates --------------------------------------------
-    if stage_complete(checkpoint_root, "candidates", fp):
-        pairs = _read(spark, checkpoint_root, "candidates")
-        counters["resumed_stages"].append("candidates")
-        counters["candidate_pairs"] = pairs.count()
-        counters["dropped_buckets"] = (
-            _read(spark, checkpoint_root, "dropped_buckets").count()
-        )
-    else:
+    def build_candidates():
         pairs, dropped = candidate_pairs(bands, cfg, on_capped="record")
-        _write(pairs, checkpoint_root, "candidates")
-        _write(dropped, checkpoint_root, "dropped_buckets")
-        pairs = _read(spark, checkpoint_root, "candidates")
-        counters["candidate_pairs"] = pairs.count()
-        counters["dropped_buckets"] = (
-            _read(spark, checkpoint_root, "dropped_buckets").count()
-        )
-        write_manifest(
-            checkpoint_root,
-            "candidates",
-            fp,
-            {
-                "rows": counters["candidate_pairs"],
-                "dropped_buckets": counters["dropped_buckets"],
-            },
-        )
+        return {"candidates": pairs, "dropped_buckets": dropped}
 
-    # ---- stage 4: verified edges -----------------------------------------
-    if stage_complete(checkpoint_root, "edges", fp):
-        edges = _read(spark, checkpoint_root, "edges")
-        counters["resumed_stages"].append("edges")
-        counters["duplicate_edges"] = edges.count()
-    else:
+    pairs = step("candidates", "candidate_pairs", build_candidates)
+
+    def build_edges():
         est = estimate_pair_jaccard(pairs, sigs, cfg)
-        edges = verify_pairs(est, sigs.select("doc_id", "content"), cfg)
-        _write(edges, checkpoint_root, "edges")
-        edges = _read(spark, checkpoint_root, "edges")
-        counters["duplicate_edges"] = edges.count()
-        write_manifest(
-            checkpoint_root, "edges", fp, {"rows": counters["duplicate_edges"]}
-        )
+        return {"edges": verify_pairs(est, sigs.select("doc_id", "content"), cfg)}
 
-    # ---- stage 5: clusters ------------------------------------------------
-    if stage_complete(checkpoint_root, "clusters", fp):
-        clusters = _read(spark, checkpoint_root, "clusters")
-        counters["resumed_stages"].append("clusters")
-        counters["clustered_files"] = clusters.count()
-    else:
-        clustered = assign_clusters(sigs.select("doc_id"), edges)
-        _write(clustered, checkpoint_root, "clusters")
-        clusters = _read(spark, checkpoint_root, "clusters")
-        counters["clustered_files"] = clusters.count()
-        write_manifest(
-            checkpoint_root, "clusters", fp, {"rows": counters["clustered_files"]}
-        )
+    edges = step("edges", "duplicate_edges", build_edges)
+    clusters = step(
+        "clusters",
+        "clustered_files",
+        lambda: {"clusters": assign_clusters(sigs.select("doc_id"), edges)},
+    )
     counters["duplicate_groups"] = (
         clusters.groupBy("cluster_id").count().where(F.col("count") > 1).count()
     )

@@ -13,6 +13,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from .. import hfs
 from ..config import DedupConfig
 from ..operators.cache import cache_scope, pin
 from ..operators.dedup import (
@@ -35,11 +36,10 @@ def edges_index_lsm(
     max_segments: int = 8,
 ) -> BucketedLsm:
     """LSM index over discovered edge PAIRS, bucketed by the pair hash —
-    the structure that bounds the per-batch re-emission anti-join (r4
-    verdict wrong #1: both engines read ALL accumulated edges every batch).
-    Holds (id_l, id_r, batch_id) only; the full edge rows (with hit rates)
-    stay in the append-only ``edges/batch_id=K`` output table, which nothing
-    re-reads per batch anymore.  Deltas live at ``{prefix}/``, segments at
+    the structure that bounds the per-batch re-emission anti-join.  Holds
+    (id_l, id_r, batch_id) only; the full edge rows (with hit rates) stay
+    in the append-only ``edges/batch_id=K`` output table, which nothing
+    re-reads per batch.  Deltas live at ``{prefix}/``, segments at
     ``{prefix}_compact/``."""
     base = prefix.rstrip("/")
     return BucketedLsm(
@@ -72,8 +72,8 @@ def ensure_meta(
     identity) raises ``RuntimeError``; before that, such a file is
     (re)written with this run's layout and identity."""
     identity = cfg.sketch_identity()
-    found = store._fs().exists(store._hpath(meta_path))
-    meta = store.read_json(meta_path) if found else None
+    found = hfs.exists(store.spark, meta_path)
+    meta = hfs.read_json(store.spark, meta_path) if found else None
     if meta is not None and layout_key in meta:
         if int(meta[layout_key]) != store.buckets:
             raise ValueError(
@@ -106,8 +106,10 @@ def ensure_meta(
             f'write {{"{layout_key}": {store.buckets}, "sketch_identity": '
             f'"{identity}"}} to the meta file)'
         )
-    store.write_json(
-        meta_path, {layout_key: store.buckets, "sketch_identity": identity}
+    hfs.write_json(
+        store.spark,
+        meta_path,
+        {layout_key: store.buckets, "sketch_identity": identity},
     )
 
 
@@ -176,22 +178,21 @@ class StreamingDeduper:
     - ``bands/``, ``bands_compact/``             — BAND state LSM, bucketed
       by ``pmod(band_key, state_buckets)``
     - ``edges_index/``, ``edges_index_compact/`` — discovered-PAIR index
-      LSM, bucketed by ``pmod(xxhash64(id_l, id_r), state_buckets)`` (r5:
-      bounds the re-emission guard, which previously scanned every edge
-      partition per batch)
-    - ``edges/batch_id=K/``                      — verified duplicate edges,
-      the job OUTPUT; append-only, never re-read by the batch loop
+      LSM, bucketed by ``pmod(xxhash64(id_l, id_r), state_buckets)``: the
+      bounded re-emission guard
+    - ``edges/batch_id=K/``                      — candidate duplicate pairs
+      with their ``band_hit_rate`` (no exact verify runs), the job OUTPUT;
+      append-only, never re-read by the batch loop
 
     Each micro-batch: sketch -> band -> candidate generation restricted to
     the state band buckets the new docs touch -> estimate -> anti-join the
     new pairs against their edges-index buckets -> write edges + both deltas
     -> opportunistic compaction.
 
-    Per-batch COMPUTE is incremental (round-2 verdict): state rows enter the
-    candidate stage only via a semi-join on the new batch's band keys, so
-    work scales with the new data, not with total history.  Per-batch I/O is
-    bounded too (round-3 verdict weak #1 for bands; round-4 wrong #1 for
-    edges): every history read enumerates only touched-bucket directories
+    Per-batch COMPUTE is incremental: state rows enter the candidate stage
+    only via a semi-join on the new batch's band keys, so work scales with
+    the new data, not with total history.  Per-batch I/O is bounded too:
+    every history read enumerates only touched-bucket directories
     across <= ``max_segments`` segments and <= ``compact_every`` un-compacted
     deltas — file count per batch is O((max_segments + compact_every) x
     touched buckets), independent of how many batches have accumulated.
@@ -201,10 +202,8 @@ class StreamingDeduper:
     bucket pruning is the scalable approximation: a trickle batch touching
     T of P buckets reads ~T/P of state.)
 
-    All state probes and listings go through the Hadoop FileSystem API (the
-    round-3 verdict's one real bug: ``pathlib.Path`` silently reports
-    HDFS/S3A state as absent), so ``state_dir`` may be any Hadoop-supported
-    URI (``file:///``, ``hdfs://``, ``s3a://``...).
+    All state probes and listings go through :mod:`probminhash_spark.hfs`,
+    so ``state_dir`` may be any Hadoop-supported URI.
 
     Single-writer: one streaming query owns a state dir (the checkpoint
     already serializes its batches).  Pointing two concurrent jobs at the
@@ -227,8 +226,7 @@ class StreamingDeduper:
     num_hashes/bands/rows/key-regime version).  Resuming with a different
     identity would produce band keys that never match historical state, so
     every cross-upgrade duplicate would be missed with no error; the meta
-    check (:func:`ensure_meta`) turns that into a loud failure (r5 ADVICE
-    medium).
+    check (:func:`ensure_meta`) turns that into a loud failure.
 
     The two stores are the public ``bands`` and ``edges_index``
     :class:`BucketedLsm` attributes; the edge output is ``edges_dir``.
@@ -295,7 +293,7 @@ class StreamingDeduper:
             )
             self._meta_checked = True
         docs = with_doc_id(batch_df, ["repo", "path", "commit"])
-        sigs = with_signature(docs, cfg).select("doc_id", "sig", "content")
+        sigs = with_signature(docs, cfg).select("doc_id", "sig")
         new_bands = pin(
             band_explode(sigs, cfg)
             .withColumn("batch_id", F.lit(int(batch_id)))
@@ -376,7 +374,6 @@ class StreamingDeduper:
             # duplicate band rows in state; counting distinct band ids keeps
             # the hit rate a true fraction in [1/bands, 1]
             .agg((F.countDistinct("band_id") / cfg.bands).alias("band_hit_rate"))
-            .where(F.col("band_hit_rate") >= 1.0 / cfg.bands)
         )
         # don't re-emit edges already discovered by an earlier batch (happens
         # when a doc is re-ingested and counts as "new" again); the guard

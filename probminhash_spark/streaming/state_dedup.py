@@ -283,8 +283,7 @@ def attach_stateful_dedup(
     anti-joins its NEW pairs against the discovered-pair INDEX under
     ``index_dir`` (default ``<edges_dir>_index``) — an LSM bucketed by the
     pair hash, so the guard reads only the buckets this batch's pairs land
-    in, never the accumulated edges output (the same bounded-I/O structure
-    ``StreamingDeduper`` uses; r4 verdict wrong #1 covered both engines).
+    in, never the accumulated edges output (as in ``StreamingDeduper``).
     Replays overwrite exactly their own ``batch_id`` partition and index
     delta (delete-first; :func:`emit_edges` is shared with
     ``StreamingDeduper``).

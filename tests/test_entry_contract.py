@@ -186,3 +186,42 @@ def test_per_document_query_order_and_values(spark, name):
     texts = docs.set_index("doc_id").loc[ids, "text"].fillna("").tolist()
     for col, want in _kernel_columns(name, texts).items():
         assert got[col].tolist() == want, f"{name}: {col} differs from its numpy kernel"
+
+
+def _union_cardinality(regs: np.ndarray, params) -> float:
+    """SetSketch merge identity: a group's sketch is the register-wise max of
+    its members' sketches; the query reports its rounded cardinality."""
+    from probminhash_spark.kernels.setsketch import setsketch_cardinality
+
+    card, _ = setsketch_cardinality(regs.max(axis=0).astype(np.float64), params)
+    return _spark_round2(float(card))
+
+
+@pytest.mark.parametrize(
+    "name, key",
+    [("sketch_group_cardinality", "source"), ("sketch_group_rollup", "lang")],
+)
+def test_group_sketch_query_values(spark, name, key):
+    from probminhash_spark.config import DedupConfig
+    from probminhash_spark.functions.sketch_udfs import _shingle_multiset
+    from probminhash_spark.kernels.setsketch import SetSketchParams, setsketch_batch
+
+    got = entry_mod.queries()[name](spark, SF_DIR).toPandas()
+    docs = pd.read_parquet(f"{SF_DIR}/documents.parquet")
+    cfg = DedupConfig(setsketch_m=256)  # the group queries' config
+    params = SetSketchParams(m=cfg.setsketch_m)
+    texts = docs["text"].fillna("").tolist()
+    d, h, _ = _shingle_multiset(texts, cfg)
+    regs = setsketch_batch(d, h, len(texts), params, cfg.hasher)
+    want = {}
+    for k, idx in docs.groupby(key).indices.items():
+        row = {
+            "n_docs": len(idx),
+            "est_distinct_shingles": _union_cardinality(regs[idx], params),
+        }
+        if name == "sketch_group_rollup":
+            row["n_child_groups"] = docs.iloc[idx]["source"].nunique()
+        want[k] = row
+    assert got[key].tolist() == sorted(want), f"{name}: groups or order differ"
+    for col in want[next(iter(want))]:
+        assert got[col].tolist() == [want[k][col] for k in got[key]], f"{name}: {col}"

@@ -9,8 +9,11 @@ import pytest
 from probminhash_spark.config import DedupConfig
 from probminhash_spark.corpus import inject_viral_block, make_corpus
 from probminhash_spark.operators.dedup import band_explode, candidate_pairs, with_doc_id, with_signature
-from probminhash_spark.pipeline.dedup_pipeline import run_pipeline
-from probminhash_spark.pipeline.manifest import read_manifest
+from probminhash_spark.pipeline.dedup_pipeline import (
+    STAGES,
+    read_manifest,
+    run_pipeline,
+)
 
 CFG = DedupConfig(threshold=0.8, est_low_cut=0.4)
 
@@ -21,13 +24,13 @@ def test_resume_skips_complete_stages(spark, tiny_corpus, tmp_path):
     first = run_pipeline(spark, files, CFG, root)
     assert first["resumed_stages"] == []
     assert first["sha256_checked"] == 200
-    m1 = read_manifest(root, "signatures")
+    m1 = read_manifest(spark, root, "signatures")
     second = run_pipeline(spark, files, CFG, root)
     assert set(second["resumed_stages"]) == {
         "signatures", "bands", "candidates", "edges", "clusters",
     }
     # stages were NOT recomputed: manifest timestamps unchanged
-    m2 = read_manifest(root, "signatures")
+    m2 = read_manifest(spark, root, "signatures")
     assert m1["completed_at_unix"] == m2["completed_at_unix"]
     # identical final counters
     for k in ("files", "candidate_pairs", "duplicate_edges", "duplicate_groups"):
@@ -47,6 +50,47 @@ def test_resume_mid_run_after_kill(spark, tiny_corpus, tmp_path):
     res = run_pipeline(spark, files, CFG, root)
     assert set(res["resumed_stages"]) == {"signatures", "bands"}
     assert res["duplicate_groups"] > 0
+
+
+def test_uri_checkpoint_root_keeps_manifests_under_it(
+    spark, tiny_corpus, tmp_path, monkeypatch
+):
+    """A ``file://`` checkpoint root holds every stage manifest: none lands
+    under the working directory, and a rerun resumes all five stages."""
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    files = spark.createDataFrame(tiny_corpus.files)
+    local = tmp_path / "ck"
+    root = "file://" + str(local)
+    first = run_pipeline(spark, files, CFG, root)
+    assert first["resumed_stages"] == []
+    for stage in STAGES:
+        assert (local / stage / "_manifest.json").exists(), stage
+    assert not list(cwd.iterdir()), "checkpoint files written under the cwd"
+    second = run_pipeline(spark, files, CFG, root)
+    assert second["resumed_stages"] == list(STAGES)
+    assert {k: v for k, v in second.items() if k != "resumed_stages"} == {
+        k: v for k, v in first.items() if k != "resumed_stages"
+    }
+
+
+def test_rebuilt_stage_invalidates_later_stages(spark, tiny_corpus, tmp_path):
+    """A stage that recomputes rebuilds every later stage too, even where a
+    later manifest still matches: its input is being rewritten."""
+    files = spark.createDataFrame(tiny_corpus.files)
+    root = str(tmp_path / "ckchain")
+    first = run_pipeline(spark, files, CFG, root)
+    sig_dir = Path(root) / "signatures"
+    (sig_dir / "_manifest.json").unlink()
+    crc = sig_dir / "._manifest.json.crc"  # Hadoop checksum of the manifest
+    if crc.exists():
+        crc.unlink()
+    res = run_pipeline(spark, files, CFG, root)
+    assert res["resumed_stages"] == []
+    assert {k: v for k, v in res.items() if k != "resumed_stages"} == {
+        k: v for k, v in first.items() if k != "resumed_stages"
+    }
 
 
 def test_config_change_invalidates_checkpoints(spark, tiny_corpus, tmp_path):

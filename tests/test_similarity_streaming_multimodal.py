@@ -5,6 +5,8 @@ import pandas as pd
 import pyspark.sql.functions as F
 import pytest
 
+from probminhash_spark import hfs
+
 
 def _embeddings_df(spark, n=300, dim=64, seed=3):
     rng = np.random.default_rng(seed)
@@ -343,7 +345,7 @@ def test_streaming_bucket_pruning_reads_fraction_of_state(spark, tmp_path):
     dedup.debug_metrics = True
     dedup.process_batch(spark.createDataFrame(docs("a", 30)), batch_id=0)
     state_files, state_bytes = dedup.bands.scan_metrics(
-        dedup.bands.glob_dirs(f"{dedup.bands.delta_base}/batch_id=*/bucket=*")
+        hfs.glob_dirs(spark, f"{dedup.bands.delta_base}/batch_id=*/bucket=*")
     )
     assert state_files > 100  # 30 x 32 = 960 band keys over 1024 buckets
     # a 2-doc batch touches <= 2 x 32 = 64 buckets out of 1024
@@ -365,7 +367,6 @@ def test_streaming_state_probe_works_on_uri_paths(spark, tmp_path):
     from probminhash_spark.config import DedupConfig
     from probminhash_spark.corpus import generate_files
     from probminhash_spark.streaming.dedup_stream import StreamingDeduper
-    from probminhash_spark.streaming.lsm import batch_partitions_exist
 
     files = generate_files(n_files=30, n_clusters=3, seed=13)
     state_uri = "file://" + str(tmp_path / "state")
@@ -379,7 +380,7 @@ def test_streaming_state_probe_works_on_uri_paths(spark, tmp_path):
     edges = spark.read.parquet(str(tmp_path / "state" / "edges"))
     cross = edges.where(F.col("batch_id") == 1)
     assert cross.count() > 0, "batch 1 found no candidates vs batch 0 state"
-    assert batch_partitions_exist(spark, dedup.edges_dir)
+    assert hfs.glob_dirs(spark, f"{dedup.edges_dir}/batch_id=*")
     # replay of batch 1 under the URI dir stays a no-op (prior-edge anti-join
     # + partition overwrite both reached through the Hadoop FS)
     before = sorted(map(tuple, edges.collect()))
@@ -418,8 +419,8 @@ def test_streaming_compaction_preserves_semantics(spark, tmp_path):
     assert raw01.where("batch_id = 0").count() > 0
     assert raw01.where("batch_id = 1").count() > 0
     # the folded deltas are reclaimed
-    assert not dedup.bands.glob_dirs(f"{dedup.bands.delta_base}/batch_id=0")
-    assert not dedup.bands.glob_dirs(f"{dedup.bands.delta_base}/batch_id=1")
+    assert not hfs.glob_dirs(spark, f"{dedup.bands.delta_base}/batch_id=0")
+    assert not hfs.glob_dirs(spark, f"{dedup.bands.delta_base}/batch_id=1")
     # re-ingest batch 0's docs as batch 3 under a different path (new doc_id):
     # every one is a duplicate of a COMPACTED state row
     re0 = thirds[0].copy()
@@ -1324,8 +1325,8 @@ def test_streaming_lsm_long_run_soak(spark, tmp_path):
             stale = [k for k in dedup.bands.delta_batch_ids() if k <= manifest["through"]]
             assert not stale, f"batch {b}: unreclaimed deltas {stale}"
         n_files, _ = dedup.bands.scan_metrics(
-            dedup.bands.glob_dirs(f"{dedup.bands.delta_base}/batch_id=*/bucket=*")
-            + dedup.bands.glob_dirs(f"{dedup.bands.compact_base}/seg=*/bucket=*")
+            hfs.glob_dirs(spark, f"{dedup.bands.delta_base}/batch_id=*/bucket=*")
+            + hfs.glob_dirs(spark, f"{dedup.bands.compact_base}/seg=*/bucket=*")
         )
         max_files_seen = max(max_files_seen, n_files)
     # steady-state bound: <= max_segments segments + compact_every pending
