@@ -18,7 +18,8 @@ import sys
 import time
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+ROOT = str(Path(__file__).resolve().parent.parent)
+sys.path.insert(0, ROOT)
 
 from probminhash_spark.config import DedupConfig  # noqa: E402
 from probminhash_spark.session import get_spark  # noqa: E402
@@ -44,7 +45,13 @@ def main(argv=None) -> int:
         cfg = DedupConfig(**json.loads(raw))
     else:
         cfg = DedupConfig()
-    spark = get_spark(app_name="probminhash-dedup", master=args.master)
+    # the Python workers import the package too, from wherever the job was
+    # started: executorEnv reaches them under spark-submit as well
+    spark = get_spark(
+        app_name="probminhash-dedup",
+        master=args.master,
+        extra_conf={"spark.executorEnv.PYTHONPATH": ROOT},
+    )
     spark.sparkContext.setLogLevel("ERROR")
     t0 = time.time()
 

@@ -1,8 +1,8 @@
 """Vectorized ProbMinHash2 (Ertl, arXiv:1911.00675 algorithm 2).
 
 Port of ``probminhash2.rs:74-137``.  Per item: rng <- hash(id);
-``h_0 = winv * Exp1``; then repeatedly pick the next slot by lazy Fisher-Yates
-sampling *without replacement* (``fyshuffle.rs:37-49``) and grow
+``h_0 = winv * Exp1``; then repeatedly pick the next slot without
+replacement (``rng.FYWalk.next_slot``) and grow
 ``h += winv * beta_i * Exp1`` with ``beta_i = m/(m-i-1)`` (``probminhash2.rs:56-58``),
 stopping when ``h >= qmax`` (tournament max over slots).
 
@@ -10,8 +10,8 @@ Batch equivalence: same argument as ProbMinHash3a (see probminhash.py) — the
 per-item draw stream (e_0, u_0, e_1, u_1, ...) is consumed in fixed order and
 candidates skipped by the early exit satisfy ``h >= qmax_t >= V_final[k]``;
 order-free rounds over a conservative qmax evaluate a superset of candidates
-with identical per-slot argmin.  One wrinkle vs 3a: the slot comes from a
-per-item permutation state (v array), so lanes are chunked like superminhash.
+with identical per-slot argmin.  The per-doc qmax is refreshed for touched
+docs only.
 
 Deviation: ``Exp1`` sampled by inverse CDF (rand_distr uses Ziggurat) —
 distribution-identical, stream-different; estimator behavior pinned by the
@@ -23,7 +23,7 @@ from __future__ import annotations
 import numpy as np
 
 from .hashes import hash_u64
-from .rng import Xoshiro256pp, exp1
+from .rng import FYWalk, exp1
 
 U64 = np.uint64
 
@@ -51,43 +51,23 @@ def probminhash2_batch(
     vals = np.full(ndocs * m, np.inf, dtype=np.float64)
     sig = np.zeros(ndocs * m, dtype=U64)
     vals2d = vals.reshape(ndocs, m)
-    if lanes_per_chunk is None:
-        lanes_per_chunk = max(1024, (1 << 22) // max(m, 1))
+    qmax = np.full(ndocs, np.inf)  # per-doc max slot value
     seeds = hash_u64(item_hash, hasher)
-    n = doc_idx.shape[0]
-    for lo in range(0, n, lanes_per_chunk):
-        hi = min(lo + lanes_per_chunk, n)
-        docs = doc_idx[lo:hi]
-        items = item_hash[lo:hi]
-        winv = 1.0 / weights[lo:hi]
-        nl = docs.shape[0]
-        rng = Xoshiro256pp(seeds[lo:hi])
-        v = np.tile(np.arange(m, dtype=np.int32), (nl, 1))
-        prow = np.arange(nl)
-        h = winv * exp1(rng)
+    size = lanes_per_chunk or max(1024, (1 << 22) // max(m, 1))
+    for w in FYWalk.chunks(seeds, m, size, docs=doc_idx, items=item_hash, winv=1.0 / weights):
+        w.track(h=w.winv * exp1(w.rng))
         for i in range(m):
-            qmax = vals2d.max(axis=1)[docs]
-            live = h < qmax
-            if not live.any():
+            if not w.keep(w.h < qmax[w.docs]):
                 break
-            if not live.all():
-                docs, items, winv, h, prow = (
-                    docs[live], items[live], winv[live], h[live], prow[live],
-                )
-                rng.s = rng.s[live]
-            # lazy FY sample without replacement (fyshuffle.rs:42-48)
-            u = rng.next_f64()
-            idx = (i + (u * (m - i)).astype(np.int64)).clip(0, m - 1)
-            slot = v[prow, idx].copy()
-            v[prow, idx] = v[prow, i]
-            v[prow, i] = slot
-            flat = docs * m + slot.astype(np.int64)
-            np.minimum.at(vals, flat, h)
-            won = vals[flat] == h
-            sig[flat[won]] = items[won]
+            flat = w.docs * m + w.next_slot(i)
+            np.minimum.at(vals, flat, w.h)
+            won = vals[flat] == w.h
+            sig[flat[won]] = w.items[won]
+            touched = np.unique(w.docs[won])
+            qmax[touched] = vals2d[touched].max(axis=1)
             if i == m - 1:
                 break
-            h = h + winv * betas[i] * exp1(rng)
+            w.h = w.h + w.winv * betas[i] * exp1(w.rng)
     return sig.reshape(ndocs, m), vals2d
 
 

@@ -25,7 +25,7 @@ from __future__ import annotations
 import numpy as np
 
 from .hashes import combine64, hash_u64, mix64
-from .rng import Xoshiro256pp, exp1
+from .rng import FYWalk, Xoshiro256pp, exp1
 
 U64 = np.uint64
 
@@ -107,8 +107,8 @@ def probordminhash2_batch(
 
     Bit-identical to :meth:`ProbOrdMinHash2.hash_seq` per doc (equivalence
     enforced in tests): docs are independent, so the batch processes item
-    position t of EVERY doc in lockstep — one lane per doc — and runs the
-    per-item FY walk as a masked inner loop over lanes.  Each lane's rng,
+    position t of EVERY doc in lockstep — one ``rng.FYWalk`` lane per doc,
+    dropped when its walk ends.  Each lane's rng,
     seed, and walk-termination rules (break on failed insert / no further
     update possible / nb+1 >= m, ``probordminhash2.rs:279-300``) are the
     same as the sequential kernel; within a step all lanes touch distinct
@@ -157,25 +157,14 @@ def probordminhash2_batch(
     rows_all = np.arange(ndocs)
     for t in range(max_items):
         lanes = rows_all[counts > t]  # docs that have an item at position t
-        item = offsets[lanes] + t  # flat index of that item
-        nl = lanes.shape[0]
-        rng = Xoshiro256pp(lane_seed[item])
-        x = exp1(rng)
-        v = np.tile(np.arange(m, dtype=np.int64), (nl, 1))
-        nb = np.zeros(nl, dtype=np.int64)
-        lr = np.arange(nl)
-        alive = x < qmax[lanes]
-        while alive.any():
-            u = rng.next_f64(alive)
-            idx = np.minimum(nb + (u * (m - nb)).astype(np.int64), m - 1)
-            k = v[lr, idx]
-            v[lr, idx] = np.where(alive, v[lr, nb], v[lr, idx])
-            v[lr, nb] = np.where(alive, k, v[lr, nb])
-            d = lanes
-            inserted = alive & (x < values[d, k, l - 1])
-            if inserted.any():
-                di, ki = d[inserted], k[inserted]
-                xi = x[inserted]
+        w = FYWalk(lane_seed[offsets[lanes] + t], m, d=lanes)
+        w.track(x=exp1(w.rng), nb=np.zeros(lanes.shape[0], dtype=np.int64))
+        live = w.x < qmax[w.d]
+        while w.keep(live):
+            k = w.next_slot(w.nb)
+            ins = w.x < values[w.d, k, l - 1]
+            if ins.any():
+                di, ki, xi = w.d[ins], k[ins], w.x[ins]
                 row = values[di, ki]  # (ni, l) copies
                 pos = (row < xi[:, None]).sum(axis=1)
                 irow = indices[di, ki]
@@ -191,12 +180,12 @@ def probordminhash2_batch(
                 qmax[di] = values[di, :, l - 1].max(axis=1)
             # walk-termination mirrors hash_seq: failed insert dies; after a
             # successful insert, die if x >= qmax or nb+1 >= m
-            alive = inserted & (x < qmax[lanes]) & (nb + 1 < m)
-            e = exp1(rng, alive)
-            x = np.where(alive, x + e * g[np.minimum(nb, m - 2)], x)
-            nb = nb + alive.astype(np.int64)
+            if not w.keep(ins & (w.x < qmax[w.d]) & (w.nb + 1 < m)):
+                break
+            w.x = w.x + exp1(w.rng) * g[w.nb]
+            w.nb = w.nb + 1
             # loop-top re-check of `while x < qmax` after the x increment
-            alive &= x < qmax[lanes]
+            live = w.x < qmax[w.d]
     if (indices < 0).any():
         raise ValueError("slot not filled; increase data size or lower m")
     # signature combine: per (doc, slot), chain over the l stored positions

@@ -152,6 +152,64 @@ class Xoshiro256pp:
         return out
 
 
+class FYWalk:
+    """Lazy Fisher-Yates walk over m slots (``fyshuffle.rs:37-49``), one lane
+    per item: a row of a ``(lanes, m)`` permutation matrix plus an
+    item-seeded Xoshiro256++ stream.  ``take(j, idx)`` swaps positions ``j``
+    and ``idx >= j`` and returns the slot now at ``j``, so a lane visits slots
+    without replacement.  Per-lane arrays passed as keywords (or to
+    ``track``) read as attributes; ``keep(live)`` compacts the rng state and
+    every one of them to the live lanes, so a round costs O(live lanes) and
+    a dropped lane's skipped draws touch no other lane's stream.
+    """
+
+    def __init__(self, seeds: np.ndarray, m: int, **lanes: np.ndarray):
+        self.m = m
+        self.rng = Xoshiro256pp(seeds)
+        self._p = np.tile(np.arange(m, dtype=np.int32), (self.rng.n, 1))
+        self._row = np.arange(self.rng.n)  # live lane -> row of _p
+        self._names = ()
+        self.track(**lanes)
+
+    @classmethod
+    def chunks(cls, seeds: np.ndarray, m: int, size: int, **lanes: np.ndarray):
+        """One walker per ``size`` consecutive lanes: the permutation matrix
+        stays ``size x m`` however many items there are."""
+        for lo in range(0, seeds.shape[0], size):
+            yield cls(seeds[lo : lo + size], m, **{k: v[lo : lo + size] for k, v in lanes.items()})
+
+    def track(self, **lanes: np.ndarray) -> None:
+        self._names += tuple(lanes)
+        self.__dict__.update(lanes)
+
+    def keep(self, live: np.ndarray) -> bool:
+        """Drop the lanes where ``live`` is False; False once none is left."""
+        if live.all():
+            return True
+        if not live.any():
+            return False
+        self.rng.s = self.rng.s[live]
+        self._row = self._row[live]
+        for name in self._names:
+            setattr(self, name, getattr(self, name)[live])
+        return True
+
+    def take(self, j: int | np.ndarray, idx: np.ndarray) -> np.ndarray:
+        """Swap positions ``j`` and ``idx`` (scalar or per-lane ``j``) and
+        return the slot now at ``j``, as int64."""
+        row, p = self._row, self._p
+        slot = p[row, idx]
+        p[row, idx] = p[row, j]
+        p[row, j] = slot
+        return slot.astype(np.int64)
+
+    def next_slot(self, j: int | np.ndarray) -> np.ndarray:
+        """``take`` at the u01-mapped index ``j + floor(u (m - j))``
+        (``fyshuffle.rs:42-44``), one ``next_f64`` per lane."""
+        u = self.rng.next_f64()
+        return self.take(j, np.minimum(j + (u * (self.m - j)).astype(np.int64), self.m - 1))
+
+
 def _umul128(a: np.ndarray, b: np.ndarray | np.uint64):
     """Full 64x64 -> 128-bit multiply returning (hi, lo) via 32-bit limbs."""
     M32 = U64(0xFFFFFFFF)

@@ -6,16 +6,13 @@ Per item the reference walks ``j = 0..m-1`` drawing exponential spacings
 Fisher-Yates permutation, keeping the per-slot **max** with two early exits on
 the running register minimum ``lower_k`` (``setsketcher.rs:291-368``).
 
-Batch equivalence: ``x_j`` increases, so per-item candidate register values
-decrease with ``j``; every candidate skipped by the early exits satisfies
-``k <= lower_k_t <=`` all current registers and can never raise a register.
-Using a conservative (stale, smaller) per-doc ``lower_k`` refreshed between
-lane chunks therefore evaluates a superset of the reference's candidates and
-produces the identical register vector.
+Batch equivalence: see ``setsketch_batch``.  Its per-doc stop is never
+tighter than the reference's ``lower_k`` exit, so it evaluates a superset of
+the reference's candidates and every per-slot max is unchanged.
 
 Documented deviation: ``Exp1`` is sampled by inverse CDF instead of
-rand_distr's Ziggurat, and the FY index uses the same u01 mapping as
-``fyshuffle.rs:42-44`` — distribution-identical, stream-different; all
+rand_distr's Ziggurat (the slot draw is ``rng.FYWalk.next_slot``, the u01
+mapping of ``fyshuffle.rs``) — distribution-identical, stream-different; all
 estimator behavior is pinned by the reference's own 3-sigma acceptance tests
 (mirrored in tests/).
 
@@ -30,7 +27,7 @@ from dataclasses import dataclass
 import numpy as np
 
 from .hashes import hash_u64
-from .rng import Xoshiro256pp, exp1
+from .rng import FYWalk, exp1
 
 U64 = np.uint64
 
@@ -75,46 +72,34 @@ def setsketch_batch(
     draws and one scatter-min per candidate, NO per-candidate log/floor —
     and a single log evaluates on the reduced (ndocs, m) matrix at the end.
 
-    Equivalence with the reference's early-exit walk
-    (``setsketcher.rs:291-368``): each item's draw stream is a fixed prefix
-    (e_j, u_j) and the early exits only choose where the prefix stops; every
-    candidate the reference skips satisfies z <= lower_k <= all final
-    registers, so evaluating the full superset of candidates leaves every
-    per-slot max (= z of per-slot min x) unchanged.  At the reference's own
-    parameters (a=20) the exit thresholds b^-lower_k are rarely reachable
-    within m rounds anyway, so the superset costs ~nothing and removes all
-    alive-lane bookkeeping from the hot loop (~3x).
+    Early exit (the monotone stop of ``setsketcher.rs:291-368``): an item's
+    ``x_j`` only grows and every ``xmin_k`` only shrinks, so once ``x_j``
+    reaches the max of its document's ``xmin`` (refreshed for touched docs
+    every round) no later candidate can lower a slot and the lane leaves the
+    ``rng.FYWalk`` walk.  The registers equal those of walking all m rounds
+    for every item.  Docs with an unfilled slot have an infinite bound.
     """
     p = params or SetSketchParams()
     m, q, a, lnb = p.m, p.q, p.a, p.lnb
     doc_idx = np.ascontiguousarray(doc_idx, dtype=np.int64)
     item_hash = np.ascontiguousarray(item_hash, dtype=U64)
     xmin = np.full(ndocs * m, np.inf, dtype=np.float64)
-    if lanes_per_chunk is None:
-        lanes_per_chunk = max(128, (1 << 21) // max(m, 1))
+    xmin2d = xmin.reshape(ndocs, m)
+    xbound = np.full(ndocs, np.inf)  # per-doc max over slots of xmin
     seeds = hash_u64(item_hash, hasher)
-    inva = 1.0 / a
-    iq1 = q + 1
-    n = doc_idx.shape[0]
-    for lo in range(0, n, lanes_per_chunk):
-        hi = min(lo + lanes_per_chunk, n)
-        docs_m = doc_idx[lo:hi] * m
-        nl = docs_m.shape[0]
-        rng = Xoshiro256pp(seeds[lo:hi])
-        v = np.tile(np.arange(m, dtype=np.int32), (nl, 1))  # FY value array
-        rows = np.arange(nl)
-        x = np.zeros(nl, dtype=np.float64)
+    size = lanes_per_chunk or max(128, (1 << 21) // max(m, 1))
+    for w in FYWalk.chunks(seeds, m, size, docs=doc_idx, x=np.zeros(doc_idx.shape[0])):
         for j in range(m):
-            x += (inva / (m - j)) * exp1(rng)
-            # lazy FY with u01 index mapping (fyshuffle.rs:42-48)
-            idx = (j + (rng.next_f64() * (m - j)).astype(np.int64)).clip(0, m - 1)
-            slot_val = v[rows, idx].copy()
-            v[rows, idx] = v[rows, j]
-            v[rows, j] = slot_val
-            np.minimum.at(xmin, docs_m + slot_val, x)
+            w.x = w.x + (1.0 / a / (m - j)) * exp1(w.rng)
+            if not w.keep(w.x < xbound[w.docs]):
+                break
+            flat = w.docs * m + w.next_slot(j)
+            np.minimum.at(xmin, flat, w.x)
+            touched = np.unique(w.docs[xmin[flat] == w.x])
+            xbound[touched] = xmin2d[touched].max(axis=1)
     with np.errstate(divide="ignore", invalid="ignore"):
         z = np.floor(1.0 - np.log(xmin) / lnb)
-    regs = np.where(np.isfinite(xmin), np.clip(z, 0, min(iq1, 0xFFFF)), 0.0)
+    regs = np.where(np.isfinite(xmin), np.clip(z, 0, min(q + 1, 0xFFFF)), 0.0)
     return regs.reshape(ndocs, m).astype(np.uint16)
 
 

@@ -123,7 +123,7 @@ def group_distinct_shingles(
     )
     gc = list(group_cols)
 
-    def merge_partials(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def merge_partials(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         # phase 2 sees <= n_partitions partial rows per group, never the
         # group's members
         union = _unpack_regs(pdf["union_regs"], m).max(axis=0)
@@ -165,7 +165,7 @@ def rollup_group_sketches(
     )
     pc = list(parent_cols)
 
-    def merge_children(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def merge_children(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         union = _unpack_regs(pdf["union_regs"], m).max(axis=0)
         card, _ = setsketch_cardinality(union.astype(np.float64), params)
         return pd.DataFrame(

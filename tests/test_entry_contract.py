@@ -126,9 +126,12 @@ SIG_CFGS = {
 }
 
 
-def _spark_round2(x: float) -> float:
-    """Spark's ``round(x, 2)`` on a double: HALF_UP on its shortest decimal form."""
-    q = decimal.Decimal(repr(x)).quantize(decimal.Decimal("0.01"), decimal.ROUND_HALF_UP)
+def _spark_round(x: float, digits: int = 2) -> float:
+    """Spark's ``round(x, digits)`` on a double: HALF_UP on its shortest
+    decimal form."""
+    q = decimal.Decimal(repr(float(x))).quantize(
+        decimal.Decimal(1).scaleb(-digits), decimal.ROUND_HALF_UP
+    )
     return float(q)
 
 
@@ -169,7 +172,7 @@ def _kernel_columns(name: str, texts: list) -> dict:
         params = SetSketchParams(m=cfg.setsketch_m)
         d, h, _ = _shingle_multiset(texts, cfg)
         card, _ = setsketch_cardinality(setsketch_batch(d, h, n, params, cfg.hasher), params)
-        return {"est_distinct_shingles": [_spark_round2(c) for c in card]}
+        return {"est_distinct_shingles": [_spark_round(c) for c in card]}
     if name == "sketch_ordminhash":
         # make_ordminhash_udf(m=16, l=2) at its default seed
         return joined("ord_sig", _ordminhash_np(texts, 16, 2, 0x5EED))
@@ -194,7 +197,20 @@ def _union_cardinality(regs: np.ndarray, params) -> float:
     from probminhash_spark.kernels.setsketch import setsketch_cardinality
 
     card, _ = setsketch_cardinality(regs.max(axis=0).astype(np.float64), params)
-    return _spark_round2(float(card))
+    return _spark_round(float(card))
+
+
+def _member_regs(docs: pd.DataFrame):
+    """Each document's SetSketch registers under the group queries' config."""
+    from probminhash_spark.config import DedupConfig
+    from probminhash_spark.functions.sketch_udfs import _shingle_multiset
+    from probminhash_spark.kernels.setsketch import SetSketchParams, setsketch_batch
+
+    cfg = DedupConfig(setsketch_m=256)  # the group queries' config
+    params = SetSketchParams(m=cfg.setsketch_m)
+    texts = docs["text"].fillna("").tolist()
+    d, h, _ = _shingle_multiset(texts, cfg)
+    return setsketch_batch(d, h, len(texts), params, cfg.hasher), params
 
 
 @pytest.mark.parametrize(
@@ -202,17 +218,9 @@ def _union_cardinality(regs: np.ndarray, params) -> float:
     [("sketch_group_cardinality", "source"), ("sketch_group_rollup", "lang")],
 )
 def test_group_sketch_query_values(spark, name, key):
-    from probminhash_spark.config import DedupConfig
-    from probminhash_spark.functions.sketch_udfs import _shingle_multiset
-    from probminhash_spark.kernels.setsketch import SetSketchParams, setsketch_batch
-
     got = entry_mod.queries()[name](spark, SF_DIR).toPandas()
     docs = pd.read_parquet(f"{SF_DIR}/documents.parquet")
-    cfg = DedupConfig(setsketch_m=256)  # the group queries' config
-    params = SetSketchParams(m=cfg.setsketch_m)
-    texts = docs["text"].fillna("").tolist()
-    d, h, _ = _shingle_multiset(texts, cfg)
-    regs = setsketch_batch(d, h, len(texts), params, cfg.hasher)
+    regs, params = _member_regs(docs)
     want = {}
     for k, idx in docs.groupby(key).indices.items():
         row = {
@@ -225,3 +233,44 @@ def test_group_sketch_query_values(spark, name, key):
     assert got[key].tolist() == sorted(want), f"{name}: groups or order differ"
     for col in want[next(iter(want))]:
         assert got[col].tolist() == [want[k][col] for k in got[key]], f"{name}: {col}"
+
+
+@pytest.mark.parametrize("name", ["sketch_group_jaccard", "sketch_group_jaccard_banded"])
+def test_group_jaccard_query_values(spark, name):
+    """Both group-Jaccard queries report, per pair of groups, the three
+    estimators over the register-wise max of the members' SetSketches.  The
+    broadcast query lists every pair; the banded one a subset of the pairs
+    with ``j_est >= 0.2``."""
+    from probminhash_spark.kernels.setsketch import (
+        setsketch_jaccard_mle,
+        setsketch_jaccard_mle_b1,
+    )
+
+    got = entry_mod.queries()[name](spark, SF_DIR).toPandas()
+    docs = pd.read_parquet(f"{SF_DIR}/documents.parquet")
+    regs, params = _member_regs(docs)
+    if name == "sketch_group_jaccard":
+        key = docs["source"]
+    else:  # groups are pmod(doc_id, 8) as strings
+        key = (docs["doc_id"] % 8).astype(str)
+    union = {k: regs[idx].max(axis=0) for k, idx in docs.groupby(key).indices.items()}
+    pairs = [(a, b) for a in sorted(union) for b in sorted(union) if a < b]
+    la = np.stack([union[a] for a, _ in pairs])
+    ra = np.stack([union[b] for _, b in pairs])
+    est = {
+        "j_est": (la == ra).mean(axis=1),
+        "j_mle": setsketch_jaccard_mle(la, ra, params),
+        "j_mle_b1": setsketch_jaccard_mle_b1(la, ra, params),
+    }
+    want = {
+        p: {c: _spark_round(v[i], 6) for c, v in est.items()} for i, p in enumerate(pairs)
+    }
+    got_pairs = list(zip(got["key_l"], got["key_r"]))
+    if name == "sketch_group_jaccard":
+        assert got_pairs == pairs, "not every pair of groups, in key order"
+    else:
+        above = {p for i, p in enumerate(pairs) if est["j_est"][i] >= 0.2}
+        assert got_pairs and set(got_pairs) <= above, "banded pairs outside j_est >= 0.2"
+        assert got_pairs == sorted(got_pairs)
+    for col in est:
+        assert got[col].tolist() == [want[p][col] for p in got_pairs], f"{name}: {col}"

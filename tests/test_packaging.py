@@ -91,3 +91,25 @@ def test_dedup_job_rejects_removed_config_knob(monkeypatch):
             ["--input", "synthetic:4", "--output", "/x",
              "--config", '{"verify_by_class": true}']
         )
+
+
+def test_dedup_job_runs_from_any_working_directory(tmp_path):
+    """The Python workers find the package without PYTHONPATH when the job
+    is started from outside the repo (before, the first pandas-UDF task died
+    with ``ModuleNotFoundError: probminhash_spark``)."""
+    import json
+    import os
+
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, str(REPO / "jobs" / "dedup.py"), "--input", "synthetic:50",
+         "--output", str(tmp_path / "out"), "--master", "local[2]"],
+        capture_output=True,
+        text=True,
+        cwd=str(tmp_path),
+        env=env,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    summary = json.loads(out.stdout[out.stdout.index('{"config_fingerprint'):])
+    assert summary["files"] == 50 and summary["sha256_checked"] == 50

@@ -36,10 +36,13 @@ def test_group_distinct_shingles_and_jaccard(spark, tiny_corpus):
         assert abs(r["j_mle"] - r["j_mle_b1"]) < 0.05
 
 
+@pytest.mark.filterwarnings("error::UserWarning")
 def test_rollup_equals_direct_aggregation(spark, tiny_corpus):
     """Merging child group sketches up a hierarchy must be BIT-identical to
     aggregating the documents directly at the parent level (associativity/
-    commutativity of the slot max — setsketcher.rs:428-446)."""
+    commutativity of the slot max — setsketcher.rs:428-446).  Both
+    ``applyInPandas`` merges type their group key, so PySpark infers their
+    eval type without a warning."""
     from probminhash_spark.operators.sketch_ops import rollup_group_sketches
 
     cfg = DedupConfig(setsketch_m=256)
