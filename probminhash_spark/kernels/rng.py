@@ -27,8 +27,10 @@ _GOLDEN = U64(0x9E3779B97F4A7C15)
 _MIX1 = U64(0xBF58476D1CE4E5B9)
 _MIX2 = U64(0x94D049BB133111EB)
 
-# numpy integer ops wrap mod 2^64 which is exactly what we want; silence the
-# over/underflow warnings locally instead of globally.
+# numpy integer ops wrap mod 2^64 which is exactly what we want.  Array
+# arithmetic wraps silently; only numpy *scalar* arithmetic warns, so the
+# over/underflow warnings are silenced locally where scalars combine (or an
+# input may be 0-d), never per step of a lane-stepping loop.
 _err = dict(over="ignore", under="ignore")
 
 
@@ -53,9 +55,9 @@ def splitmix64_stream(seed: np.ndarray, n: int) -> np.ndarray:
 
 
 def _rotl(x: np.ndarray, k: int) -> np.ndarray:
+    """Rotate every lane of the (>= 1-D) ``x`` left by ``k`` bits."""
     k = U64(k)
-    with np.errstate(**_err):
-        return (x << k) | (x >> (U64(64) - k))
+    return (x << k) | (x >> (U64(64) - k))
 
 
 class Xoshiro256pp:
@@ -88,15 +90,14 @@ class Xoshiro256pp:
     def next_u64(self, mask: np.ndarray | None = None) -> np.ndarray:
         s = self.s
         s0, s1, s2, s3 = s[:, 0], s[:, 1], s[:, 2], s[:, 3]
-        with np.errstate(**_err):
-            result = _rotl(s0 + s3, 23) + s0
-            t = s1 << U64(17)
-            n2 = s2 ^ s0
-            n3 = s3 ^ s1
-            n1 = s1 ^ n2
-            n0 = s0 ^ n3
-            n2 = n2 ^ t
-            n3 = _rotl(n3, 45)
+        result = _rotl(s0 + s3, 23) + s0
+        t = s1 << U64(17)
+        n2 = s2 ^ s0
+        n3 = s3 ^ s1
+        n1 = s1 ^ n2
+        n0 = s0 ^ n3
+        n2 = n2 ^ t
+        n3 = _rotl(n3, 45)
         if mask is None:
             s[:, 0], s[:, 1], s[:, 2], s[:, 3] = n0, n1, n2, n3
         else:

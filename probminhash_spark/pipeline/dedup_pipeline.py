@@ -19,6 +19,12 @@ over stale input.  Safe because every stage is a pure function of (input
 table, config), SURVEY.md §1.2.  ``content_sha256`` is carried into the
 signatures table and re-checked on every run.
 
+A fresh stage costs one Spark job per table it writes: the manifest's row
+counts are observed during the write (``DataFrame.observe``), never a
+recount, and the table is read back with the schema it was written with, so
+no parquet schema-inference job runs either.  A resumed stage takes its
+counts from its manifest.
+
 Shuffle frontiers (the four to budget at 100 TB): signatures repartition,
 band groupBy/self-join, verify join, each clustering round.  Everything else
 is narrow + Arrow-vectorized.
@@ -29,7 +35,7 @@ from __future__ import annotations
 import time
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 from .. import hfs
 from ..config import DedupConfig
@@ -78,9 +84,10 @@ def run_pipeline(
         """Load ``stage`` if every earlier stage resumed and its manifest
         matches the fingerprint.  Otherwise delete its manifest and every
         later one, write the tables ``build()`` returns (``{name: frame}``,
-        the stage's own first), count them and write the manifest.  The
-        stage's row count lands in ``counters[counter]``, a side table's
-        under its own name.  Returns the stage table as checkpointed."""
+        the stage's own first), each in one job whose row count is observed
+        during the write, and write the manifest.  The stage's row count
+        lands in ``counters[counter]``, a side table's under its own name.
+        Returns the stage table as checkpointed."""
         i = STAGES.index(stage)
         chained = len(resumed) == i  # every earlier stage resumed
         m = read_manifest(spark, root, stage) if chained else None
@@ -92,11 +99,19 @@ def run_pipeline(
                 for later in STAGES[i:]:
                     hfs.delete(spark, _path(root, later, MANIFEST))
             tables = build()
+            seen = {name: Observation(name) for name in tables}
             for name, df in tables.items():
-                df.write.mode("overwrite").parquet(_path(root, name, "data"))
-            out = read(stage)
-            rows = {"rows": out.count()}
-            rows.update((name, read(name).count()) for name in list(tables)[1:])
+                observed = df.observe(seen[name], F.count(F.lit(1)).alias("n"))
+                observed.write.mode("overwrite").parquet(_path(root, name, "data"))
+            # file sources read every column as nullable, so the built
+            # frame's schema is the inferred one, without an inference job
+            out = spark.read.schema(tables[stage].schema).parquet(
+                _path(root, stage, "data")
+            )
+            rows = {
+                "rows" if name == stage else name: obs.get["n"]
+                for name, obs in seen.items()
+            }
             manifest = {
                 "stage": stage,
                 "status": "complete",

@@ -34,6 +34,14 @@ def get_spark(
       the hundreds-of-MB range inside the Python worker.
     - AQE + skew-join on: band-bucket self-joins have semantic skew; AQE
       splits oversized shuffle partitions at runtime.
+    - Cached plans may change their output partitioning
+      (``canChangeCachedPlanOutputPartitioning``): Spark's default keeps a
+      pinned frame at the full ``shuffle.partitions`` count, so every
+      consumer of a small pin (the pipeline's band buckets, the driver
+      queries' and streaming batches' pins) would run that many tasks, most
+      of them over empty partitions.  With it on, AQE coalesces a cached
+      plan's shuffle like any other, and the planner adds an exchange for
+      any consumer that needs the partitioning the coalesced pin lacks.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
@@ -49,6 +57,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         # pair-set joins carry no useful ordering: when AQE's runtime size
         # gate rules out broadcast, fall back to a shuffled hash join on the
         # id key rather than sorting both sides (SMJ)

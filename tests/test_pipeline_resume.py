@@ -108,11 +108,22 @@ def test_default_sketch_identity_is_pinned():
     assert DedupConfig().sketch_identity() == "8a4615a3d618bba4"
 
 
-def test_mega_bucket_star_cap_and_cluster_recall(spark, tmp_path):
-    """F5 skew: a flood of identical files (every band bucket > cap) plus a
-    viral license header.  The star cap must bound pair expansion to O(size)
-    while the *cluster assignment* (the north-rule metric) stays equal to the
-    exact-truth partition."""
+# every table a fresh pass writes -> the counter its manifest reports
+TABLE_COUNTERS = {
+    "signatures": "files",
+    "bands": "band_rows",
+    "candidates": "candidate_pairs",
+    "dropped_buckets": "dropped_buckets",
+    "edges": "duplicate_edges",
+    "clusters": "clustered_files",
+}
+EMPTY_FILES = "repo string, path string, commit string, lang string, content string"
+MEGA_CFG = DedupConfig(threshold=0.8, est_low_cut=0.4, bucket_cap=20)
+
+
+def _mega_bucket_files():
+    """A flood of 40 identical files (every band bucket > cap 20) plus a
+    viral license header over 30% of a 260-file corpus."""
     import pandas as pd
 
     corpus = make_corpus(n_files=260, n_clusters=10, seed=11)
@@ -131,17 +142,71 @@ def test_mega_bucket_star_cap_and_cluster_recall(spark, tmp_path):
         ]
     )
     viral = inject_viral_block(base, fraction=0.3, seed=7, repeats=10)
-    all_files = pd.concat([viral, clones], ignore_index=True)
+    return pd.concat([viral, clones], ignore_index=True)
+
+
+@pytest.mark.parametrize("corpus", ["tiny", "mega_bucket", "empty"])
+def test_fresh_counters_equal_table_recounts(spark, tiny_corpus, tmp_path, corpus):
+    """A fresh pass's counters are its writes' observed row counts: each
+    equals a recount of the table written, with capped buckets recorded
+    (mega-bucket corpus) and on an empty input, whose writes AQE may empty
+    out before the observed node runs."""
+    cfg = MEGA_CFG if corpus == "mega_bucket" else CFG
+    files = {
+        "tiny": lambda: spark.createDataFrame(tiny_corpus.files),
+        "mega_bucket": lambda: spark.createDataFrame(_mega_bucket_files()),
+        "empty": lambda: spark.createDataFrame([], EMPTY_FILES),
+    }[corpus]()
+    root = str(tmp_path / "ckcount")
+    got = run_pipeline(spark, files, cfg, root)
+    assert got["resumed_stages"] == []
+    recount = {
+        counter: spark.read.parquet(f"{root}/{table}/data").count()
+        for table, counter in TABLE_COUNTERS.items()
+    }
+    assert {k: got[k] for k in recount} == recount
+    if corpus == "mega_bucket":
+        assert got["dropped_buckets"] > 0
+    if corpus == "empty":
+        assert set(recount.values()) == {0}
+        assert got["duplicate_groups"] == 0
+
+
+# Spark jobs of one fresh pass over tiny_corpus, AQE's shuffle-map jobs
+# included.  Measured at 20 with one observed write per table; counting each
+# table and inferring its schema after the write took the pass to 38.
+FRESH_PASS_JOBS = 20
+
+
+def test_fresh_pass_job_budget(spark, tiny_corpus, tmp_path):
+    files = spark.createDataFrame(tiny_corpus.files)
+    sc = spark.sparkContext
+    group = "test-fresh-pass-job-budget"
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)  # AQE's jobs inherit it
+    try:
+        run_pipeline(spark, files, CFG, str(tmp_path / "ckjobs"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < jobs <= FRESH_PASS_JOBS + 2, jobs
+
+
+def test_mega_bucket_star_cap_and_cluster_recall(spark, tmp_path):
+    """F5 skew: a flood of identical files (every band bucket > cap) plus a
+    viral license header.  The star cap must bound pair expansion to O(size)
+    while the *cluster assignment* (the north-rule metric) stays equal to the
+    exact-truth partition."""
+    all_files = _mega_bucket_files()
     from probminhash_spark.corpus import exact_truth
 
     truth_pairs, truth_clusters = exact_truth(
         all_files["content"].tolist(), "char", 8, CFG.threshold
     )
     files = with_doc_id(spark.createDataFrame(all_files), ["repo", "path", "commit"])
-    cfg_capped = DedupConfig(threshold=0.8, est_low_cut=0.4, bucket_cap=20)
-    sigs = with_signature(files, cfg_capped).select("doc_id", "sig").cache()
-    bands = band_explode(sigs, cfg_capped)
-    pairs, capped = candidate_pairs(bands, cfg_capped)
+    sigs = with_signature(files, MEGA_CFG).select("doc_id", "sig").cache()
+    bands = band_explode(sigs, MEGA_CFG)
+    pairs, capped = candidate_pairs(bands, MEGA_CFG)
     pairs = pairs.cache()
     n_pairs = pairs.count()
     # the flood group (41 members > cap=20) must be star-capped and audited
@@ -152,8 +217,8 @@ def test_mega_bucket_star_cap_and_cluster_recall(spark, tmp_path):
     from probminhash_spark.operators.components import assign_clusters
     from probminhash_spark.operators.dedup import estimate_pair_jaccard, verify_pairs
 
-    est = estimate_pair_jaccard(pairs, sigs, cfg_capped)
-    edges = verify_pairs(est, files.select("doc_id", "content"), cfg_capped)
+    est = estimate_pair_jaccard(pairs, sigs, MEGA_CFG)
+    edges = verify_pairs(est, files.select("doc_id", "content"), MEGA_CFG)
     clustered = assign_clusters(files.select("doc_id"), edges)
     got = {r["doc_id"]: r["cluster_id"] for r in clustered.collect()}
     rows = files.select("repo", "path", "commit", "doc_id").collect()
