@@ -238,13 +238,50 @@ def sha512_256_raw(
     return state[:, :4].byteswap()
 
 
-# vectorized cross-batch digest cache: shingle keys repeat massively across
-# documents/batches, so warm keys resolve with ONE np.searchsorted instead of
-# recomputing the compression.  Kept as a sorted array + parallel state
-# matrix — both lookup and merge are whole-array numpy, no per-key Python.
-_SHA_CACHE_KEYS = np.empty(0, dtype=U64)
-_SHA_CACHE_STATES = np.empty((0, 4), dtype=U64)
-_SHA_CACHE_MAX = 1 << 20  # 40 MB of states; vocabulary-sized in practice
+class _DigestCache:
+    """Vectorized cross-batch digest cache: shingle keys repeat massively
+    across documents/batches, so warm keys resolve with ONE np.searchsorted
+    instead of recomputing the compression.  Kept as a sorted u64 key array
+    + parallel (n, 4) state matrix — both lookup and merge are whole-array
+    numpy, no per-key Python."""
+
+    MAX_KEYS = 1 << 20  # 40 MB of states; vocabulary-sized in practice
+
+    def __init__(self) -> None:
+        # one tuple, so a merge swaps keys and states together
+        self.table = (np.empty(0, dtype=U64), np.empty((0, 4), dtype=U64))
+
+    def states(self, uniq: np.ndarray, digest) -> np.ndarray:
+        """(n, 4) states of the sorted unique keys ``uniq``: cache hits by
+        one searchsorted, misses from ``digest(miss)`` (``miss`` a bool mask
+        over ``uniq``, the result its (n_miss, 4) states), merged in while
+        the cache stays under ``MAX_KEYS``."""
+        ck, cs = self.table
+        ustates = np.empty((uniq.size, 4), dtype=U64)
+        if ck.size:
+            pos = np.searchsorted(ck, uniq)
+            hit = (pos < ck.size) & (ck[np.minimum(pos, ck.size - 1)] == uniq)
+            ustates[hit] = cs[pos[hit]]
+            miss = ~hit
+        else:
+            miss = np.ones(uniq.size, dtype=bool)
+        n_miss = int(miss.sum())
+        if n_miss:
+            mstates = digest(miss)
+            ustates[miss] = mstates
+            if ck.size + n_miss <= self.MAX_KEYS:
+                # merge-in keeping sort order (uniq[miss] is already sorted)
+                merged = np.concatenate([ck, uniq[miss]])
+                order = np.argsort(merged, kind="stable")
+                self.table = (merged[order], np.concatenate([cs, mstates])[order])
+        return ustates
+
+
+# two caches, never one: the u64-key regime digests the key's 8 bytes, the
+# raw regime the shingle's own bytes under their poly-hash, so a key shared
+# by both regimes maps to two different digests
+_SHA_CACHE = _DigestCache()
+_SHA_RAW_CACHE = _DigestCache()
 
 
 def sha512_256_states(keys: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -259,41 +296,19 @@ def sha512_256_states(keys: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     :func:`sha512_256_raw`; warm keys come from the sorted-array cache via
     one searchsorted — no per-key Python anywhere.
     """
-    global _SHA_CACHE_KEYS, _SHA_CACHE_STATES
     keys = np.asarray(keys, dtype=U64)
     uniq, inv = np.unique(keys, return_inverse=True)
-    ustates = np.empty((uniq.size, 4), dtype=U64)
-    ck = _SHA_CACHE_KEYS
-    if ck.size:
-        pos = np.searchsorted(ck, uniq)
-        hit = (pos < ck.size) & (ck[np.minimum(pos, ck.size - 1)] == uniq)
-        ustates[hit] = _SHA_CACHE_STATES[pos[hit]]
-        miss = ~hit
-    else:
-        miss = np.ones(uniq.size, dtype=bool)
-    n_miss = int(miss.sum())
-    if n_miss:
-        mkeys = uniq[miss]
-        mstates = sha512_256_raw(
-            mkeys.astype("<u8").view(np.uint8),
+
+    def digest(miss: np.ndarray) -> np.ndarray:
+        n_miss = int(miss.sum())
+        return sha512_256_raw(
+            uniq[miss].astype("<u8").view(np.uint8),
             np.arange(n_miss, dtype=np.int64) * 8,
             np.full(n_miss, 8, dtype=np.int64),
         )
-        ustates[miss] = mstates
-        if ck.size + n_miss <= _SHA_CACHE_MAX:
-            # merge-in keeping sort order (uniq[miss] is already sorted)
-            merged = np.concatenate([ck, mkeys])
-            order = np.argsort(merged, kind="stable")
-            _SHA_CACHE_KEYS = merged[order]
-            _SHA_CACHE_STATES = np.concatenate([_SHA_CACHE_STATES, mstates])[order]
-    states = ustates[inv]
+
+    states = _SHA_CACHE.states(uniq, digest)[inv]
     return states, np.ascontiguousarray(states[:, 0])
-
-
-# raw-byte digest cache, keyed by the shingle's u64 poly-hash (equal poly-hash
-# <=> equal bytes w.h.p., so one representative span per key is digested)
-_SHA_RAW_CACHE_KEYS = np.empty(0, dtype=U64)
-_SHA_RAW_CACHE_STATES = np.empty((0, 4), dtype=U64)
 
 
 def sha512_256_states_raw(
@@ -309,43 +324,26 @@ def sha512_256_states_raw(
 
     ``keys[i]`` is the u64 poly-hash of message ``buf[starts[i]:+lens[i]]``,
     used ONLY for dedup/caching (equal hash <=> equal bytes w.h.p.; a 2^-64
-    in-batch collision risk, the engine's standing shingle-identity regime).
+    in-batch collision risk, the engine's standing shingle-identity regime),
+    so one representative span per key is digested.
     Note the cache makes a collision sticky for the worker's lifetime: the
     first-seen bytes' digest is served for any later key collision across
     batches — still the same 2^-64-per-pair exposure, just persistent
     (r3 ADVICE, accepted).
     Returns (states (n,4) u64, ident (n,) u64) like :func:`sha512_256_states`.
     """
-    global _SHA_RAW_CACHE_KEYS, _SHA_RAW_CACHE_STATES
     keys = np.asarray(keys, dtype=U64)
     uniq, idx_first = np.unique(keys, return_index=True)
-    ustates = np.empty((uniq.size, 4), dtype=U64)
-    ck = _SHA_RAW_CACHE_KEYS
-    if ck.size:
-        pos = np.searchsorted(ck, uniq)
-        hit = (pos < ck.size) & (ck[np.minimum(pos, ck.size - 1)] == uniq)
-        ustates[hit] = _SHA_RAW_CACHE_STATES[pos[hit]]
-        miss = ~hit
-    else:
-        miss = np.ones(uniq.size, dtype=bool)
-    n_miss = int(miss.sum())
-    if n_miss:
+
+    def digest(miss: np.ndarray) -> np.ndarray:
         rep = idx_first[miss]
-        mstates = sha512_256_raw(
+        return sha512_256_raw(
             buf,
             np.asarray(starts, dtype=np.int64)[rep],
             np.asarray(lens, dtype=np.int64)[rep],
         )
-        ustates[miss] = mstates
-        if ck.size + n_miss <= _SHA_CACHE_MAX:
-            merged = np.concatenate([ck, uniq[miss]])
-            order = np.argsort(merged, kind="stable")
-            _SHA_RAW_CACHE_KEYS = merged[order]
-            _SHA_RAW_CACHE_STATES = np.concatenate(
-                [_SHA_RAW_CACHE_STATES, mstates]
-            )[order]
-    inv = np.searchsorted(uniq, keys)
-    states = ustates[inv]
+
+    states = _SHA_RAW_CACHE.states(uniq, digest)[np.searchsorted(uniq, keys)]
     return states, np.ascontiguousarray(states[:, 0])
 
 

@@ -184,26 +184,55 @@ def candidate_pairs(
     return pairs, capped
 
 
+def pair_endpoints(
+    pairs: DataFrame, side: DataFrame, id_col: str = "doc_id"
+) -> DataFrame:
+    """Attach every non-id column ``c`` of ``side`` to both ends of an
+    ``(id_l, id_r)`` pair frame as ``c_l`` and ``c_r``: one equi-join on the
+    id per endpoint.
+
+    No broadcast hint: ``pairs`` comes out of a shuffle stage, so AQE has its
+    true runtime size and converts a join to a broadcast exactly when it fits
+    under spark.sql.adaptive.autoBroadcastJoinThreshold.  When the pair set
+    is large (viral corpora at 100x scale) the joins stay shuffled hash joins
+    on the id key (preferSortMergeJoin=false in session.py) — no driver OOM
+    from force-broadcasting an unbounded pair set.
+    """
+    cols = [c for c in side.columns if c != id_col]
+    for sfx in ("_l", "_r"):
+        end = side.withColumnsRenamed({id_col: "id" + sfx, **{c: c + sfx for c in cols}})
+        pairs = pairs.join(end, "id" + sfx)
+    return pairs
+
+
 def estimate_pair_jaccard(
     pairs: DataFrame,
     sig_df: DataFrame,
     cfg: DedupConfig,
     id_col: str = "doc_id",
     sig_col: str = "sig",
+    content_col: str = "content",
 ) -> DataFrame:
     """Attach Ĵ = equal-slot fraction of the two signatures — native zip_with,
-    stays in codegen (S29, ``jaccard.rs:9-19``)."""
-    s = sig_df.select(F.col(id_col), F.col(sig_col))
-    # No broadcast hint: `pairs` comes out of a shuffle stage, so AQE has its
-    # true runtime size and converts to a broadcast join exactly when it fits
-    # under spark.sql.adaptive.autoBroadcastJoinThreshold.  When the candidate
-    # set is large (viral corpora at 100x scale) the join stays a shuffled
-    # hash join on the id key (preferSortMergeJoin=false in session.py) —
-    # no driver OOM from force-broadcasting an unbounded pair set.
-    out = (
-        pairs
-        .join(s.withColumnsRenamed({id_col: "id_l", sig_col: "sig_l"}), "id_l")
-        .join(s.withColumnsRenamed({id_col: "id_r", sig_col: "sig_r"}), "id_r")
+    stays in codegen (S29, ``jaccard.rs:9-19``).
+
+    The two endpoint joins (:func:`pair_endpoints`) also carry each end's
+    ``content`` and its sha256 (``content_l``/``_r``, ``_csha_l``/``_r``) for
+    :func:`verify_pairs`, which joins nothing.  Content therefore rides along
+    for every candidate pair, not only those at or above ``est_low_cut``.
+    """
+    # coalesce before sha2 (r6, ADVICE): sha2(NULL) is NULL, so a NULL/NULL
+    # pair would skip the equal-content shortcut.  The verify UDF applies
+    # fillna('') and scores empty/empty as 1.0, so hashing NULL as '' is
+    # value-identical.
+    side = sig_df.select(
+        F.col(id_col),
+        F.col(sig_col).alias("sig"),
+        F.col(content_col).alias("content"),
+        F.sha2(F.coalesce(F.col(content_col), F.lit("")), 256).alias("_csha"),
+    )
+    return (
+        pair_endpoints(pairs, side, id_col)
         .withColumn(
             "j_est",
             F.expr(
@@ -213,23 +242,17 @@ def estimate_pair_jaccard(
         )
         .drop("sig_l", "sig_r")
     )
-    return out
 
 
-def verify_pairs(
-    pairs_with_est: DataFrame,
-    docs: DataFrame,
-    cfg: DedupConfig,
-    id_col: str = "doc_id",
-    content_col: str = "content",
-) -> DataFrame:
+def verify_pairs(pairs_with_est: DataFrame, cfg: DedupConfig) -> DataFrame:
     """Exact-Jaccard verification of estimate survivors -> edges.
 
-    Joins content back only for pairs above ``est_low_cut`` (the cheap filter
-    runs first, so the expensive re-shingle UDF sees a tiny fraction).
-    One pair UDF (``make_pair_jaccard_udf``) scores the multiset Jaccard the
-    sketches estimate: weighted configs use shingle counts, set configs unit
-    counts (distinct-set Jaccard).
+    Takes :func:`estimate_pair_jaccard`'s output, whose endpoint joins
+    already carry both contents and their sha256; the cheap ``est_low_cut``
+    filter runs first, so the expensive re-shingle UDF sees a small
+    fraction of the candidates.  One pair UDF (``make_pair_jaccard_udf``)
+    scores the multiset Jaccard the sketches estimate: weighted configs use
+    shingle counts, set configs unit counts (distinct-set Jaccard).
 
     Byte-identical pairs take the MASKED equal-content shortcut: they feed
     the UDF empty strings and a native CASE emits the exact 1.0, so the
@@ -239,7 +262,6 @@ def verify_pairs(
     means equal bytes.
     """
     surv = pairs_with_est.filter(F.col("j_est") >= cfg.est_low_cut)
-    c = docs.select(F.col(id_col), F.col(content_col))
     # r6 perf (guide §4.4): the j_exact column feeds both the projection and
     # the >= threshold filter; the optimizer pushes the filter below the
     # projection and DUPLICATES the UDF (two ArrowEvalPython nodes — every
@@ -250,25 +272,9 @@ def verify_pairs(
     # identical bytes always verify to exactly 1.0 (equal multisets -> 1.0,
     # and the empty/empty convention is 1.0 too); the masking happens before
     # Arrow serialization, so equal pairs ship nothing.
-    # Pair joins: broadcast when survivors are small, shuffled hash join on
-    # id otherwise (see estimate_pair_jaccard).
-    # coalesce before sha2 (r6, ADVICE): sha2(NULL) is NULL, so a NULL/NULL
-    # pair would skip the equal-content shortcut.  The verify UDF applies
-    # fillna('') and scores empty/empty as 1.0, so hashing NULL as '' is
-    # value-identical.
-    cs = c.withColumn(
-        "_csha", F.sha2(F.coalesce(F.col(content_col), F.lit("")), 256)
-    )
     eq = F.col("_csha_l") == F.col("_csha_r")
     return (
-        surv
-        .join(cs.withColumnsRenamed(
-            {id_col: "id_l", content_col: "content_l", "_csha": "_csha_l"}
-        ), "id_l")
-        .join(cs.withColumnsRenamed(
-            {id_col: "id_r", content_col: "content_r", "_csha": "_csha_r"}
-        ), "id_r")
-        .withColumn(
+        surv.withColumn(
             "j_exact",
             F.when(eq, F.lit(1.0)).otherwise(
                 exact_j(
@@ -300,16 +306,16 @@ def dedup_edges(
     """
     if key_cols is not None:
         docs = with_doc_id(docs, key_cols, id_col)
-    # persist signatures: they feed banding AND both sides of the estimate
-    # join — without it the sketch UDF would execute three times.  (The staged
+    # persist signatures (with content): they feed banding AND both endpoint
+    # joins — without it the sketch UDF would execute three times.  (The staged
     # pipeline gets this for free by checkpointing the signatures table.)
     # Lifetime: released by the caller's cache_scope() (see operators.cache);
     # outside a scope the persist lives until clearCache() — caller-managed.
-    sigs = pin(with_signature(docs, cfg, content_col).select(id_col, "sig"))
+    sigs = pin(with_signature(docs, cfg, content_col).select(id_col, "sig", content_col))
     bands = band_explode(sigs, cfg, id_col)
     pairs, _ = candidate_pairs(bands, cfg, id_col, on_capped=on_capped)
-    est = estimate_pair_jaccard(pairs, sigs, cfg, id_col)
-    return verify_pairs(est, docs.select(id_col, content_col), cfg, id_col, content_col)
+    est = estimate_pair_jaccard(pairs, sigs, cfg, id_col, content_col=content_col)
+    return verify_pairs(est, cfg)
 
 
 def simhash_dup_pairs(
@@ -346,10 +352,8 @@ def simhash_dup_pairs(
         F.col(id_col), F.explode(F.expr(block_expr)).alias("bk")
     ).select(id_col, "bk.band_id", "bk.band_key")
     pairs, _ = candidate_pairs(bands, cfg, id_col, on_capped=on_capped)
-    s = fp.select(F.col(id_col), F.col("sh"))
     return (
-        pairs.join(s.withColumnsRenamed({id_col: "id_l", "sh": "sh_l"}), "id_l")
-        .join(s.withColumnsRenamed({id_col: "id_r", "sh": "sh_r"}), "id_r")
+        pair_endpoints(pairs, fp, id_col)
         .withColumn("hamming", F.expr("bit_count(sh_l ^ sh_r)").cast("bigint"))
         .where(F.col("hamming") <= max_hamming)
         .select("id_l", "id_r", "hamming")

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame
 
 from ..config import DedupConfig
 from .cache import pin
-from .dedup import candidate_pairs
+from .dedup import candidate_pairs, pair_endpoints
 
 
 def _multiset_jaccard_pairs(
@@ -66,8 +66,7 @@ def _multiset_jaccard_pairs(
         .agg(F.sum(F.least("c_l", "c_r")).alias("smin"))
     )
     return (
-        inter.join(sizes.withColumnsRenamed({id_col: "id_l", "n": "n_l"}), "id_l")
-        .join(sizes.withColumnsRenamed({id_col: "id_r", "n": "n_r"}), "id_r")
+        pair_endpoints(inter, sizes, id_col)
         .withColumn(
             "j",
             F.col("smin").cast("double")

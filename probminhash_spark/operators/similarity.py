@@ -24,7 +24,7 @@ from pyspark.sql.types import ArrayType, LongType
 
 from ..config import DedupConfig
 from ..kernels.rng import Xoshiro256pp
-from .dedup import candidate_pairs
+from .dedup import candidate_pairs, pair_endpoints
 
 U64 = np.uint64
 
@@ -294,13 +294,9 @@ def embedding_neardup_pairs(
     ).select(id_col, "bk.band_id", "bk.band_key")
     pairs, _ = candidate_pairs(bands, DedupConfig(), id_col, on_capped="fail")
     v = with_unit_norm(vectors, vec_col).select(F.col(id_col), "e", "nrm")
-    # no broadcast hint: AQE size-gates the pair join at runtime (broadcast
-    # when small, shuffled hash join when the candidate set is large)
     return (
-        pairs
-        .join(v.withColumnsRenamed({id_col: "id_l", "e": "e_l", "nrm": "n_l"}), "id_l")
-        .join(v.withColumnsRenamed({id_col: "id_r", "e": "e_r", "nrm": "n_r"}), "id_r")
-        .withColumn("cosine", _norm_dot_cols("e_l", "e_r") / (F.col("n_l") * F.col("n_r")))
+        pair_endpoints(pairs, v, id_col)
+        .withColumn("cosine", _norm_dot_cols("e_l", "e_r") / (F.col("nrm_l") * F.col("nrm_r")))
         .where(F.col("cosine") >= threshold)
         .select("id_l", "id_r", "cosine")
     )

@@ -101,6 +101,29 @@ def partial_group_sketches(
     return sketched.mapInPandas(fold_partition, schema)
 
 
+def _merge_unions(
+    cols: list[str], key: tuple, pdf: pd.DataFrame, params: SetSketchParams, **extra
+) -> pd.DataFrame:
+    """Phase 2 body shared by the group merge and the rollup: ONE row with
+    the slot-wise max of ``pdf``'s ``union_regs`` (``setsketcher.rs:428-446``),
+    its SetSketch cardinality and the summed ``n_docs``; ``extra`` adds
+    columns.  ``pdf`` holds one row per partial or child sketch, never the
+    group's members."""
+    union = _unpack_regs(pdf["union_regs"], params.m).max(axis=0)
+    card, _ = setsketch_cardinality(union.astype(np.float64), params)
+    return pd.DataFrame(
+        [
+            {
+                **dict(zip(cols, key)),
+                "n_docs": int(pdf["n_docs"].sum()),
+                **extra,
+                "est_distinct_shingles": float(card),
+                "union_regs": union.astype("<u2").tobytes(),
+            }
+        ]
+    )
+
+
 def group_distinct_shingles(
     docs: DataFrame,
     group_cols: list[str],
@@ -115,7 +138,6 @@ def group_distinct_shingles(
     further up a rollup hierarchy for free.
     """
     params = SetSketchParams(m=cfg.setsketch_m)
-    m = cfg.setsketch_m
     partials = partial_group_sketches(docs, group_cols, cfg, content_col)
     out_schema = (
         ", ".join(f"{c} string" for c in group_cols)
@@ -124,20 +146,8 @@ def group_distinct_shingles(
     gc = list(group_cols)
 
     def merge_partials(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        # phase 2 sees <= n_partitions partial rows per group, never the
-        # group's members
-        union = _unpack_regs(pdf["union_regs"], m).max(axis=0)
-        card, _ = setsketch_cardinality(union.astype(np.float64), params)
-        return pd.DataFrame(
-            [
-                {
-                    **{c: k for c, k in zip(gc, key)},
-                    "n_docs": int(pdf["n_docs"].sum()),
-                    "est_distinct_shingles": float(card),
-                    "union_regs": union.astype("<u2").tobytes(),
-                }
-            ]
-        )
+        # phase 2 sees <= n_partitions partial rows per group
+        return _merge_unions(gc, key, pdf, params)
 
     return partials.groupBy(*group_cols).applyInPandas(merge_partials, out_schema)
 
@@ -157,7 +167,6 @@ def rollup_group_sketches(
     previous rollup) whose group columns are a superset of ``parent_cols``.
     """
     params = SetSketchParams(m=cfg.setsketch_m)
-    m = cfg.setsketch_m
     out_schema = (
         ", ".join(f"{c} string" for c in parent_cols)
         + ", n_docs long, n_child_groups long, est_distinct_shingles double,"
@@ -166,19 +175,7 @@ def rollup_group_sketches(
     pc = list(parent_cols)
 
     def merge_children(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        union = _unpack_regs(pdf["union_regs"], m).max(axis=0)
-        card, _ = setsketch_cardinality(union.astype(np.float64), params)
-        return pd.DataFrame(
-            [
-                {
-                    **{c: k for c, k in zip(pc, key)},
-                    "n_docs": int(pdf["n_docs"].sum()),
-                    "n_child_groups": len(pdf),
-                    "est_distinct_shingles": float(card),
-                    "union_regs": union.astype("<u2").tobytes(),
-                }
-            ]
-        )
+        return _merge_unions(pc, key, pdf, params, n_child_groups=len(pdf))
 
     return group_sketches.groupBy(*pc).applyInPandas(merge_children, out_schema)
 

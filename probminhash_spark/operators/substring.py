@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame
 
 from ..config import DedupConfig
 from ..functions.sketch_udfs import make_fingerprint_udf
-from .dedup import candidate_pairs, ensure_parallelism
+from .dedup import candidate_pairs, ensure_parallelism, pair_endpoints
 
 
 def _gram_array(l: int, text_col: str = "content") -> str:
@@ -78,13 +78,8 @@ def substring_dup_pairs(
     grams = eligible.select(
         F.col(id_col), F.expr(_gram_array(min_len, content_col)).alias("grams")
     )
-    # AQE size-gates these joins (broadcast when the pair set is small,
-    # shuffled hash join otherwise) — same policy as estimate_pair_jaccard
     out = (
-        pairs.join(
-            grams.withColumnsRenamed({id_col: "id_l", "grams": "grams_l"}), "id_l"
-        )
-        .join(grams.withColumnsRenamed({id_col: "id_r", "grams": "grams_r"}), "id_r")
+        pair_endpoints(pairs, grams, id_col)
         .withColumn(
             "n_common_grams",
             F.size(F.array_intersect("grams_l", "grams_r")).cast("bigint"),

@@ -148,8 +148,7 @@ def run_pipeline(
     pairs = step("candidates", "candidate_pairs", build_candidates)
 
     def build_edges():
-        est = estimate_pair_jaccard(pairs, sigs, cfg)
-        return {"edges": verify_pairs(est, sigs.select("doc_id", "content"), cfg)}
+        return {"edges": verify_pairs(estimate_pair_jaccard(pairs, sigs, cfg), cfg)}
 
     edges = step("edges", "duplicate_edges", build_edges)
     clusters = step(

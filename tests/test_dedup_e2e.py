@@ -316,6 +316,18 @@ def test_pair_join_size_gated_not_forced_broadcast(spark, spark_files):
     assert ("ShuffledHashJoin" in gated_plan) or ("SortMergeJoin" in gated_plan)
 
 
+def test_edges_join_the_signature_frame_once_per_endpoint(spark, spark_files):
+    """The estimate's endpoint joins carry each end's signature, content and
+    content sha256 into verify, so the optimized edge plan holds ONE inner
+    join per endpoint: 2, where separate signature and content joins made 4."""
+    from probminhash_spark.operators.cache import cache_scope
+
+    with cache_scope():
+        edges = dedup_edges(spark_files, CFG)
+        plan = edges._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Join Inner") == 2, plan
+
+
 @pytest.mark.parametrize(
     "algo", ["superminhash2", "revoptdens", "probminhash2", "superminhash", "probminhash3a"]
 )

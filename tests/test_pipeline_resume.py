@@ -217,8 +217,10 @@ def test_mega_bucket_star_cap_and_cluster_recall(spark, tmp_path):
     from probminhash_spark.operators.components import assign_clusters
     from probminhash_spark.operators.dedup import estimate_pair_jaccard, verify_pairs
 
-    est = estimate_pair_jaccard(pairs, sigs, MEGA_CFG)
-    edges = verify_pairs(est, files.select("doc_id", "content"), MEGA_CFG)
+    est = estimate_pair_jaccard(
+        pairs, sigs.join(files.select("doc_id", "content"), "doc_id"), MEGA_CFG
+    )
+    edges = verify_pairs(est, MEGA_CFG)
     clustered = assign_clusters(files.select("doc_id"), edges)
     got = {r["doc_id"]: r["cluster_id"] for r in clustered.collect()}
     rows = files.select("repo", "path", "commit", "doc_id").collect()

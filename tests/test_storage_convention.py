@@ -1,6 +1,11 @@
-"""The storage rule as code (no Spark): every FS probe and JSON file goes
-through ``probminhash_spark/hfs.py``.  Local ``pathlib`` would misread
-Hadoop URIs (``file://``, ``hdfs://``, ``s3a://``) as relative paths."""
+"""Source conventions as code (no Spark).
+
+- Storage: every FS probe and JSON file goes through
+  ``probminhash_spark/hfs.py``.  Local ``pathlib`` would misread Hadoop URIs
+  (``file://``, ``hdfs://``, ``s3a://``) as relative paths.
+- Pair joins: operators fetch endpoint columns through
+  ``operators/dedup.py::pair_endpoints``, the one place that renames a side
+  table to ``_l``/``_r`` and holds the join policy."""
 
 import ast
 from pathlib import Path
@@ -42,3 +47,32 @@ def test_hadoop_fs_calls_only_in_hfs():
         and ("hadoop.fs" in p.read_text() or "getFileSystem" in p.read_text())
     ]
     assert not offenders, f"Hadoop FS calls outside hfs.py in {offenders}"
+
+
+def _enclosing_functions(path: Path, needle: str) -> list[str]:
+    """Name of the innermost function around each line holding ``needle``
+    (``<module>`` outside any function)."""
+    text = path.read_text()
+    funcs = [
+        n
+        for n in ast.walk(ast.parse(text, str(path)))
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+    ]
+    out = []
+    for no, line in enumerate(text.splitlines(), 1):
+        if needle in line:
+            around = [f for f in funcs if f.lineno <= no <= f.end_lineno]
+            out.append(max(around, key=lambda f: f.lineno).name if around else "<module>")
+    return out
+
+
+def test_endpoint_renames_only_in_pair_endpoints():
+    dedup = PACKAGE / "operators" / "dedup.py"
+    offenders = [
+        f"{p.relative_to(ROOT)}:{fn}"
+        for p in _sources(PACKAGE)
+        for fn in _enclosing_functions(p, "withColumnsRenamed(")
+        if (p, fn) != (dedup, "pair_endpoints")
+    ]
+    assert not offenders, f"hand-rolled _l/_r rename joins in {offenders}; use pair_endpoints"
+    assert _enclosing_functions(dedup, "withColumnsRenamed(") == ["pair_endpoints"]
