@@ -217,19 +217,12 @@ def estimate_pair_jaccard(
     stays in codegen (S29, ``jaccard.rs:9-19``).
 
     The two endpoint joins (:func:`pair_endpoints`) also carry each end's
-    ``content`` and its sha256 (``content_l``/``_r``, ``_csha_l``/``_r``) for
-    :func:`verify_pairs`, which joins nothing.  Content therefore rides along
-    for every candidate pair, not only those at or above ``est_low_cut``.
+    ``content`` (``content_l``/``_r``) for :func:`verify_pairs`, which joins
+    nothing.  Content therefore rides along for every candidate pair, not
+    only those at or above ``est_low_cut``.
     """
-    # coalesce before sha2 (r6, ADVICE): sha2(NULL) is NULL, so a NULL/NULL
-    # pair would skip the equal-content shortcut.  The verify UDF applies
-    # fillna('') and scores empty/empty as 1.0, so hashing NULL as '' is
-    # value-identical.
     side = sig_df.select(
-        F.col(id_col),
-        F.col(sig_col).alias("sig"),
-        F.col(content_col).alias("content"),
-        F.sha2(F.coalesce(F.col(content_col), F.lit("")), 256).alias("_csha"),
+        F.col(id_col), F.col(sig_col).alias("sig"), F.col(content_col).alias("content")
     )
     return (
         pair_endpoints(pairs, side, id_col)
@@ -248,18 +241,18 @@ def verify_pairs(pairs_with_est: DataFrame, cfg: DedupConfig) -> DataFrame:
     """Exact-Jaccard verification of estimate survivors -> edges.
 
     Takes :func:`estimate_pair_jaccard`'s output, whose endpoint joins
-    already carry both contents and their sha256; the cheap ``est_low_cut``
-    filter runs first, so the expensive re-shingle UDF sees a small
-    fraction of the candidates.  One pair UDF (``make_pair_jaccard_udf``)
+    already carry both contents; the cheap ``est_low_cut`` filter runs
+    first, so the expensive re-shingle UDF sees a small fraction of the
+    candidates.  One pair UDF (``make_pair_jaccard_udf``)
     scores the multiset Jaccard the sketches estimate: weighted configs use
     shingle counts, set configs unit counts (distinct-set Jaccard).
 
-    Byte-identical pairs take the MASKED equal-content shortcut: they feed
-    the UDF empty strings and a native CASE emits the exact 1.0, so the
-    dominant dup-dense cost (re-shingling equal bytes per pair) disappears
-    with zero plan-shape change.  Value-identical to plain per-pair verify:
-    the UDF is a pure function of the two byte strings and equal sha256
-    means equal bytes.
+    Byte-identical pairs take the MASKED equal-content shortcut: native
+    string equality (NULL as '', which the UDF scores like '') finds them,
+    they feed the UDF empty strings and a native CASE emits the exact 1.0,
+    so the dominant dup-dense cost (re-shingling equal bytes per pair)
+    disappears with zero plan-shape change.  Value-identical to plain
+    per-pair verify: the UDF is a pure function of the two strings.
     """
     surv = pairs_with_est.filter(F.col("j_est") >= cfg.est_low_cut)
     # r6 perf (guide §4.4): the j_exact column feeds both the projection and
@@ -272,7 +265,7 @@ def verify_pairs(pairs_with_est: DataFrame, cfg: DedupConfig) -> DataFrame:
     # identical bytes always verify to exactly 1.0 (equal multisets -> 1.0,
     # and the empty/empty convention is 1.0 too); the masking happens before
     # Arrow serialization, so equal pairs ship nothing.
-    eq = F.col("_csha_l") == F.col("_csha_r")
+    eq = F.coalesce("content_l", F.lit("")) == F.coalesce("content_r", F.lit(""))
     return (
         surv.withColumn(
             "j_exact",
@@ -283,7 +276,7 @@ def verify_pairs(pairs_with_est: DataFrame, cfg: DedupConfig) -> DataFrame:
                 )
             ),
         )
-        .drop("content_l", "content_r", "_csha_l", "_csha_r")
+        .drop("content_l", "content_r")
         .filter(F.col("j_exact") >= cfg.threshold)
     )
 

@@ -16,8 +16,10 @@ and its manifest is complete under the config fingerprint.  The first stage
 that cannot load deletes its own and every later manifest, then it and all
 later stages recompute, so a crash mid-rebuild never resumes a later stage
 over stale input.  Safe because every stage is a pure function of (input
-table, config), SURVEY.md §1.2.  ``content_sha256`` is carried into the
-signatures table and re-checked on every run.
+table, config), SURVEY.md §1.2.  The input is hashed once, at ingest
+(``content_sha256``); the signatures manifest keeps an order-free digest of
+the input, which a resume recomputes over the input (one job): a changed
+input, or a manifest without a digest, rebuilds every stage.
 
 A fresh stage costs one Spark job per table it writes: the manifest's row
 counts are observed during the write (``DataFrame.observe``), never a
@@ -52,6 +54,9 @@ from ..operators.dedup import (
 KEY_COLS = ["repo", "path", "commit"]
 STAGES = ("signatures", "bands", "candidates", "edges", "clusters")
 MANIFEST = "_manifest.json"
+# what a table's write observes: its row count and, for the signatures table,
+# the order-free digest of the input rows it covers (0 on an empty input)
+OBSERVED = ("count(1) AS n", "coalesce(bit_xor(xxhash64(doc_id, content_sha256)), 0) AS digest")
 
 
 def _path(root: str, table: str, leaf: str) -> str:
@@ -80,18 +85,22 @@ def run_pipeline(
     def read(table: str) -> DataFrame:
         return spark.read.parquet(_path(root, table, "data"))
 
-    def step(stage: str, counter: str, build, extra: dict | None = None):
+    def step(stage: str, counter: str, build, source: DataFrame | None = None):
         """Load ``stage`` if every earlier stage resumed and its manifest
-        matches the fingerprint.  Otherwise delete its manifest and every
-        later one, write the tables ``build()`` returns (``{name: frame}``,
-        the stage's own first), each in one job whose row count is observed
-        during the write, and write the manifest.  The stage's row count
-        lands in ``counters[counter]``, a side table's under its own name.
-        Returns the stage table as checkpointed."""
+        matches the fingerprint (and the digest of ``source``, the input).
+        Otherwise delete its manifest and every later one, write the tables
+        ``build()`` returns (``{name: frame}``, the stage's own first), each
+        in one job whose ``OBSERVED`` metrics land in the manifest, and write
+        the manifest.  The stage's row count lands in ``counters[counter]``,
+        a side table's under its own name.  Returns the stage table as
+        checkpointed."""
         i = STAGES.index(stage)
         chained = len(resumed) == i  # every earlier stage resumed
         m = read_manifest(spark, root, stage) if chained else None
-        if m and m.get("status") == "complete" and m.get("fingerprint") == fp:
+        valid = m and m.get("status") == "complete" and m.get("fingerprint") == fp
+        if valid and source is not None:  # built from this very input
+            valid = m.get("input") == source.selectExpr(*OBSERVED).first().asDict()
+        if valid:
             resumed.append(stage)
             out, rows = read(stage), m["counters"]
         else:
@@ -101,7 +110,8 @@ def run_pipeline(
             tables = build()
             seen = {name: Observation(name) for name in tables}
             for name, df in tables.items():
-                observed = df.observe(seen[name], F.count(F.lit(1)).alias("n"))
+                metrics = OBSERVED if source is not None and name == stage else OBSERVED[:1]
+                observed = df.observe(seen[name], *map(F.expr, metrics))
                 observed.write.mode("overwrite").parquet(_path(root, name, "data"))
             # file sources read every column as nullable, so the built
             # frame's schema is the inferred one, without an inference job
@@ -118,25 +128,20 @@ def run_pipeline(
                 "fingerprint": fp,
                 "counters": rows,
                 "completed_at_unix": time.time(),
-                **(extra or {}),
             }
+            if source is not None:
+                manifest.update(config=cfg.to_json(), input=seen[stage].get)
             hfs.write_json(spark, _path(root, stage, MANIFEST), manifest)
         counters[counter] = rows["rows"]
         counters.update((k, v) for k, v in rows.items() if k != "rows")
         return out
 
+    # the pass's one sha256, digested over the input again on resume
+    staged = with_doc_id(files.select(*KEY_COLS, "lang", "content"), KEY_COLS)
+    staged = staged.withColumn("content_sha256", F.sha2("content", 256))
     # the builders call operators through this module's globals at call
     # time, so wrappers installed on those names take effect
-    def build_signatures():
-        staged = with_doc_id(files.select(*KEY_COLS, "lang", "content"), KEY_COLS)
-        staged = staged.withColumn("content_sha256", F.sha2("content", 256))
-        return {"signatures": with_signature(staged, cfg)}
-
-    sigs = step("signatures", "files", build_signatures, {"config": cfg.to_json()})
-    # per-row integrity: sha256(content) must equal the checkpointed value
-    bad = sigs.where(F.sha2("content", 256) != F.col("content_sha256")).count()
-    if bad:
-        raise RuntimeError(f"sha256 invariant violated for {bad} rows")
+    sigs = step("signatures", "files", lambda: {"signatures": with_signature(staged, cfg)}, staged)
     counters["sha256_checked"] = counters["files"]
 
     bands = step("bands", "band_rows", lambda: {"bands": band_explode(sigs, cfg)})

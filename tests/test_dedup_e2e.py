@@ -75,17 +75,21 @@ def test_cluster_assignment_matches_oracle(spark, tiny_corpus, spark_files):
     assert partition(got) == partition(oracle)
 
 
-def test_sha256_invariant_through_signature_stage(spark, spark_files):
-    """Per-row content sha256 must survive every stage table (BASELINE.json)."""
-    from probminhash_spark.operators.dedup import with_signature
+def test_sha256_invariant_through_signature_stage(spark, spark_files, tmp_path):
+    """SURVEY T3 / BASELINE.json: every row of the written signatures table
+    carries the sha256 of its *input* content, and the table holds every
+    input row once."""
+    from probminhash_spark.pipeline.dedup_pipeline import run_pipeline
 
-    staged = with_signature(
-        spark_files.withColumn("content_sha256", F.sha2("content", 256)), CFG
+    root = str(tmp_path / "ck")
+    got = run_pipeline(spark, spark_files.drop("doc_id"), CFG, root)
+    sigs = spark.read.parquet(f"{root}/signatures/data")
+    joined = sigs.select("doc_id", "content_sha256").join(
+        spark_files.select("doc_id", F.sha2("content", 256).alias("want")), "doc_id"
     )
-    bad = staged.where(
-        F.sha2("content", 256) != F.col("content_sha256")
-    ).count()
-    assert bad == 0
+    n = spark_files.count()
+    assert got["sha256_checked"] == sigs.count() == joined.count() == n
+    assert joined.where(F.col("content_sha256") != F.col("want")).count() == 0
 
 
 # gate values that force each side of connected_components' dispatch
@@ -317,9 +321,9 @@ def test_pair_join_size_gated_not_forced_broadcast(spark, spark_files):
 
 
 def test_edges_join_the_signature_frame_once_per_endpoint(spark, spark_files):
-    """The estimate's endpoint joins carry each end's signature, content and
-    content sha256 into verify, so the optimized edge plan holds ONE inner
-    join per endpoint: 2, where separate signature and content joins made 4."""
+    """The estimate's endpoint joins carry each end's signature and content
+    into verify, so the optimized edge plan holds ONE inner join per
+    endpoint: 2, where separate signature and content joins made 4."""
     from probminhash_spark.operators.cache import cache_scope
 
     with cache_scope():
@@ -627,7 +631,7 @@ def test_weighted_jaccard_udf_matches_bruteforce(spark):
 
 def test_null_content_pair_verify(spark):
     """r6 (ADVICE): NULL content must take the equal-content shortcut —
-    sha2(NULL) is NULL, so without coalesce('') a NULL/NULL pair would miss
+    NULL = NULL is NULL, so without coalesce('') a NULL/NULL pair would miss
     it (the verify UDF applies fillna('') and scores empty/empty as 1.0).  Two NULL
     docs and an ''-doc must be byte-identical dups of each other."""
     import dataclasses

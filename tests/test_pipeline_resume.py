@@ -93,6 +93,30 @@ def test_rebuilt_stage_invalidates_later_stages(spark, tiny_corpus, tmp_path):
     }
 
 
+def test_changed_input_rebuilds_every_stage(spark, tiny_corpus, tmp_path):
+    """The signatures manifest holds a digest of the input it was built from.
+    A rerun over the same root with every file's content replaced rebuilds
+    all five stages and reports what a fresh run on the new input reports;
+    an unchanged rerun resumes all five; a manifest without the digest (an
+    older checkpoint) rebuilds."""
+    from probminhash_spark import hfs
+
+    changed_pdf = tiny_corpus.files.assign(content=tiny_corpus.files.content.iloc[0])
+    files, changed = (spark.createDataFrame(p) for p in (tiny_corpus.files, changed_pdf))
+    root = str(tmp_path / "ckin")
+    run_pipeline(spark, files, CFG, root)
+    rerun = run_pipeline(spark, changed, CFG, root)
+    fresh = run_pipeline(spark, changed, CFG, str(tmp_path / "ckfresh"))
+    assert rerun["resumed_stages"] == []
+    assert rerun == fresh
+    assert fresh["duplicate_groups"] == 1
+    assert run_pipeline(spark, changed, CFG, root)["resumed_stages"] == list(STAGES)
+    m = read_manifest(spark, root, "signatures")
+    del m["input"]
+    hfs.write_json(spark, f"{root}/signatures/_manifest.json", m)
+    assert run_pipeline(spark, changed, CFG, root)["resumed_stages"] == []
+
+
 def test_config_change_invalidates_checkpoints(spark, tiny_corpus, tmp_path):
     files = spark.createDataFrame(tiny_corpus.files)
     root = str(tmp_path / "ckpt3")
@@ -172,24 +196,40 @@ def test_fresh_counters_equal_table_recounts(spark, tiny_corpus, tmp_path, corpu
         assert got["duplicate_groups"] == 0
 
 
-# Spark jobs of one fresh pass over tiny_corpus, AQE's shuffle-map jobs
-# included.  Measured at 20 with one observed write per table; counting each
-# table and inferring its schema after the write took the pass to 38.
-FRESH_PASS_JOBS = 20
+# Spark jobs of one pass over tiny_corpus, AQE's shuffle-map jobs included.
+# A fresh pass measured 17 once the input digest was observed during the
+# signatures write (19 with a separate sha256 self-check job; 38 when each
+# table was recounted and its schema inferred after the write).  A fully
+# resumed pass measured 10, as with the self-check before it: 2 for the
+# input digest, 5 parquet schema inferences (one per table read) and 3 for
+# the duplicate-group count.
+FRESH_PASS_JOBS = 17
+RESUMED_PASS_JOBS = 10
+
+
+def _pass_jobs(spark, files, root: str, group: str) -> int:
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)  # AQE's jobs inherit it
+    try:
+        run_pipeline(spark, files, CFG, root)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_fresh_pass_job_budget(spark, tiny_corpus, tmp_path):
     files = spark.createDataFrame(tiny_corpus.files)
-    sc = spark.sparkContext
-    group = "test-fresh-pass-job-budget"
-    prev = sc.getLocalProperty("spark.jobGroup.id")
-    sc.setLocalProperty("spark.jobGroup.id", group)  # AQE's jobs inherit it
-    try:
-        run_pipeline(spark, files, CFG, str(tmp_path / "ckjobs"))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", prev)
-    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    jobs = _pass_jobs(spark, files, str(tmp_path / "ckjobs"), "test-fresh-pass-jobs")
     assert 0 < jobs <= FRESH_PASS_JOBS + 2, jobs
+
+
+def test_resumed_pass_job_budget(spark, tiny_corpus, tmp_path):
+    files = spark.createDataFrame(tiny_corpus.files)
+    root = str(tmp_path / "ckresume")
+    run_pipeline(spark, files, CFG, root)
+    jobs = _pass_jobs(spark, files, root, "test-resumed-pass-jobs")
+    assert 0 < jobs <= RESUMED_PASS_JOBS + 2, jobs
 
 
 def test_mega_bucket_star_cap_and_cluster_recall(spark, tmp_path):

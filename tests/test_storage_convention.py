@@ -5,7 +5,10 @@
   (``file://``, ``hdfs://``, ``s3a://``) as relative paths.
 - Pair joins: operators fetch endpoint columns through
   ``operators/dedup.py::pair_endpoints``, the one place that renames a side
-  table to ``_l``/``_r`` and holds the join policy."""
+  table to ``_l``/``_r`` and holds the join policy.
+- Content hashing: the batch pipeline computes sha256 once per document, at
+  ingest; the only other ``sha2(`` is the state-store engine's first-seen
+  key."""
 
 import ast
 from pathlib import Path
@@ -76,3 +79,16 @@ def test_endpoint_renames_only_in_pair_endpoints():
     ]
     assert not offenders, f"hand-rolled _l/_r rename joins in {offenders}; use pair_endpoints"
     assert _enclosing_functions(dedup, "withColumnsRenamed(") == ["pair_endpoints"]
+
+
+def test_sha2_only_at_ingest_and_first_seen_key():
+    allowed = {
+        PACKAGE / "pipeline" / "dedup_pipeline.py",
+        PACKAGE / "streaming" / "state_dedup.py",
+    }
+    offenders = [
+        str(p.relative_to(ROOT))
+        for p in _sources(PACKAGE)
+        if p not in allowed and "sha2(" in p.read_text()
+    ]
+    assert not offenders, f"sha2( in {offenders}; reuse the ingest content_sha256"
